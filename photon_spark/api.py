@@ -52,25 +52,8 @@ class PhotonAPI:
         (doc/schemas.md's caused-by triple) — and anything OUTSIDE the
         envelope (a typo like ``event_typ``) is rejected loudly instead of
         being silently dropped."""
-        from photon_spark.events import (_CLIENT_FIELDS, EVENT_SCHEMA,
-                                         PROVENANCE_TYPE)
-        from pyspark.sql import types as T
-
-        row = {"stream_name": stream_name, "payload": payload, **envelope}
-        unknown = set(row) - set(_CLIENT_FIELDS)
-        if unknown:
-            raise ValueError(f"unknown event envelope field(s): "
-                             f"{sorted(unknown)}; "
-                             f"envelope is {_CLIENT_FIELDS}")
-        prov = row.get("provenance")
-        if isinstance(prov, dict):
-            row["provenance"] = tuple(
-                prov.get(f.name) for f in PROVENANCE_TYPE.fields)
-        schema = T.StructType(
-            [f for f in EVENT_SCHEMA.fields if f.name in _CLIENT_FIELDS])
-        df = self.store.spark.createDataFrame(
-            [tuple(row.get(c) for c in _CLIENT_FIELDS)], schema)
-        return self.store.ingest(df)
+        return self.store.ingest_rows(
+            [{"stream_name": stream_name, "payload": payload, **envelope}])
 
     def get_event(self, stream_name: str, order_id: int):
         """E5 GET /event/:stream/:order-id (R4 point lookup)."""

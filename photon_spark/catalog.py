@@ -86,11 +86,10 @@ class Catalog:
         self.sync()
 
     def _append_config(self, event_type: str, payload: dict) -> None:
-        df = self.store.spark.createDataFrame(
-            [(CONFIG_STREAM, event_type, "photon_spark", json.dumps(payload))],
-            "stream_name string, event_type string, service_id string, "
-            "payload string")
-        self.store.ingest(df)
+        self.store.ingest_rows([{"stream_name": CONFIG_STREAM,
+                                 "event_type": event_type,
+                                 "service_id": "photon_spark",
+                                 "payload": json.dumps(payload)}])
 
     # ----------------------------------------------------------------- sync
     def sync(self) -> int:

@@ -102,6 +102,11 @@ def _writer_start_slot(base_order_id: int, now_ms: int,
     return max(after_base, now_ms * width), lo, width
 
 
+def _slot_order_id(slot: int, lo: int, width: int) -> int:
+    """order_id of writer slot ``slot`` (see :func:`_writer_start_slot`)."""
+    return (slot // width) * 1000 + lo + slot % width
+
+
 def stamp_events(df: DataFrame, base_order_id: int = 0,
                  partition_offsets: dict[int, int] | None = None,
                  now_ms: int | None = None, writer_id: int = 0,
@@ -471,8 +476,59 @@ class EventStore:
             # mark advances without a rescan.
             start, lo, width = _writer_start_slot(
                 base, now_ms, self.writer_id, self.n_writers)
-            last = start + n - 1
-            self._max_oid = (last // width) * 1000 + lo + last % width
+            self._max_oid = _slot_order_id(start + n - 1, lo, width)
+        self.ingested += n
+        return n
+
+    def ingest_rows(self, rows: list[dict]) -> int:
+        """S1 for client events already on the driver (one ``post_event``,
+        one ``__config__`` DDL event): validate the envelope, stamp
+        ``event_time``/``order_id`` on the driver and append in ONE job —
+        no counting pass, no shuffle. Bulk DataFrames go through
+        :meth:`ingest`; both stamp the same slots for the same base."""
+        unknown = set().union(*rows) - set(_CLIENT_FIELDS)
+        if unknown:
+            raise ValueError(f"unknown event envelope field(s): "
+                             f"{sorted(unknown)}; "
+                             f"envelope is {_CLIENT_FIELDS}")
+        if any(r.get("stream_name") is None for r in rows):
+            raise ValueError("event must carry stream_name")
+        n = len(rows)
+        if n == 0:
+            return 0
+        if self.n_writers > 1:
+            self._mark_multi_writer()
+        base = self.max_order_id()
+        now_ms = int(time.time() * 1000)
+        start, lo, width = _writer_start_slot(base, now_ms, self.writer_id,
+                                              self.n_writers)
+        prov_fields = [f.name for f in PROVENANCE_TYPE.fields]
+        stamped = []
+        for slot, row in enumerate(rows, start):
+            rec = {c: row.get(c) for c in _CLIENT_FIELDS}
+            prov = rec["provenance"]
+            if isinstance(prov, dict):
+                rec["provenance"] = {f: prov.get(f) for f in prov_fields}
+            elif prov is not None:
+                rec["provenance"] = dict(zip(prov_fields, prov))
+            rec["order_id"] = _slot_order_id(slot, lo, width)
+            stamped.append(rec)
+        schema = T.StructType(
+            [f for f in EVENT_SCHEMA.fields if f.name in _CLIENT_FIELDS]
+            + [T.StructField("order_id", T.LongType())])
+        # a pandas frame becomes a LocalRelation through Arrow; a list of
+        # rows would become a parallelized RDD that needs a Python worker
+        import pandas as pd
+        df = (self.spark.createDataFrame(
+                  pd.DataFrame(stamped, columns=schema.fieldNames()), schema)
+              .withColumn("event_time", F.timestamp_millis(F.lit(now_ms))))
+        (self._write_opts(
+            self._encode(df)
+            .sortWithinPartitions("stream_name", "order_id")
+            .write.mode("append")
+            .partitionBy("stream_name"))
+         .save(self._data_dir()))
+        self._max_oid = _slot_order_id(start + n - 1, lo, width)
         self.ingested += n
         return n
 

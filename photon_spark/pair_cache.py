@@ -53,6 +53,8 @@ def _corpus_stamp(path: str) -> tuple:
 
 @atexit.register
 def _cleanup() -> None:
+    if not _PAIR_TABLES:
+        return
     from photon_spark.relations import IMMUTABLE_DIRS
     for path in _PAIR_TABLES.values():
         # de-register BEFORE the delete (realpath of a removed dir may

@@ -20,14 +20,17 @@ Scale design — three reducer tiers (SURVEY.md §4 custom-work #1):
    Catalyst aggregates: fully parallel, map-side partial aggregation, no
    Python in the hot path. This is the 100 TB path and covers every reducer
    photon's own tests exercise (count-folds, sum-folds).
-2. ``AssociativeReducer`` — user fold + user merge: per-partition folds run
+2. ``AssociativeReducer`` — user fold + user merge. A delta of at most one
+   Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) is
+   collected in one job and folded on the driver; a larger one folds
    distributed over range-partitioned order_id spans, partials merged in
-   order on the driver. O(partitions) driver work.
+   order on the driver. Driver memory is one Arrow batch or O(partitions).
 3. ``PyReducer`` — arbitrary non-commutative ``f(state, event) → state``: a
    single total order fundamentally serializes (photon serializes too —
    parallel *across* projections, serial per projection,
-   streams.clj:410-420). We stream Arrow batches of the ordered scan through
-   the driver (constant memory), never ``collect()``.
+   streams.clj:410-420). The (column-pruned) delta is collected through
+   Arrow in one job and sorted and folded on the driver, so driver memory
+   grows with the delta: advance often, or use tier 1/2 for bulk replays.
 """
 
 from __future__ import annotations
@@ -100,7 +103,7 @@ class PyReducer:
     fn: Callable[[Any, dict], Any]
     source: str | None = None
     #: optional column-pruning hint: the event-dict keys the fold reads.
-    #: When set, the pack path ships only these (+ order_id) to the driver —
+    #: When set, the fold collects only these (+ order_id) to the driver —
     #: map/timestamp columns are the expensive Arrow→Python conversions.
     columns: tuple[str, ...] | None = None
 
@@ -151,6 +154,19 @@ class Projection:
         if self.processed:
             self.avg_global_time = ((time.time() - self.init_time) * 1000.0
                                     / self.processed)
+
+    def record_fold(self, n: int, fold_ms: float, state: Any) -> None:
+        """A2 fold-step metrics for ``n`` events folded in ``fold_ms``:
+        incremental mean ms/event (streams.clj:99-106 next-avg, all n
+        events share the batch mean), the pickled state size whenever
+        the count crosses a ``_MEASURE_RATE`` tick, and ``processed``."""
+        if not n:
+            return
+        self.avg_time += ((fold_ms / n) - self.avg_time) * n \
+            / (self.processed + n)
+        if (self.processed % _MEASURE_RATE) + n >= _MEASURE_RATE:
+            self.mem_used = len(pickle.dumps(state))
+        self.processed += n
 
     def descriptor(self) -> dict:
         """API view (F4 strips heavy fields — api.clj:38-49)."""
@@ -277,7 +293,9 @@ class ProjectionEngine:
                     .alias("v")]
             if reducer.kind == "avg":
                 aggs.append(F.count(F.expr(reducer.expr)).alias("w"))
+            t0 = time.perf_counter()
             bounds = df.agg(*aggs).first()
+            fold_ms = (time.perf_counter() - t0) * 1000.0
             if bounds["n"]:
                 prev = proj.current_value
                 if reducer.kind == "avg":
@@ -295,7 +313,7 @@ class ProjectionEngine:
                     proj.current_value = _combine_native(
                         reducer.kind, prev, bounds["v"],
                         proj.processed, bounds["n"])
-                proj.processed += bounds["n"]
+                proj.record_fold(bounds["n"], fold_ms, proj.current_value)
                 proj.last_event = bounds["mx"]
                 proj.touch_global_time()
             if emit_states:
@@ -317,17 +335,18 @@ class ProjectionEngine:
 
         return self._fold_serial(proj, df, emit_states=emit_states)
 
-    # -- tier 3: arbitrary ordered fold, driver-streamed ------------------
+    # -- tier 3: arbitrary ordered fold on the driver --------------------
     def _fold_serial(self, proj: Projection, df: DataFrame,
                      emit_states: bool = False) -> Projection:
-        """Ordered fold with executor-side record packing.
+        """Ordered fold of the whole delta on the driver.
 
-        Per-row Python deserialization is the old bottleneck (~85k rows/s
-        through ``toLocalIterator``). Instead: range-partition on order_id,
-        convert each Arrow batch to plain dicts IN PARALLEL on executors,
-        ship them to the driver as one pickled blob per batch, and stream
-        blobs in order through ``toLocalIterator`` (constant driver memory —
-        one blob at a time). The driver loop then runs only the user fn.
+        One job collects the (column-pruned) delta through Arrow; the
+        driver sorts it by order_id (plan order when the frame has no
+        order_id) and folds it in Arrow-batch-sized chunks, so the
+        per-chunk dict conversion stays bounded. The collected delta
+        itself is held in driver memory — the same contract a serial
+        fold has under any plan, since a single total order ends in one
+        place.
         """
         reducer: PyReducer = proj.reducer  # type: ignore[assignment]
         if reducer.columns is not None:
@@ -335,10 +354,15 @@ class ProjectionEngine:
                 [*reducer.columns,
                  *(["order_id"] if "order_id" in df.columns else [])]))
             df = df.select(*keep)
+        pdf = df.toPandas()
+        if "order_id" in pdf.columns:
+            pdf = pdf.sort_values("order_id", kind="stable",
+                                  ignore_index=True)
+        chunk = _arrow_batch_rows(df) or max(len(pdf), 1)
         emitted = [] if emit_states else None
         state = proj.current_value
-        for brow in _pack_ordered(df).toLocalIterator(prefetchPartitions=True):
-            recs = pickle.loads(brow["blob"])
+        for start in range(0, len(pdf), chunk):
+            recs = pdf.iloc[start:start + chunk].to_dict("records")
             t0 = time.perf_counter()
             for i, ev in enumerate(recs):
                 try:
@@ -360,107 +384,111 @@ class ProjectionEngine:
                     return proj
                 if emitted is not None:
                     emitted.append(state)
-            n = len(recs)
-            if n:
-                dt_ms = (time.perf_counter() - t0) * 1000.0
-                # incremental mean ms/event (streams.clj:99-106 next-avg),
-                # batch-amortized: all n events share this batch's mean.
-                proj.avg_time += ((dt_ms / n) - proj.avg_time) * n \
-                    / (proj.processed + n)
-                if (proj.processed % _MEASURE_RATE) + n >= _MEASURE_RATE:
-                    proj.mem_used = len(pickle.dumps(state))
-                proj.processed += n
-                proj.last_event = recs[-1].get("order_id") or proj.last_event
+            proj.record_fold(len(recs), (time.perf_counter() - t0) * 1000.0,
+                             state)
+            proj.last_event = recs[-1].get("order_id") or proj.last_event
         proj.current_value = state
         proj.touch_global_time()
         if emitted is not None:
             proj.emitted = emitted  # type: ignore[attr-defined]
         return proj
 
-    # -- tier 2: distributed partial folds + ordered merge ----------------
+    # -- tier 2: partial folds + ordered merge ----------------------------
     def _fold_associative(self, proj: Projection, df: DataFrame) -> Projection:
+        """Fold the delta into partials and merge them, in order_id order,
+        into the current value. A delta of at most one Arrow batch is
+        collected (``limit(cap + 1)`` bounds driver memory when it is
+        larger) and folded on the driver as a single partial; a larger
+        one folds distributed, one partial per range partition, and also
+        pays for the discarded collect."""
         reducer: AssociativeReducer = proj.reducer  # type: ignore[assignment]
-        fold, zero = reducer.fold, reducer.zero
-        cols = [c for c in df.columns]
-
-        def fold_partition(iterator):
-            import pandas as pd
-            state, lo, n, mx = zero, None, 0, 0
-            for pdf in iterator:
-                for rec in pdf.to_dict("records"):
-                    oid = rec.get("order_id", 0)
-                    if lo is None:
-                        lo = oid
-                    mx = oid
-                    state = fold(state, rec)
-                    n += 1
-            if n:
-                yield pd.DataFrame({"lo": [lo], "mx": [mx], "n": [n],
-                                    "blob": [pickle.dumps(state)]})
-
-        # Range-partition so each partition is a contiguous, sorted order_id
-        # span → partials merge left-to-right correctly. No order_id (the
-        # fold_dataframe ad-hoc contract): preserve the plan's own order in
-        # one partition, same fallback as _pack_ordered.
-        if "order_id" in df.columns:
-            df = (df.repartitionByRange("order_id")
-                    .sortWithinPartitions("order_id"))
-        else:
-            df = df.coalesce(1)
-        parts = (df.mapInPandas(fold_partition,
-                                schema="lo long, mx long, n long, blob binary")
-                   .collect())
-        parts.sort(key=lambda r: r["lo"])
+        cap = _arrow_batch_rows(df)
+        parts = None
+        if cap:
+            pdf = df.limit(cap + 1).toPandas()
+            if len(pdf) <= cap:
+                parts = _fold_partials(reducer, pdf)
+        if parts is None:
+            parts = _fold_partials_distributed(reducer, df)
         state = (proj.current_value if proj.current_value is not None
-                 else zero)
+                 else reducer.zero)
         for p in parts:
-            state = reducer.merge(state, pickle.loads(p["blob"]))
-            proj.processed += p["n"]
-            proj.last_event = max(proj.last_event, p["mx"])
+            state = reducer.merge(state, p["state"])
+        proj.record_fold(sum(p["n"] for p in parts),
+                         sum(p["ms"] for p in parts), state)
+        proj.last_event = max([proj.last_event, *(p["mx"] for p in parts)])
         proj.current_value = state
         proj.touch_global_time()
         return proj
 
 
-def _pack_ordered(df: DataFrame) -> DataFrame:
-    """→ DataFrame[lo long, blob binary]: the input rows as pickled lists of
-    plain-Python dicts, one blob per Arrow batch, ordered by first order_id.
+def _arrow_batch_rows(df: DataFrame) -> int:
+    """Rows per Arrow batch of ``df``'s session; 0 when unlimited."""
+    cap = int(df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    return max(cap, 0)
 
-    Range-partitioning on order_id gives disjoint contiguous spans in
-    ascending partition order, so sorting the (tiny) blob rows by
-    (partition_index, chunk_index) reconstructs the exact total order.
-    numpy scalars are converted executor-side so user reducers see plain
-    ints/floats.
-    """
+
+def _ordered_fold(fold, zero):
+    """→ ``run(batches)``: fold pandas ``batches`` (already in order_id
+    order) from ``zero`` → (state, first order_id, last order_id, events,
+    fold ms); order ids are 0 without an order_id column. The driver path
+    and the executors' partition fold both run it, so the fold sees the
+    same event dicts on either path. Nested, so cloudpickle ships it by
+    value and executors need not import this package."""
+    def run(batches):
+        state, lo, mx, n = zero, None, 0, 0
+        t0 = time.perf_counter()
+        for pdf in batches:
+            for rec in pdf.to_dict("records"):
+                oid = rec.get("order_id", 0)
+                if lo is None:
+                    lo = oid
+                mx = oid
+                state = fold(state, rec)
+                n += 1
+        return state, lo, mx, n, (time.perf_counter() - t0) * 1000.0
+    return run
+
+
+def _fold_partials(reducer: AssociativeReducer, pdf) -> list[dict]:
+    """One partial from ``zero`` over the collected delta ``pdf``, sorted
+    by order_id on the driver (plan order without one)."""
+    if "order_id" in pdf.columns:
+        pdf = pdf.sort_values("order_id", kind="stable", ignore_index=True)
+    state, _, mx, n, ms = _ordered_fold(reducer.fold, reducer.zero)([pdf])
+    return [{"n": n, "mx": mx, "ms": ms, "state": state}] if n else []
+
+
+def _fold_partials_distributed(reducer: AssociativeReducer,
+                               df: DataFrame) -> list[dict]:
+    """One partial per range partition of ``df``, folded on the executors
+    and returned in order_id order."""
+    run = _ordered_fold(reducer.fold, reducer.zero)
+
+    def fold_partition(batches):
+        import pandas as pd
+        state, lo, mx, n, ms = run(batches)
+        if n:
+            yield pd.DataFrame({"lo": [lo], "mx": [mx], "n": [n],
+                                "ms": [ms], "blob": [pickle.dumps(state)]})
+
+    # Range-partition so each partition is a contiguous, sorted order_id
+    # span → partials merge left-to-right correctly. No order_id (the
+    # fold_dataframe ad-hoc contract): preserve the plan's own order in
+    # one partition.
     if "order_id" in df.columns:
         df = (df.repartitionByRange("order_id")
                 .sortWithinPartitions("order_id"))
-    else:  # no order key: preserve the plan's own order in one partition
+    else:
         df = df.coalesce(1)
-
-    def pack(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        for idx, pdf in enumerate(batches):
-            if pdf.empty:
-                continue
-            recs = [
-                {k: (v.item() if hasattr(v, "item") else v)
-                 for k, v in r.items()}
-                for r in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame({"lo": [(pid << 24) + idx],
-                                "blob": [pickle.dumps(recs, protocol=4)]})
-
-    # NOT orderBy("lo"): a global sort adds a range-sampling job that
-    # re-executes the whole pack pipeline a second time. The blob relation
-    # is tiny (one row per Arrow batch), so a round-robin shuffle into one
-    # partition + in-partition sort reconstructs the total order with no
-    # sampling pass and keeps toLocalIterator streaming in order.
-    return (df.mapInPandas(pack, schema="lo long, blob binary")
-              .repartition(1)
-              .sortWithinPartitions("lo"))
+    rows = (df.mapInPandas(
+                fold_partition,
+                schema="lo long, mx long, n long, ms double, blob binary")
+              .collect())
+    rows.sort(key=lambda r: r["lo"])
+    return [{"n": r["n"], "mx": r["mx"], "ms": r["ms"],
+             "state": pickle.loads(r["blob"])} for r in rows]
 
 
 def _combine_native(kind: str, prev: Any, new: Any, prev_n: int, new_n: int) -> Any:

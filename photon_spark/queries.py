@@ -413,14 +413,14 @@ def q_projection_fold_stats(spark, sf_dir):
     """The real serial ordered-fold kernel (PyReducer tier) over the events
     table, state = (processed, last_event, sum); SQL-checkable because the
     pieces are order-insensitive, while the fold itself runs strictly in
-    order_id order through the driver-streamed Arrow iterator."""
+    order_id order over the Arrow-collected, driver-sorted delta."""
     events = (_t(spark, sf_dir, "events")
               .select(F.col("event_id").alias("order_id"), "value"))
     proj = ProjectionEngine.fold_dataframe(
         PyReducer(
             fn=lambda st, ev: (st[0] + 1, ev["order_id"], st[2] + ev["value"]),
             source="tuple-fold"),
-        events,  # order established by the fold's own range partitioning
+        events,  # order established by the fold's own driver-side sort
         initial_value=(0, 0, 0.0), name="fold_stats")
     n, last, total = proj.current_value
     return spark.createDataFrame(

@@ -26,9 +26,12 @@ split across triggers out of order. Use it only for hot-only tails where
 each trigger's files come from distinct ingest calls.
 
 Scale notes: the per-batch work is ``ProjectionEngine._fold_df`` — native
-reducers stay Catalyst aggregates (distributed, no Python), the PyReducer
-tier packs records executor-side and folds driver-side (photon is likewise
-serial per projection, parallel across projections, streams.clj:410-420).
+reducers stay Catalyst aggregates (distributed, no Python); an associative
+reducer folds a batch of at most one Arrow batch of rows on the driver in
+one job and larger batches distributed; the PyReducer tier collects the
+batch through Arrow and folds it driver-side, so the driver holds each
+micro-batch (photon is likewise serial per projection, parallel across
+projections, streams.clj:410-420).
 """
 
 from __future__ import annotations
@@ -178,8 +181,9 @@ class StreamingProjectionRunner:
         Per projection: filter to its stream, drop anything at or below its
         resume point (no-dup on restart replay), then reuse the engine's
         tiered fold — each tier establishes order_id order itself (the
-        PyReducer pack range-partitions + sorts; native aggregates are
-        order-free), so no extra sort here.
+        driver folds sort the collected rows, the distributed associative
+        fold range-partitions + sorts; native aggregates are order-free),
+        so no extra sort here.
         """
         import json
 
@@ -241,12 +245,12 @@ class StreamingProjectionRunner:
         total processed count across projections. ``available_now=False``:
         returns the live StreamingQuery immediately.
         """
-        # Micro-batch plans get no AQE, so the fold's range-partition +
-        # sort inside foreachBatch would run at the session's raw
-        # shuffle-partition count regardless of batch size; pin a count
-        # derived from the store's on-disk volume instead (streaming/
-        # tuning.py). The query clones the session at .start(), so the
-        # restore does not affect in-flight batches.
+        # Micro-batch plans get no AQE, so a distributed associative
+        # fold's range-partition + sort inside foreachBatch would run at
+        # the session's raw shuffle-partition count regardless of batch
+        # size; pin a count derived from the store's on-disk volume
+        # instead (streaming/tuning.py). The query clones the session at
+        # .start(), so the restore does not affect in-flight batches.
         from photon_spark.streaming.tuning import (
             dir_bytes, state_partitions, stream_shuffle_partitions)
         n_parts = state_partitions(dir_bytes(self.engine.store.path))

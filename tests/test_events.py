@@ -458,3 +458,44 @@ def test_generation_pointer_is_nonce_unique_dir(spark, tmp_path):
     assert probe._generation() == 7
     assert probe._data_dir().endswith("gen=7")
     assert probe.read_all().count() == 2
+
+
+def test_ingest_rows_driver_stamped_append(spark, tmp_path):
+    """Driver-known rows (post_event, __config__ DDL) are stamped on the
+    driver and appended in one job: the same envelope on every backend,
+    slots continuing the arithmetic high-water mark, the same validation
+    and the durable multi-writer marker."""
+    import pyspark.sql.functions as F
+
+    full = {"stream_name": "s", "event_type": "e", "service_id": "svc",
+            "local_id": "x", "schema_tag": "v1", "payload": '{"k": 1}',
+            "provenance": {"service_id": "a", "local_id": "b",
+                           "relationship_type": "c"}}
+    for fmt in EventStore.FORMATS:
+        st = EventStore(spark, str(tmp_path / f"ev_{fmt}"), fmt=fmt)
+        st.ingest(make_events(spark, 3, stream="s"))
+        assert st.ingest_rows([full, {"stream_name": "t"}]) == 2
+        assert st.ingested == 5
+        rows = (st.read_all().orderBy("order_id")
+                .withColumn("ms", F.unix_millis("event_time")).collect())
+        oids = [r["order_id"] for r in rows]
+        assert len(set(oids)) == 5 and oids == sorted(oids), fmt
+        assert st.max_order_id() == oids[-1]
+        assert EventStore(spark, st.path, fmt=fmt).max_order_id() == oids[-1]
+        got, empty = rows[3].asDict(recursive=True), rows[4]
+        assert {k: got[k] for k in full} == full, fmt
+        assert got["ms"] == got["order_id"] // 1000
+        assert (empty["stream_name"], empty["payload"],
+                empty["provenance"]) == ("t", None, None), fmt
+
+    st = EventStore(spark, str(tmp_path / "ev"))
+    with pytest.raises(ValueError, match="event_typ"):
+        st.ingest_rows([{"stream_name": "s", "event_typ": "oops"}])
+    with pytest.raises(ValueError, match="stream_name"):
+        st.ingest_rows([{"payload": "{}"}])
+    assert st.ingest_rows([]) == 0 and not st._exists()
+
+    w1 = EventStore(spark, str(tmp_path / "mw"), writer_id=1, n_writers=2)
+    w1.ingest_rows([{"stream_name": "s"}])
+    assert EventStore(spark, w1.path).ever_multi_writer()
+    assert 500 <= w1.max_order_id() % 1000 < 1000

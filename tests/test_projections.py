@@ -2,6 +2,7 @@
 convergence, per-stream scoping, resume, replace, delete-protection, failure
 capture; plus the native/associative scale tiers."""
 
+import contextlib
 import json
 
 import pytest
@@ -9,6 +10,7 @@ import pytest
 from photon_spark.events import EventStore
 from photon_spark.projections import (
     AssociativeReducer, NativeReducer, ProjectionEngine, PyReducer)
+from photon_spark.projections import engine as engine_mod
 
 from tests.test_events import make_events
 
@@ -32,6 +34,17 @@ def test_count_fold_convergence(engine, spark):
     assert proj.status == "running"
     assert proj.avg_time >= 0.0
     assert proj.mem_used > 0  # measured at the 1000-event tick
+    # the native and associative tiers report the same metrics
+    # (streams.clj:99-145); a native count ignores the initial value
+    engine.register("native", NativeReducer("count"),
+                    stream_name="largestream")
+    engine.register("assoc", AssociativeReducer(
+        fold=lambda st, ev: st + 1, merge=lambda a, b: a + b, zero=0),
+        stream_name="largestream", initial_value=1)
+    for name, want in (("native", 1003), ("assoc", 1004)):
+        proj = engine.advance(name)
+        assert (proj.current_value, proj.processed) == (want, 1003), name
+        assert proj.avg_time > 0.0 and proj.mem_used > 0, name
 
 
 def test_resume_from_last_event(engine, spark):
@@ -207,3 +220,164 @@ def test_fold_dataframe_associative_without_order_id(spark):
                            merge=lambda x, y: x + y, zero=0), df)
     assert proj.current_value == sum(range(10))
     assert proj.processed == 10
+
+
+_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@contextlib.contextmanager
+def arrow_batch_rows(spark, n):
+    """Set the Arrow batch size (the associative tier's driver-fold cap)
+    for the block, then restore it."""
+    old = spark.conf.get(_BATCH_CONF)
+    spark.conf.set(_BATCH_CONF, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(_BATCH_CONF, old)
+
+
+@pytest.fixture()
+def distributed_calls(monkeypatch):
+    """Count the associative tier's distributed folds."""
+    calls = []
+    real = engine_mod._fold_partials_distributed
+
+    def spy(reducer, df):
+        calls.append(1)
+        return real(reducer, df)
+
+    monkeypatch.setattr(engine_mod, "_fold_partials_distributed", spy)
+    return calls
+
+
+def _envelope_store(spark, path):
+    """A store with one event carrying every envelope column, one with a
+    NULL payload, and plain chatter events around them."""
+    store = EventStore(spark, path)
+    store.ingest(make_events(spark, 4, stream="s"))
+    store.ingest_rows([
+        {"stream_name": "s", "event_type": "e", "service_id": "svc",
+         "local_id": "full", "schema_tag": "v1", "payload": '{"k": 1}',
+         "provenance": {"service_id": "a", "local_id": "b",
+                        "relationship_type": "caused-by"}},
+        {"stream_name": "s", "local_id": "null-payload"}])
+    store.ingest(make_events(spark, 3, stream="s"))
+    return store
+
+
+def _typed(events):
+    return [{k: (v, type(v)) for k, v in ev.items()} for ev in events]
+
+
+def test_assoc_driver_and_distributed_paths_agree(spark, tmp_path,
+                                                  distributed_calls):
+    """The one-Arrow-batch driver fold and the range-partitioned
+    distributed fold hand the fold the same event dicts (values and
+    Python types) in the same order and produce the same value,
+    processed, last_event and emitted — across two incremental advances,
+    so the second merges into a non-zero current value."""
+    store = _envelope_store(spark, str(tmp_path / "ev"))
+    red = AssociativeReducer(fold=lambda st, ev: st + [ev],
+                             merge=lambda a, b: a + b, zero=[])
+    caps = {"driver": 10000, "distributed": 2}
+    engines, emitted = {}, {p: [] for p in caps}
+    for path in caps:
+        engines[path] = ProjectionEngine(store)
+        engines[path].register("a", red, stream_name="s", initial_value=[])
+    for step in range(2):
+        if step:
+            store.ingest(make_events(spark, 3, stream="s"))
+        for path, cap in caps.items():
+            with arrow_batch_rows(spark, cap):
+                proj = engines[path].advance("a", emit_states=True)
+            emitted[path].append(proj.emitted)
+    assert len(distributed_calls) == 2
+
+    def outcome(path):
+        q = engines[path].projection("a")
+        assert q.avg_time > 0.0
+        return emitted[path], q.current_value, q.processed, q.last_event
+
+    drv, dist = outcome("driver"), outcome("distributed")
+    assert drv == dist
+    events = drv[1]
+    assert _typed(events) == _typed(dist[1])
+    assert len(events) == 12 and drv[2] == 12
+    assert [len(e[0]) for e in drv[0]] == [9, 12]
+    oids = [ev["order_id"] for ev in events]
+    assert oids == sorted(oids) and drv[3] == oids[-1]
+    full = next(ev for ev in events if ev["local_id"] == "full")
+    assert full["provenance"] == {"service_id": "a", "local_id": "b",
+                                  "relationship_type": "caused-by"}
+    assert (full["schema_tag"], full["payload"]) == ("v1", '{"k": 1}')
+    null = next(ev for ev in events if ev["local_id"] == "null-payload")
+    assert null["payload"] is None and null["provenance"] is None
+
+
+def test_serial_fold_sees_the_executor_event_dicts(spark, tmp_path,
+                                                   distributed_calls):
+    """The serial tier's driver fold hands its fn the same plain-Python
+    event dicts (values and types) as the executors hand a distributed
+    associative fold."""
+    store = _envelope_store(spark, str(tmp_path / "ev"))
+    engine = ProjectionEngine(store)
+    engine.register("serial", PyReducer(fn=lambda st, ev: st + [ev]),
+                    stream_name="s", initial_value=[])
+    engine.register("assoc", AssociativeReducer(
+        fold=lambda st, ev: st + [ev], merge=lambda a, b: a + b, zero=[]),
+        stream_name="s", initial_value=[])
+    serial = engine.advance("serial").current_value
+    with arrow_batch_rows(spark, 2):
+        assoc = engine.advance("assoc").current_value
+    assert len(distributed_calls) == 1
+    assert len(serial) == 9 and _typed(serial) == _typed(assoc)
+    assert not [v for ev in serial for v in ev.values()
+                if type(v).__module__ == "numpy"]
+    assert {type(ev["order_id"]) for ev in serial} == {int}
+
+
+def test_serial_fold_orders_many_small_files(engine, spark):
+    """Many single-event files over two streams, folded in Arrow chunks
+    smaller than the delta: the fold still sees one total order_id
+    order."""
+    for i in range(12):
+        engine.store.ingest_rows([{"stream_name": f"s{i % 2}",
+                                   "local_id": str(i)}])
+    engine.register("order", "lambda p, e: p + [e['order_id']]",
+                    initial_value=[])
+    with arrow_batch_rows(spark, 5):
+        proj = engine.advance("order", emit_states=True)
+    want = [r["order_id"] for r in engine.store.read_cold().collect()]
+    assert proj.current_value == want and len(want) == 12
+    assert proj.processed == 12 and proj.last_event == want[-1]
+    assert [len(s) for s in proj.emitted] == list(range(1, 13))
+
+
+def test_assoc_fold_failure_leaves_state_unchanged(spark, tmp_path,
+                                                   distributed_calls):
+    """A throwing associative fold fails the advance on both paths
+    without touching value, processed or last_event."""
+    def fold(st, ev):
+        if ev["local_id"] == "boom":
+            raise ValueError("boom")
+        return st + 1
+
+    for cap in (10000, 2):
+        store = EventStore(spark, str(tmp_path / f"ev{cap}"))
+        store.ingest(make_events(spark, 5, stream="s"))
+        engine = ProjectionEngine(store)
+        engine.register("a", AssociativeReducer(
+            fold=fold, merge=lambda a, b: a + b, zero=0),
+            stream_name="s", initial_value=0)
+        with arrow_batch_rows(spark, cap):
+            proj = engine.advance("a")
+            before = (proj.current_value, proj.processed, proj.last_event)
+            assert before[:2] == (5, 5)
+            store.ingest(make_events(spark, 2, stream="s"))
+            store.ingest_rows([{"stream_name": "s", "local_id": "boom"}])
+            with pytest.raises(Exception, match="boom"):
+                engine.advance("a")
+        assert (proj.current_value, proj.processed,
+                proj.last_event) == before
+    assert len(distributed_calls) == 2
