@@ -797,21 +797,6 @@ def quantize_error_cols_np(vec_col, max_q: int = 127):
 
 # ------------------------------------------------------------- kNN graph
 
-def seq_cosine(a, b) -> float:
-    """Strictly sequential left-associated float64 cosine — bit-identical
-    to the Catalyst aggregate(zip_with(..)) expression and DuckDB's
-    list_cosine_similarity at 6dp (same kernel contract as the re-verify
-    step in dedup.embedding_near_duplicates)."""
-    import math
-    s = na = nb = 0.0
-    for x, y in zip(a, b):
-        s += x * y
-        na += x * x
-        nb += y * y
-    d = math.sqrt(na) * math.sqrt(nb)
-    return s / d if d else 0.0
-
-
 def knn_graph(df: DataFrame, k: int = 3, vec_col: str = "embedding",
               id_col: str = "vec_id", n_blocks: int = 16) -> DataFrame:
     """EXACT k-nearest-neighbor graph: every vector's top-k neighbors by

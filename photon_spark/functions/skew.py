@@ -167,7 +167,7 @@ def bucketed_key_window(df: DataFrame, keys: list[str],
     # partial combine before its (tiny) exchange; the generic
     # min(struct(...)) falls back to SortAggregate, which SORTS THE FULL
     # RELATION inside every scan task before the partial agg — measured
-    # as the dominant summary-branch cost (plans/r13, guide §2.3/§5).
+    # as the dominant summary-branch cost (guide §2.3/§5).
     first_only = set(lead_cols) <= {first_ord}
     if first_only:
         summary = (d.groupBy(*keys, "_bkt")
@@ -263,7 +263,7 @@ def salted_sessionize(df: DataFrame, key_cols: list[str], ts_col: str,
     # replaces the previous three-relation shape (a second full scan of
     # the input for min/max ts, a separate max(_lcum) aggregate over
     # loc, and the join gluing them) — one scan and one tiny join fewer
-    # at any scale (§2.3/§2.4; plan diff in plans/r13).
+    # at any scale (§2.3/§2.4).
     summary = (loc.groupBy(*key_cols, "_bkt")
                   .agg(F.min(ts_col).alias("_first_ts"),
                        F.max(ts_col).alias("_last_ts"),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from photon_spark.projections.engine import (AssociativeReducer,
                                              ProjectionEngine, PyReducer)
+from photon_spark.streaming.tuning import drain
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -452,7 +453,7 @@ def _staged_event_store(spark, sf_dir):
     ever violated). The streaming-fold gate queries measure the FOLD,
     not the store build: bench min-of-N reports fold-only cost because
     every run after the first reuses the staged store. Checkpoints are
-    NOT shared — each query invocation gets a fresh one, so availableNow
+    NOT shared — each query invocation gets a fresh one, so a drain
     always replays the full store."""
     import tempfile
     from photon_spark.events import EventStore
@@ -544,20 +545,13 @@ def q_projection_keyed_streaming_fold(spark, sf_dir):
             for r in bdf.collect():
                 got[r["stream_name"]] = (r["processed"], r["checksum"])
 
-        # state partitions derived from the store's on-disk volume
-        # (streaming/tuning.py): the keyed fold commits one state store
-        # per shuffle partition per micro-batch, and the per-key
-        # checksum is partition-count independent by construction (the
-        # bench already runs it at several core counts)
-        from photon_spark.streaming.tuning import (
-            dir_bytes, state_partitions, stream_shuffle_partitions)
-        with stream_shuffle_partitions(
-                spark, state_partitions(dir_bytes(store.path))):
-            q = (keyed_ordered_checksums(read_hot_cold(store))
-                 .writeStream.foreachBatch(sink)
-                 .option("checkpointLocation", os.path.join(base, "ckpt"))
-                 .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
+        # state partitions sized from the store's volume: the per-key
+        # checksum is partition-count independent by construction
+        drain(keyed_ordered_checksums(read_hot_cold(store))
+              .writeStream.foreachBatch(sink)
+              .option("checkpointLocation", os.path.join(base, "ckpt"))
+              .outputMode("update"),
+              spark, store.path, timeout_sec=300)
         rows = [(k, int(v[0]), int(v[1])) for k, v in sorted(got.items())]
         return spark.createDataFrame(
             rows, "stream_name string, processed long, checksum long")
@@ -600,8 +594,6 @@ SELECT user_id, count(*) AS n FROM events WHERE user_id = 7 GROUP BY user_id
 # Registry
 # --------------------------------------------------------------------------
 
-from photon_spark import queries_northstar as _ns  # noqa: E402
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cold_replay": q_cold_replay,
     "stream_contents": q_stream_contents,
@@ -640,320 +632,21 @@ ORACLES: dict[str, str] = {
     "projection_value_lookup": SQL_PROJECTION_VALUE_LOOKUP,
 }
 
-QUERIES.update(_ns.QUERIES)
-ORACLES.update(_ns.ORACLES)
+from photon_spark import (queries_curation, queries_enrich,  # noqa: E402
+                          queries_governance, queries_layout,
+                          queries_northstar, queries_pipeline,
+                          queries_ranking, queries_relational,
+                          queries_select, queries_sketch, queries_store,
+                          queries_substring, queries_training)
 
-from photon_spark import queries_pipeline as _pl  # noqa: E402
+for _m in (queries_northstar, queries_pipeline, queries_curation,
+           queries_enrich, queries_select, queries_relational,
+           queries_sketch, queries_ranking, queries_layout,
+           queries_governance, queries_substring, queries_training,
+           queries_store):
+    QUERIES.update(_m.QUERIES)
+    ORACLES.update(_m.ORACLES)
 
-QUERIES.update(_pl.QUERIES)
-ORACLES.update(_pl.ORACLES)
-
-from photon_spark import queries_curation as _cu  # noqa: E402
-
-QUERIES.update(_cu.QUERIES)
-ORACLES.update(_cu.ORACLES)
-
-from photon_spark import queries_enrich as _en  # noqa: E402
-
-QUERIES.update(_en.QUERIES)
-ORACLES.update(_en.ORACLES)
-
-from photon_spark import queries_select as _se  # noqa: E402
-
-QUERIES.update(_se.QUERIES)
-ORACLES.update(_se.ORACLES)
-
-from photon_spark import queries_relational as _re  # noqa: E402
-
-QUERIES.update(_re.QUERIES)
-ORACLES.update(_re.ORACLES)
-
-from photon_spark import queries_sketch as _sk  # noqa: E402
-
-QUERIES.update(_sk.QUERIES)
-ORACLES.update(_sk.ORACLES)
-
-from photon_spark import queries_ranking as _rk  # noqa: E402
-
-QUERIES.update(_rk.QUERIES)
-ORACLES.update(_rk.ORACLES)
-
-from photon_spark import queries_layout as _ly  # noqa: E402
-
-QUERIES.update(_ly.QUERIES)
-ORACLES.update(_ly.ORACLES)
-
-from photon_spark import queries_governance as _gv  # noqa: E402
-
-QUERIES.update(_gv.QUERIES)
-ORACLES.update(_gv.ORACLES)
-
-from photon_spark import queries_substring as _ss  # noqa: E402
-
-QUERIES.update(_ss.QUERIES)
-ORACLES.update(_ss.ORACLES)
-
-from photon_spark import queries_training as _tr  # noqa: E402
-
-QUERIES.update(_tr.QUERIES)
-ORACLES.update(_tr.ORACLES)
-
-from photon_spark import queries_store as _st  # noqa: E402
-
-QUERIES.update(_st.QUERIES)
-ORACLES.update(_st.ORACLES)
-
-# --------------------------------------------------------------------------
-# Gate-window ordering
-# --------------------------------------------------------------------------
-# The driver hash-checks the FIRST 50 registry entries per round. The
-# r01-r06 union covers 144 of the 150 round-6 entries; round 7's window
-# leads with the six never-driver-checked queries (deferred from round 6),
-# then any brand-new round-7 queries, then queries whose gated OUTPUT or
-# PLAN changed since their last driver check. Values are untouched — dict
-# order only.
-
-# Union of every query green in the driver's CORRECTNESS_r01..r05 files.
-_DRIVER_CHECKED_R1_R5 = frozenset([
-    "cold_replay", "stream_contents", "time_range_count", "point_lookup",
-    "streams_totals", "distinct_streams", "stream_version_totals",
-    "schema_inference", "projection_count_all", "projection_sum_by_stream",
-    "projection_assoc_fold", "projection_fold_stats",
-    "projection_streaming_fold", "projection_keyed_streaming_fold",
-    "projection_value_lookup", "text_profile", "lang_quality_by_source",
-    "dedup_exact_stats", "ngram_jaccard_pairs", "dedup_clusters",
-    "minhash_near_dups", "simhash_buckets", "ann_topk_bruteforce",
-    "embedding_near_dup_pairs", "ann_topk_lsh", "ann_topk_ivf",
-    "embedding_quantize_stats", "media_stats", "frame_sample_stats",
-    "repetition_profile", "winnow_overlap_pairs", "tfidf_top_terms",
-    "doc_ngram_novelty", "media_phash_near_dups", "ann_topk_pq",
-    "knn_graph", "knn_graph_ivf", "dup_graph_degree", "events_sessionize",
-    "events_rate_window", "stratified_sample", "token_topk",
-    "rare_token_rate", "contamination_check", "bigram_lift_topk",
-    "quality_quantiles_by_lang", "events_funnel", "events_sliding_window",
-    "events_rolling_stats", "events_anomaly_zscore",
-    # r05 window (49 green + the user_journeys red row, re-listed in
-    # _CHANGED_THIS_ROUND below because its gated output changed)
-    "seeded_shuffle_plan", "quality_classifier_filter",
-    "curriculum_order_plan", "embedding_prune_plan", "cluster_split_assign",
-    "classifier_train_gd", "vocab_coverage_audit", "ann_recall_audit",
-    "matryoshka_recall_audit", "small_quantity_revenue",
-    "lone_late_supplier", "session_packing", "revenue_cube",
-    "user_journeys", "customer_spend_quartiles",
-    "events_hour_window_features", "classifier_eval_split",
-    "exact_substring_dedup", "exact_substring_doc_fraction",
-    "paragraph_dedup", "paragraph_minhash_dedup", "exact_substring_trim",
-    "export_shard_plan", "split_repair_plan", "embedding_coverage_audit",
-    "media_keep_best", "dedup_keep_best", "split_leakage",
-    "cross_source_dups", "dup_graph_clustering", "pagerank_dup_graph",
-    "dedup_incremental", "semdedup_pairs", "kmeans_embeddings",
-    "cluster_balanced_sample", "token_surprisal_by_source",
-    "quality_filter_funnel", "events_asof_join", "mixture_reweight_plan",
-    "mixture_resample", "events_range_join", "event_transition_matrix",
-    "bpe_first_merges", "bpe_merge_rounds", "doc_chunking",
-    "sequence_packing",
-])
-
-
-# Round-6 driver window (CORRECTNESS_r06.json — all 50 green).
-_DRIVER_CHECKED_R6 = frozenset([
-    "ann_recall_audit", "ann_topk_filtered", "ann_topk_multi", "bm25_topk",
-    "budget_trim", "changelog_compaction", "cohort_retention",
-    "constraint_audit", "containment_pairs", "contamination_bloom",
-    "copurchase_pairs", "corpus_build_e2e", "corpus_datacard",
-    "countmin_token_freq", "embedding_gram_int8", "events_decay_popularity",
-    "events_gap_fill", "events_pivot", "events_trending_users",
-    "feature_hash_vectors", "hard_negative_mining", "hll_distinct_audit",
-    "hybrid_rrf_topk", "idle_customers", "ivf_pq_topk",
-    "join_size_estimate", "kmv_distinct_audit", "kmv_source_overlap",
-    "knn_label_eval", "lang_confusion", "large_orders",
-    "minhash_calibration", "nation_trade_volume",
-    "order_count_distribution", "pair_table_incremental_audit",
-    "price_quantity_corr", "pricing_summary", "priority_sample",
-    "promo_revenue_share", "quality_histogram_quantiles",
-    "revenue_by_nation", "revenue_rollup", "revenue_trend",
-    "shipping_priority", "source_diversity", "top_customers_per_segment",
-    "user_journeys", "value_mad_outliers", "watermark_late_audit",
-    "zorder_skipping_audit",
-])
-
-# Round-7 driver window (CORRECTNESS_r07.json — all 50 green).
-_DRIVER_CHECKED_R7 = frozenset([
-    "schema_drift_audit", "classifier_calibration_curve", "pii_scrub_stats",
-    "skew_salted_agg", "events_unpivot", "audio_window_energy",
-    "image_decode_stats", "bigram_lm_doc_bits", "part_value_concentration",
-    "top_supplier_revenue", "idle_rich_customers", "session_window_stats",
-    "upsert_merge", "scd2_history", "late_order_priority",
-    "min_cost_supplier", "disjunctive_revenue", "excess_part_suppliers",
-    "returned_item_customers", "market_share", "forecast_revenue_change",
-    "late_line_priority_mix", "nation_profit_by_year",
-    "part_supplier_counts", "corpus_version_diff", "fuzzy_name_pairs",
-    "linear_attribution", "ann_topk_ivf", "changelog_compaction",
-    "pair_table_incremental_audit", "shipping_priority", "idle_customers",
-    "nation_trade_volume", "promo_revenue_share", "time_range_count",
-    "cold_replay", "stream_contents", "point_lookup", "streams_totals",
-    "distinct_streams", "stream_version_totals", "schema_inference",
-    "projection_count_all", "projection_sum_by_stream",
-    "projection_assoc_fold", "projection_fold_stats",
-    "projection_streaming_fold", "projection_keyed_streaming_fold",
-    "projection_value_lookup", "text_profile",
-])
-
-# Round-8 driver window (CORRECTNESS_r08.json — all 50 green).
-_DRIVER_CHECKED_R8 = frozenset([
-    "ann_ndcg_audit", "cdc_merge_state", "cdc_multi_writer_state",
-    "cdc_state_diff", "cdc_time_travel", "classifier_auc_rank",
-    "cluster_label_purity", "cold_replay", "compaction_bin_plan",
-    "conjunctive_search_topk", "customer_rfm_segments",
-    "disjunctive_revenue", "dup_graph_link_predict",
-    "dup_graph_triangles", "erasure_propagation_audit",
-    "events_downtime_gaps", "events_interval_union",
-    "events_value_percentiles", "excess_part_suppliers",
-    "funnel_time_to_convert", "image_palette_decode_stats",
-    "image_resize_stats", "ivf_staleness_audit", "k_anonymity_audit",
-    "kneser_ney_doc_bits", "l_diversity_audit", "large_orders",
-    "market_share", "media_decode_fallback_audit", "min_cost_supplier",
-    "mutual_knn_pairs", "nation_profit_by_year", "nation_trade_volume",
-    "pareto_front_parts", "part_supplier_counts", "promo_revenue_share",
-    "returned_item_customers", "revenue_by_nation", "revenue_cube",
-    "revenue_rollup", "rolling_active_users", "shipping_priority",
-    "skipgram_lift_topk", "stream_contents", "time_range_count",
-    "top_customers_per_segment", "top_supplier_revenue",
-    "user_growth_accumulation", "vocab_growth_curve",
-    "zipf_deviation_audit",
-])
-
-# Round-9 driver window (CORRECTNESS_r09.json — all 50 green).
-_DRIVER_CHECKED_R9 = frozenset([
-    "scd2_history_salted", "session_window_stats_salted",
-    "ranking_rbo_audit", "dedup_cluster_bcubed", "dp_noisy_event_counts",
-    "mutual_knn_pairs_ivf", "cdc_stream_merge_state",
-    "image_jpeg_decode_stats", "dup_graph_bfs_hops",
-    "image_gif_decode_stats", "stream_stream_interval_join",
-    "phrase_search_topk", "dp_noisy_max_event_type",
-    "ann_int8_recall_audit", "neyman_allocation_plan",
-    "markov_text_sample", "media_decode_fallback_audit",
-    "rolling_active_users", "image_decode_stats", "image_resize_stats",
-    "cdc_merge_state", "cdc_time_travel", "cdc_state_diff",
-    "cdc_multi_writer_state", "mutual_knn_pairs", "pareto_front_parts",
-    "scd2_history", "cold_replay", "stream_contents", "time_range_count",
-    "point_lookup", "streams_totals", "distinct_streams",
-    "stream_version_totals", "schema_inference", "projection_count_all",
-    "projection_sum_by_stream", "projection_assoc_fold",
-    "projection_fold_stats", "projection_streaming_fold",
-    "projection_keyed_streaming_fold", "projection_value_lookup",
-    "text_profile", "lang_quality_by_source", "dedup_exact_stats",
-    "ngram_jaccard_pairs", "dedup_clusters", "minhash_near_dups",
-    "simhash_buckets", "ann_topk_bruteforce",
-])
-
-# Round-10 driver window (CORRECTNESS_r10.json — all 50 green).
-_DRIVER_CHECKED_R10 = frozenset([
-    "stream_export_audit", "stream_import_roundtrip", "delete_event_audit",
-    "delete_stream_audit", "store_clean_audit", "store_expire_audit",
-    "store_compact_audit", "ann_recall_audit_fixedq", "ann_ndcg_audit_fixedq",
-    "ann_int8_recall_audit_fixedq", "matryoshka_recall_audit_fixedq",
-    "typed_view_stats", "dp_noisy_max_event_type",
-    "pair_table_incremental_audit", "stream_stream_interval_join",
-    "cold_replay", "stream_contents", "time_range_count", "point_lookup",
-    "streams_totals", "distinct_streams", "stream_version_totals",
-    "schema_inference", "projection_count_all", "projection_sum_by_stream",
-    "projection_assoc_fold", "projection_fold_stats",
-    "projection_streaming_fold", "projection_keyed_streaming_fold",
-    "projection_value_lookup", "text_profile", "lang_quality_by_source",
-    "dedup_exact_stats", "ngram_jaccard_pairs", "dedup_clusters",
-    "dedup_cluster_bcubed", "minhash_near_dups", "simhash_buckets",
-    "ann_topk_bruteforce", "embedding_near_dup_pairs", "ann_topk_lsh",
-    "ann_topk_ivf", "embedding_quantize_stats", "media_stats",
-    "frame_sample_stats", "repetition_profile", "winnow_overlap_pairs",
-    "tfidf_top_terms", "doc_ngram_novelty", "media_phash_near_dups",
-])
-
-# Round-11 driver window (CORRECTNESS_r11.json — all 50 green).
-_DRIVER_CHECKED_R11 = frozenset([
-    "dp_user_bounded_counts", "lone_late_supplier", "copurchase_pairs",
-    "kneser_ney_doc_bits", "bigram_lm_doc_bits", "knn_graph_ivf",
-    "mutual_knn_pairs_ivf", "typed_view_stats", "stream_import_roundtrip",
-    "store_clean_audit", "dp_noisy_event_counts", "cold_replay",
-    "stream_contents", "time_range_count", "point_lookup",
-    "streams_totals", "distinct_streams", "stream_version_totals",
-    "schema_inference", "projection_count_all", "projection_sum_by_stream",
-    "projection_assoc_fold", "projection_fold_stats",
-    "projection_streaming_fold", "projection_keyed_streaming_fold",
-    "projection_value_lookup", "text_profile", "lang_quality_by_source",
-    "dedup_exact_stats", "ngram_jaccard_pairs", "dedup_clusters",
-    "dedup_cluster_bcubed", "minhash_near_dups", "simhash_buckets",
-    "ann_topk_bruteforce", "embedding_near_dup_pairs", "ann_topk_lsh",
-    "ann_topk_ivf", "embedding_quantize_stats", "media_stats",
-    "frame_sample_stats", "repetition_profile", "winnow_overlap_pairs",
-    "tfidf_top_terms", "doc_ngram_novelty", "media_phash_near_dups",
-    "media_keep_best", "ann_topk_pq", "ivf_pq_topk", "knn_graph",
-])
-
-_DRIVER_CHECKED = (_DRIVER_CHECKED_R1_R5 | _DRIVER_CHECKED_R6
-                   | _DRIVER_CHECKED_R7 | _DRIVER_CHECKED_R8
-                   | _DRIVER_CHECKED_R9 | _DRIVER_CHECKED_R10
-                   | _DRIVER_CHECKED_R11)
-
-
-# Rows deliberately REMOVED from the gate (not renamed): the sampled
-# audit parents — the four ANN audits retired in round 11, the IVF
-# staleness audit in round 12 — whose query batch is a corpus fraction
-# (quadratic exact-ground-truth cost); their fixedq twins are the gated
-# corpus-linear production form. Functions/oracles/tests remain as the
-# documented small-n audit tier (queries_select.py registry note).
-_RETIRED = frozenset([
-    "ann_recall_audit", "ann_ndcg_audit", "ann_int8_recall_audit",
-    "matryoshka_recall_audit", "ivf_staleness_audit",
-])
-
-# Round-12 window head: the staleness audit's corpus-linear fixedq twin
-# (its sampled parent retired — the last gated row with quadratic exact
-# ground truth) and the user-level DP bounded-sum release (contribution
-# bounding + value clamping + granularity quantization over the same
-# truncated-noise table).
-_NEWEST_FIRST: list = ["ivf_staleness_audit_fixedq", "dp_user_bounded_sum",
-                       "dp_user_bounded_mean", "dp_user_bounded_quantiles"]
-
-
-_DEFER_PAST_BACKLOG: list = []
-
-
-# Queries whose gated OUTPUT or PLAN changed since their last driver
-# check, so the driver must re-verify them this round (round 12):
-# knn_graph_ivf / mutual_knn_pairs_ivf (PLAN: the staged IVF index now
-# lives in the generation-pointer cell store that ann probes and
-# appends share — graph builds read the persisted live generation;
-# values unchanged); dp_user_bounded_counts (OUTPUT: the DP metadata
-# columns renamed to release_epsilon/release_delta — they label the
-# n_noisy release only, not the audit columns beside it);
-# copurchase_pairs (PLAN: the order total rides as a broadcast 1-row
-# aggregate instead of a separate driver .collect() job — one Spark
-# action; values unchanged); curriculum_order_plan (PLAN: the score
-# relation persists so the profile Arrow pass runs once, not once per
-# rank-kernel consumer; values unchanged).
-_CHANGED_THIS_ROUND = [
-    "knn_graph_ivf", "mutual_knn_pairs_ivf", "dp_user_bounded_counts",
-    "copurchase_pairs", "curriculum_order_plan",
-]
-
-
-def _gate_order(registry: dict) -> list[str]:
-    newest = [n for n in _NEWEST_FIRST if n in registry]
-    changed = [n for n in _CHANGED_THIS_ROUND
-               if n in registry and n not in newest]
-    head = set(newest) | set(changed)
-    fresh = [n for n in registry
-             if n not in _DRIVER_CHECKED and n not in head]
-    # deferred entries rank behind the older never-checked rows
-    fresh = ([n for n in fresh if n not in _DEFER_PAST_BACKLOG]
-             + [n for n in _DEFER_PAST_BACKLOG if n in fresh])
-    seen = [n for n in registry
-            if n in _DRIVER_CHECKED and n not in head]
-    return newest + changed + fresh + seen
-
-
-_ORDER = _gate_order(QUERIES)
 # Plan-construction memo: registry entries whose construction is
 # provably side-effect-free reuse their built plan across calls within
 # one session (relations.memo_query — zero construction jobs, no
@@ -961,5 +654,4 @@ _ORDER = _gate_order(QUERIES)
 # untouched: every action still computes from the parquet inputs.
 from photon_spark.relations import memo_query  # noqa: E402
 
-QUERIES = {n: memo_query(n, QUERIES[n]) for n in _ORDER}
-ORACLES = {n: ORACLES[n] for n in _ORDER if n in ORACLES}
+QUERIES = {n: memo_query(n, q) for n, q in QUERIES.items()}

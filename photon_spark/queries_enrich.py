@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from photon_spark.functions import text
 from photon_spark.functions.asof import asof_join
+from photon_spark.streaming.tuning import drain
 
 #: funnel thresholds (picked to discriminate on the driver corpus:
 #: n_tokens spans 10-99 with median ~56, quality 0.74-0.83 median ~0.78)
@@ -530,30 +531,13 @@ def q_stream_stream_interval_join(spark, sf_dir):
                 & (F.col("cns") >= F.col("pns") - F.lit(RANGE_NS))
                 & (F.col("cns") <= F.col("pns")))
     sink = os.path.join(base, "sink")
-    # State partitions sized from the staged source volume (streaming/
-    # tuning.py): a stream-stream join runs FOUR state stores per
-    # shuffle partition and commits all of them every micro-batch, so
-    # the partition count must track ingested bytes, not the local core
-    # count — the result set is partition-count independent (the same
-    # invariance the multi-core-count bench contract already requires).
-    from photon_spark.streaming.tuning import (dir_bytes, state_partitions,
-                                               stream_shuffle_partitions)
-    with stream_shuffle_partitions(
-            spark, state_partitions(dir_bytes(pdir, cdir))):
-        q = (j.select("purchase_id", "user_id", "click_id")
-              .writeStream.format("parquet")
-              .option("path", sink)
-              .option("checkpointLocation", os.path.join(base, "ckpt"))
-              .trigger(availableNow=True).start())
-    try:
-        # fail loudly on timeout: a partial sink would silently return
-        # an incomplete (wrong) join result
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "stream-stream interval join exceeded 300s")
-    finally:
-        if q.isActive:
-            q.stop()
+    # State partitions sized from the staged source volume: the join's
+    # result set is partition-count independent.
+    drain(j.select("purchase_id", "user_id", "click_id")
+           .writeStream.format("parquet")
+           .option("path", sink)
+           .option("checkpointLocation", os.path.join(base, "ckpt")),
+          spark, pdir, cdir, timeout_sec=300)
 
     hits = (spark.read.parquet(sink)
             .groupBy("purchase_id")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from photon_spark.functions import text
 from photon_spark.functions.sessions import session_bounds
+from photon_spark.streaming.tuning import drain
 
 HOUR_NS = 3_600_000_000_000
 GAP_NS = 24 * 3600 * 1_000_000_000
@@ -1748,8 +1749,9 @@ def q_cdc_stream_merge_state(spark, sf_dir):
     the CdcMergeTable built by an ACTUAL Structured Streaming run —
     readStream over a three-file changelog source (maxFilesPerTrigger=1
     → three real foreachBatch micro-batches with checkpointed ids),
-    trigger(availableNow), THEN one injected at-least-once REPLAY
-    (a whole slice re-applied under an already-used batch id) — and its
+    drained once (streaming.tuning.drain), THEN one injected
+    at-least-once REPLAY (a whole slice re-applied under an already-used
+    batch id) — and its
     ``state()`` hash-checked against the same one-argmax DuckDB oracle
     as the batch-built ``cdc_merge_state``. A hash match certifies that
     micro-batch boundaries, the streaming engine's file-to-batch
@@ -1778,22 +1780,14 @@ def q_cdc_stream_merge_state(spark, sf_dir):
        .coalesce(1).write.partitionBy("_slice").parquet(src))
     t = CdcMergeTable(spark, os.path.join(base, "table"),
                       ["user_id", "event_type"], ["ts", "event_id"])
-    # batch-side shuffle partitions from the changelog volume
-    # (streaming/tuning.py): foreachBatch plans get no AQE, so the
-    # per-batch argmax groupBy inside apply_batch would shuffle at the
-    # raw session count regardless of micro-batch size; the merge is
-    # associative, so the state is partition-count invariant
-    from photon_spark.streaming.tuning import (dir_bytes, state_partitions,
-                                               stream_shuffle_partitions)
-    with stream_shuffle_partitions(
-            spark, state_partitions(dir_bytes(src))):
-        q = (spark.readStream.schema(ev.schema)
-             .option("recursiveFileLookup", "true")
-             .option("maxFilesPerTrigger", 1).parquet(src)
-             .writeStream.foreachBatch(t.foreach_batch())
-             .option("checkpointLocation", os.path.join(base, "ckpt"))
-             .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    # batch-side shuffle partitions sized from the changelog volume:
+    # the merge is associative, so the state is partition-count invariant
+    drain(spark.readStream.schema(ev.schema)
+          .option("recursiveFileLookup", "true")
+          .option("maxFilesPerTrigger", 1).parquet(src)
+          .writeStream.foreachBatch(t.foreach_batch())
+          .option("checkpointLocation", os.path.join(base, "ckpt")),
+          spark, src, timeout_sec=300)
     # two injected at-least-once replays, hash-invariant by argmax:
     # (1) VERBATIM same-id replay — batch 0 re-applies its own content
     # (a crashed-and-retried foreachBatch clobbers its own partition;

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from photon_spark.functions import dedup
+from photon_spark.streaming.tuning import drain
 
 #: client-side document envelope for the drop-dir source
 DOC_SCHEMA = T.StructType([
@@ -217,7 +218,7 @@ class StreamingCorpusIngest:
     # --------------------------------------------------------------- run
 
     def run(self, timeout_sec: float = 300.0) -> tuple[int, int]:
-        """Drain everything currently dropped (availableNow), then stop.
+        """Drain everything currently dropped, then stop.
         Returns (accepted, rejected) totals since construction."""
         src = (self.spark.readStream.schema(DOC_SCHEMA)
                .option("maxFilesPerTrigger", 1)
@@ -234,25 +235,11 @@ class StreamingCorpusIngest:
                       .withWatermark("_arrival", self.exact_dedup_watermark)
                       .dropDuplicatesWithinWatermark(["_content_md5"])
                       .drop("_content_md5", "_arrival"))
-        # State partitions from the drop-dir volume (streaming/
-        # tuning.py): dropDuplicatesWithinWatermark commits one state
-        # store per shuffle partition per micro-batch, and the batch
-        # work inside foreachBatch gets no AQE coalescing — acceptance
+        # Shuffle partitions sized from the drop-dir volume: acceptance
         # is content-keyed, so the result is partition-count invariant.
-        from photon_spark.streaming.tuning import (
-            dir_bytes, state_partitions, stream_shuffle_partitions)
-        with stream_shuffle_partitions(
-                self.spark, state_partitions(dir_bytes(self.source_dir))):
-            query = (src.writeStream
-                     .foreachBatch(self._apply_batch)
-                     .option("checkpointLocation", self.checkpoint_dir)
-                     .queryName("photon_spark_corpus_ingest")
-                     .trigger(availableNow=True).start())
-        try:
-            if not query.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"availableNow corpus ingest exceeded {timeout_sec}s")
-        finally:
-            if query.isActive:
-                query.stop()
+        drain(src.writeStream
+              .foreachBatch(self._apply_batch)
+              .option("checkpointLocation", self.checkpoint_dir)
+              .queryName("photon_spark_corpus_ingest"),
+              self.spark, self.source_dir, timeout_sec=timeout_sec)
         return self.accepted, self.rejected

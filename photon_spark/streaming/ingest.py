@@ -31,6 +31,7 @@ import tempfile
 from pyspark.sql import types as T
 
 from photon_spark.events import EventStore
+from photon_spark.streaming.tuning import drain
 
 #: Client-side envelope for the drop-dir source (server fields are stamped
 #: at ingest, never accepted from clients — streams.clj:296-301).
@@ -108,12 +109,5 @@ class StreamingIngest:
         ``False``: return the live StreamingQuery."""
         if not available_now:
             return self._writer().start()
-        query = self._writer().trigger(availableNow=True).start()
-        try:
-            if not query.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"availableNow ingest exceeded {timeout_sec}s")
-        finally:
-            if query.isActive:
-                query.stop()
+        drain(self._writer(), self.store.spark, timeout_sec=timeout_sec)
         return self.store.ingested

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from photon_spark.events import ALL_STREAMS
 from photon_spark.projections.engine import ProjectionEngine
 from photon_spark.streaming.replay import read_hot_cold
+from photon_spark.streaming.tuning import drain, start
 
 
 class StreamingProjectionRunner:
@@ -245,30 +246,14 @@ class StreamingProjectionRunner:
         total processed count across projections. ``available_now=False``:
         returns the live StreamingQuery immediately.
         """
-        # Micro-batch plans get no AQE, so a distributed associative
-        # fold's range-partition + sort inside foreachBatch would run at
-        # the session's raw shuffle-partition count regardless of batch
-        # size; pin a count derived from the store's on-disk volume
-        # instead (streaming/tuning.py). The query clones the session at
-        # .start(), so the restore does not affect in-flight batches.
-        from photon_spark.streaming.tuning import (
-            dir_bytes, state_partitions, stream_shuffle_partitions)
-        n_parts = state_partitions(dir_bytes(self.engine.store.path))
+        # Shuffle partitions sized from the store's volume: a distributed
+        # associative fold range-partitions inside foreachBatch, and every
+        # fold is ordered by order_id, so the count does not change values.
+        store = self.engine.store
         if not available_now:
-            with stream_shuffle_partitions(self.engine.store.spark,
-                                           n_parts):
-                return self._stream_writer().start()
-        with stream_shuffle_partitions(self.engine.store.spark, n_parts):
-            query = (self._stream_writer()
-                     .trigger(availableNow=True)
-                     .start())
-        try:
-            if not query.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"availableNow projection run exceeded {timeout_sec}s")
-        finally:
-            if query.isActive:
-                query.stop()
+            return start(self._stream_writer(), store.spark, store.path)
+        drain(self._stream_writer(), store.spark, store.path,
+              timeout_sec=timeout_sec)
         return sum(p.processed for p in self.engine.registry.values())
 
     def await_processed(self, name: str, target: int,

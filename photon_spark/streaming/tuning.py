@@ -1,4 +1,4 @@
-"""Scale-adaptive sizing for streaming shuffle/state partitions.
+"""Stream start and drain, with scale-adaptive shuffle/state partitions.
 
 Stateful streaming operators (stream-stream joins, keyed folds,
 ``dropDuplicatesWithinWatermark``) allocate one state store per shuffle
@@ -17,24 +17,33 @@ Derive the count from the bytes the stream will actually ingest —
 the same rule AQE applies to batch shuffles (advisory bytes per
 partition), computed up front because a streaming query pins its state
 partition count at the first checkpoint commit and cannot re-partition
-afterwards. Callers size once from the source directory right before
+afterwards. The count is sized once from the source paths right before
 ``.start()``; the clamp keeps a floor of 1 (empty/tiny sources) and a
 ceiling that bounds driver bookkeeping. ``STREAM_TARGET_BYTES`` is the
 per-partition goal for *state+shuffle* rows, deliberately smaller than
 the 128 MB scan split because state rows amplify input bytes (join
 candidates, per-key state copies).
 
-Structured Streaming clones the session state at ``.start()``
-(the query plans every micro-batch against the cloned conf), so
-:func:`stream_shuffle_partitions` can restore the session value
-immediately after start without affecting the running query.
+Every drain and every sized stream start in the package goes through
+this module:
+
+* :func:`start` pins ``spark.sql.shuffle.partitions`` from the source
+  paths for the ``.start()`` call only and restores the session value
+  right after. Structured Streaming clones the session state at
+  ``.start()`` (every micro-batch plans against the clone), so the
+  restore never reaches the running query. No paths, no pin.
+* :func:`drain` is the ``availableNow`` run: process what the source
+  holds now, then end. It waits at most ``timeout_sec`` and raises
+  ``TimeoutError`` naming the query when the run has not ended — a
+  drain cut short would hand back partial state. The query is stopped
+  in ``finally``; a failed micro-batch surfaces from
+  ``awaitTermination`` as ``StreamingQueryException`` and propagates.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 #: per-partition input-byte goal for stateful streams (see module doc)
 STREAM_TARGET_BYTES = 32 * 1024 * 1024
@@ -65,15 +74,28 @@ def state_partitions(input_bytes: int,
     return max(lo, min(hi, math.ceil(max(input_bytes, 1) / target_bytes)))
 
 
-@contextmanager
-def stream_shuffle_partitions(spark, n: int):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` for a stream
-    start. Restore happens on exit — safe immediately after
-    ``.start()`` because the query planned against a cloned session."""
+def start(writer, spark, *paths: str):
+    """``writer.start()`` with the shuffle partitions sized from the
+    bytes under ``paths`` (module doc); without paths, a plain start."""
+    if not paths:
+        return writer.start()
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(int(n)))
+    spark.conf.set(key, str(state_partitions(dir_bytes(*paths))))
     try:
-        yield
+        return writer.start()
     finally:
         spark.conf.set(key, prev)
+
+
+def drain(writer, spark, *paths: str, timeout_sec: float):
+    """Run ``writer`` once with ``trigger(availableNow=True)`` (started as
+    :func:`start` does), wait at most ``timeout_sec``, then stop it."""
+    query = start(writer.trigger(availableNow=True), spark, *paths)
+    try:
+        if not query.awaitTermination(timeout_sec):
+            raise TimeoutError(f"availableNow query "
+                               f"{query.name or query.id} did not finish "
+                               f"within {timeout_sec}s")
+    finally:
+        query.stop()

@@ -164,71 +164,3 @@ def test_lint_flags_complex_typed_output_columns(sf_dir):
     # scalar rendering of the same data passes
     assert bad_columns(
         con, "SELECT array_to_string(['a', 'b'], '>') AS seq") == []
-
-
-def test_gate_window_covers_unverified_backlog():
-    # The driver hash-checks only the FIRST 50 registry entries per
-    # round. Invariant: every query never seen green in a driver
-    # CORRECTNESS file must sit inside the window (or be explicitly
-    # parked in _DEFER_PAST_BACKLOG) — a registry edit that silently
-    # pushes an unverified query past position 50 re-opens the
-    # five-round trust gap round 6 closed.
-    import glob
-    import json
-    import os
-
-    from photon_spark import queries as q
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    union = set()
-    for p in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            rec = json.load(open(p))
-        except Exception:
-            continue
-        union |= {k for k, v in rec.items()
-                  if isinstance(v, dict) and v.get("hash_match")}
-    if not union:  # no driver records present (fresh clone)
-        return
-    order = list(q.QUERIES.keys())
-    window = set(order[:50])
-    missing = [n for n in order
-               if n not in union and n not in window
-               and n not in q._DEFER_PAST_BACKLOG]
-    assert missing == [], missing
-    # deferred entries must still be adjacent to the window, not lost at
-    # the registry tail
-    for n in q._DEFER_PAST_BACKLOG:
-        if n in order:
-            assert order.index(n) < 50 + len(q._DEFER_PAST_BACKLOG) + 5, n
-
-
-def test_gate_window_covers_every_unchecked_query():
-    """Registry hygiene guard (round-8): the driver hash-checks only the
-    FIRST 50 entries of the registry per round, so a query that has
-    never been driver-checked must either sit inside the next window or
-    be explicitly deferred — otherwise it can stay unverified forever
-    (the round-6 backlog failure mode). Also catches stale names in the
-    window-control lists after a rename."""
-    from photon_spark import queries as q
-
-    order = list(q.QUERIES)
-    window = set(order[:50])
-    never = [n for n in order if n not in q._DRIVER_CHECKED]
-    stranded = [n for n in never
-                if n not in window and n not in q._DEFER_PAST_BACKLOG]
-    assert not stranded, (
-        f"queries that can never reach the driver's 50-entry window: "
-        f"{stranded} — pin them in _NEWEST_FIRST or defer explicitly")
-    for lst in (q._NEWEST_FIRST, q._CHANGED_THIS_ROUND,
-                q._DEFER_PAST_BACKLOG):
-        ghosts = [n for n in lst if n not in q.QUERIES]
-        assert not ghosts, f"window-control names not in registry: {ghosts}"
-    # a checked name missing from the registry is a rename (bug) unless
-    # it was deliberately retired and documented in _RETIRED
-    ghosts = [n for n in q._DRIVER_CHECKED
-              if n not in q.QUERIES and n not in q._RETIRED]
-    assert not ghosts, f"_DRIVER_CHECKED names not in registry: {ghosts}"
-    # and a _RETIRED name still in the registry is a stale retirement
-    undead = [n for n in q._RETIRED if n in q.QUERIES]
-    assert not undead, f"_RETIRED names still gated: {undead}"

@@ -1704,3 +1704,75 @@ def test_cdc_concurrent_applies_equal_sequential(spark, sf_dir, tmp_path):
     finally:
         con._release_lease("test")
     ev.unpersist()
+
+
+# ------------------------------------------------------ availableNow drains
+
+def _drop_dir_writer(spark, tmp_path, fn, name):
+    """A foreachBatch writer over a one-file JSON drop dir."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.json").write_text('{"x": 1}\n{"x": 2}\n')
+    writer = (spark.readStream.schema("x long").json(str(src))
+              .writeStream.foreachBatch(fn)
+              .option("checkpointLocation", str(tmp_path / "ckpt"))
+              .queryName(name))
+    return writer, str(src)
+
+
+def test_drain_times_out_loudly_and_stops_the_query(spark, tmp_path):
+    import time
+
+    from photon_spark.streaming.tuning import drain
+
+    writer, src = _drop_dir_writer(
+        spark, tmp_path, lambda _df, _bid: time.sleep(3), "slow_drain")
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(TimeoutError, match="slow_drain"):
+        drain(writer, spark, src, timeout_sec=1)
+    assert spark.streams.active == []
+    assert spark.conf.get(key) == before
+
+
+def test_drain_surfaces_a_failed_batch(spark, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from photon_spark.streaming.tuning import drain
+
+    def boom(_df, _bid):
+        raise ValueError("boom in foreachBatch")
+
+    writer, src = _drop_dir_writer(spark, tmp_path, boom, "failing_drain")
+    with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+        drain(writer, spark, src, timeout_sec=120)
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("name", ["projection_keyed_streaming_fold",
+                                  "cdc_stream_merge_state"])
+def test_drained_registry_rows_match_oracle(spark, sf_dir, name):
+    """The two registry rows built by a drain hash-match their DuckDB
+    oracles (the same comparison tools/check_correctness.py makes)."""
+    import duckdb
+
+    from photon_spark.queries import ORACLES, QUERIES
+    from tools.check_correctness import TABLES, value_hash
+
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            p = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(p):
+                con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        rel = con.sql(ORACLES[name])
+        drows = rel.fetchall()
+        dcols = [c.lower() for c in rel.columns]
+    finally:
+        con.close()
+    sdf = QUERIES[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = [c.lower() for c in sdf.columns]
+    assert sorted(scols) == sorted(dcols)
+    assert len(srows) == len(drows) > 0
+    assert value_hash(srows, scols) == value_hash(drows, dcols)

@@ -2,7 +2,7 @@
 isolation and capture their `.explain("formatted")` plans.
 
 Usage:
-  python tools/probe_query.py NAME [NAME...] [--plan-dir plans/r12 \
+  python tools/probe_query.py NAME [NAME...] [--plan-dir DIR \
       [--suffix before|after]] [--runs N] [--noop]
 
 Timing methodology matches bench.py (min of N runs of `.collect()`;
