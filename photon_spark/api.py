@@ -67,14 +67,11 @@ class PhotonAPI:
     # ------------------------------------------------------------ streams
     def streams(self) -> list[dict]:
         """E1 GET /streams: names + total events. Advances the
-        __streams__ projection to the current high-water mark first
-        (incremental — folds only events since its resume point), so the
-        endpoint never serves totals staled by ingests that happened
-        after the last advance."""
-        proj = self.engine.projection("__streams__")
-        if proj is not None and proj.status != "failed" \
-                and self.store._exists():
-            self.engine.advance("__streams__")
+        projections to the store's current version first (see
+        :meth:`_advance`), so the endpoint never serves totals staled by
+        ingests that happened after the last advance."""
+        if self.engine.projection("__streams__") is not None:
+            self._advance("__streams__")
         totals = self.engine.value("__streams__") or {}
         if not totals:
             rows = (self.store.read_all().groupBy("stream_name").count()
@@ -95,13 +92,19 @@ class PhotonAPI:
         return self.catalog.projections()
 
     def projection_value(self, name: str, query_key: str | None = None):
-        """E3 — advance to the current high-water mark, then read."""
-        proj = self.engine.projection(name)
-        if proj is None:
+        """E3 — advance to the store's current version, then read."""
+        if self.engine.projection(name) is None:
             return None
-        if proj.status != "failed":
-            self.engine.advance(name)
+        self._advance(name)
         return self.engine.value(name, query_key)
+
+    def _advance(self, name: str) -> None:
+        """Advance every projection from one delta read (none at all
+        while the store's version is unchanged); re-raise the error of
+        ``name``'s own reducer, if it raised."""
+        error = self.engine.advance_all().get(name)
+        if error is not None:
+            raise error
 
     def post_projection(self, name: str, reduction: str,
                         stream_name: str = ALL_STREAMS,

@@ -533,16 +533,26 @@ class EventStore:
         return n
 
     # ----------------------------------------------------------------- read
+    def version(self) -> tuple:
+        """(live data dir, stat stamp of every file under it). Any
+        mutation under the data dir — an append by any handle on this
+        path, a delete, a compaction — changes the stamp, and a
+        generation swap changes the dir; no Spark job. The arithmetic
+        :meth:`max_order_id` is no substitute: another handle's appends
+        do not move it."""
+        from photon_spark.relations import _stamp
+        data_dir = self._data_dir()
+        return data_dir, _stamp(data_dir)
+
     def read_all(self) -> DataFrame:
         if not self._exists():  # empty store reads as an empty relation
             return self.spark.createDataFrame([], EVENT_SCHEMA)
-        # Plan construction is stamp-keyed (relations.plan_memo): any
-        # mutation under the data dir (ingest, delete, compaction,
-        # generation swap) changes the stamp and rebuilds the plan with
-        # a fresh file listing; unchanged stores reuse the constructed
-        # plan and still scan the files on every action.
-        from photon_spark.relations import _stamp, plan_memo
-        data_dir = self._data_dir()
+        # Plan construction is keyed on the store version
+        # (relations.plan_memo): any mutation rebuilds the plan with a
+        # fresh file listing; an unchanged store reuses the constructed
+        # plan and still scans the files on every action.
+        from photon_spark.relations import plan_memo
+        data_dir, stamp = self.version()
 
         def build():
             df = self._read_opts(
@@ -554,7 +564,7 @@ class EventStore:
 
         return plan_memo(
             self.spark,
-            ("event_store_read", data_dir, self.fmt, _stamp(data_dir)),
+            ("event_store_read", data_dir, self.fmt, stamp),
             build)
 
     def read_cold(self, stream_name: str = ALL_STREAMS, from_: int = 0,
@@ -582,11 +592,14 @@ class EventStore:
         return df
 
     def event(self, stream_name: str, order_id: int):
-        """R4 point lookup → Row or None (streams.clj:322, api.clj:17-18)."""
-        return (self.read_all()
+        """R4 point lookup → Row or None (streams.clj:322, api.clj:17-18).
+        (stream, order_id) is unique, so a plain collect of the filtered
+        scan is one job, where ``first()`` runs take's incremental scan."""
+        rows = (self.read_all()
                 .where((F.col("stream_name") == stream_name)
                        & (F.col("order_id") == int(order_id)))
-                .first())
+                .collect())
+        return rows[0] if rows else None
 
     def streams(self) -> list[str]:
         """A8 distinct stream names (streams.clj:163-165)."""

@@ -22,20 +22,40 @@ Scale design — three reducer tiers (SURVEY.md §4 custom-work #1):
    photon's own tests exercise (count-folds, sum-folds).
 2. ``AssociativeReducer`` — user fold + user merge. A delta of at most one
    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) is
-   collected in one job and folded on the driver; a larger one folds
-   distributed over range-partitioned order_id spans, partials merged in
-   order on the driver. Driver memory is one Arrow batch or O(partitions).
+   folded on the driver; a larger one folds distributed over
+   range-partitioned order_id spans, partials merged in order on the
+   driver.
 3. ``PyReducer`` — arbitrary non-commutative ``f(state, event) → state``: a
    single total order fundamentally serializes (photon serializes too —
    parallel *across* projections, serial per projection,
-   streams.clj:410-420). The (column-pruned) delta is collected through
-   Arrow in one job and sorted and folded on the driver, so driver memory
-   grows with the delta: advance often, or use tier 1/2 for bulk replays.
+   streams.clj:410-420). Its (column-pruned) delta is sorted and folded on
+   the driver, so driver memory grows with the delta: advance often, or
+   use tier 1/2 for bulk replays.
+
+One fold for all projections (:meth:`ProjectionEngine._fold_df`): photon
+feeds each arriving event to every projection from one feed
+(streams.clj:125-145, :410-420), and so does the engine. One delta — a
+streaming micro-batch, or one store read from the lowest resume point —
+advances every projection: all native reducers in ONE aggregate, each
+over ``when(its stream AND order_id > its resume point)``; the
+associative and serial ones from ONE Arrow collect of the union of the
+rows and columns they read, each filtered on the driver. That collect
+stops past one Arrow batch unless it serves serial folds only, which need
+their whole delta anyway; past it, each tier takes its large-delta path
+above. The pull path records the store version
+(:meth:`EventStore.version`, the stat stamp the read plan is memoized
+on) each read was taken at, and a projection whose version is unchanged
+is not read for: a pull after an unchanged store runs no Spark job. A resume point is the higher of ``last_event`` and
+the order_id the last store read covered, so a projection whose stream
+gets no new events does not hold the read's lower bound at its old
+``last_event``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import pickle
 import time
 from dataclasses import dataclass, field
@@ -64,20 +84,9 @@ class NativeReducer:
     kind: str
     expr: str | None = None
 
-    _AGGS = {
-        "count": lambda c: F.count(F.lit(1)),
-        "sum": lambda c: F.sum(F.expr(c)),
-        "avg": lambda c: F.avg(F.expr(c)),
-        "min": lambda c: F.min(F.expr(c)),
-        "max": lambda c: F.max(F.expr(c)),
-        "count_distinct": lambda c: F.count_distinct(F.expr(c)),
-    }
-
-    def aggregate(self, df: DataFrame) -> Any:
-        if self.kind not in self._AGGS:
-            raise ValueError(f"unknown native reducer: {self.kind}")
-        row = df.agg(self._AGGS[self.kind](self.expr).alias("v")).first()
-        return row["v"]
+    #: kind → aggregate over the value column (``count`` counts rows)
+    _AGGS = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min,
+             "max": F.max, "count_distinct": F.count_distinct}
 
 
 @dataclass
@@ -147,6 +156,14 @@ class Projection:
     #: NULL-aware weight of the running native avg (count of non-null
     #: sampled values) — the merge weight, distinct from ``processed``
     native_weight: int = 0
+    #: order_id through which the last store read covered this
+    #: projection's stream (≥ last_event): a stream with no new events
+    #: moves it too, so an idle projection does not hold the next
+    #: read's lower bound down
+    scanned: int = 0
+    #: EventStore.version() the last store read was taken at; while the
+    #: store's version is unchanged there is nothing new to read
+    read_version: tuple | None = None
 
     def touch_global_time(self) -> None:
         """A2: avg-global-time = wall-clock per processed event
@@ -196,10 +213,11 @@ class ProjectionEngine:
     """Registry + batch fold executor over an EventStore.
 
     Batch mode folds everything currently persisted (photon's cold phase);
-    calling :meth:`advance` again folds only events newer than ``last_event``
-    — exactly photon's resume-from-last-event semantics
-    (streams.clj:255-259). The streaming wrapper
-    (photon_spark.streaming.stateful) drives the same fold per micro-batch.
+    calling :meth:`advance` or :meth:`advance_all` again folds only events
+    newer than each projection's resume point — photon's
+    resume-from-last-event semantics (streams.clj:255-259). The streaming
+    wrapper (photon_spark.streaming.stateful) drives the same fold per
+    micro-batch.
     """
 
     def __init__(self, store: EventStore | None = None):
@@ -217,7 +235,10 @@ class ProjectionEngine:
                           initial_value=initial_value,
                           current_value=initial_value)
         engine.registry[name] = proj
-        return engine._fold_df(proj, df)
+        errors = engine._fold_df([proj], df)
+        if errors:
+            raise errors[name]
+        return proj
 
     # ------------------------------------------------------------ registry
     def register(self, name: str, reducer: Reducer | str,
@@ -264,101 +285,192 @@ class ProjectionEngine:
     def advance(self, name: str, emit_states: bool = False) -> Projection:
         """Fold all events newer than the projection's resume point.
 
-        Returns the updated descriptor. With ``emit_states`` the successive
-        state values (the projection's *virtual stream*,
+        The one-projection case of :meth:`_fold_df`. Returns the updated
+        descriptor; a native or associative reducer that raises re-raises
+        here, its projection's state unchanged. With ``emit_states`` the
+        successive state values (the projection's *virtual stream*,
         streams.clj:182-200) are recorded on ``proj.emitted``.
         """
         proj = self.registry[name]
-        if proj.status == "failed":
-            return proj
-        df = self.store.read_cold(proj.stream_name, from_=proj.last_event + 1,
-                                  ordered=False)
-        return self._fold_df(proj, df, emit_states=emit_states)
+        errors = self._fold_df([proj], emit_states=emit_states)
+        if errors:
+            raise errors[name]
+        return proj
 
-    def _fold_df(self, proj: Projection, df: DataFrame,
-                 emit_states: bool = False) -> Projection:
-        reducer = proj.reducer
-        if isinstance(reducer, NativeReducer):
-            # 100 TB path: one Catalyst aggregate, no Python per event —
-            # bounds and the reducer value in a SINGLE pass. avg needs its
-            # own NULL-aware weight: F.avg skips NULL expr values, so the
-            # cross-batch merge must weight by count(expr), NOT by the row
-            # count (weighting by rows skews every avg the moment one
-            # sampled value is NULL).
-            if reducer.kind not in NativeReducer._AGGS:
-                raise ValueError(f"unknown native reducer: {reducer.kind}")
-            aggs = [F.count(F.lit(1)).alias("n"),
-                    F.max("order_id").alias("mx"),
-                    NativeReducer._AGGS[reducer.kind](reducer.expr)
-                    .alias("v")]
-            if reducer.kind == "avg":
-                aggs.append(F.count(F.expr(reducer.expr)).alias("w"))
+    def advance_all(self) -> dict[str, Exception]:
+        """Fold every running projection up to the store's current
+        version from one delta read. → ``{name: error}`` for projections
+        whose native or associative reducer raised: each keeps its last
+        good state and the others still advance (A3, streams.clj:84-97).
+        """
+        return self._fold_df(list(self.registry.values()))
+
+    def _fold_df(self, projs: list[Projection], df: DataFrame | None = None,
+                 emit_states: bool = False) -> dict[str, Exception]:
+        """Fold every running projection of ``projs`` from one delta.
+
+        ``df`` is the delta when given (a micro-batch, an ad-hoc frame).
+        Otherwise the store is read once, from the lowest resume point of
+        the projections whose recorded store version is stale; the others
+        are skipped, so a store whose version has not moved since the
+        last read costs no Spark job. Each projection folds only the rows
+        of its stream above its resume point: the native reducers in one
+        aggregate, the associative and serial ones from one collect.
+        → ``{name: error}`` of native and associative reducers that
+        raised (a serial reducer's error fails its projection instead).
+        """
+        projs = [p for p in projs if p.status != "failed"]
+        if emit_states:
+            for p in projs:
+                p.emitted = []  # type: ignore[attr-defined]
+        version = None
+        if df is None:
+            if not self.store._exists():
+                return {}
+            version = self.store.version()
+            projs = [p for p in projs if p.read_version != version]
+            if not projs:
+                return {}
+            df = self.store.read_all()
+            lo = min(_resume(p) for p in projs)
+            if lo:
+                df = df.where(F.col("order_id") > lo)
+            streams = {p.stream_name for p in projs}
+            if ALL_STREAMS not in streams:
+                df = df.where(F.col("stream_name").isin(sorted(streams)))
+        errors: dict[str, Exception] = {}
+        native = [p for p in projs if isinstance(p.reducer, NativeReducer)]
+        python = [p for p in projs
+                  if not isinstance(p.reducer, NativeReducer)]
+        # the highest order_id the read saw; every projection that folded
+        # has read all of its stream up to it, new events or none
+        top, counts = 0, None
+        if native:
+            top, counts = self._fold_native(native, python, df, errors,
+                                            emit_states)
+        if python:
+            top = max(top, self._fold_python(python, df, counts, errors,
+                                             emit_states))
+        if version is not None:
+            for p in projs:
+                if p.status != "failed" and p.projection_name not in errors:
+                    p.scanned = max(_resume(p), top)
+                    p.read_version = version
+        return errors
+
+    # -- tier 1: one Catalyst aggregate ----------------------------------
+    def _fold_native(self, projs: list[Projection], others: list[Projection],
+                     df: DataFrame, errors: dict, emit_states: bool):
+        """Every native reducer in ONE aggregate, no Python per event.
+
+        Each reducer reads ``when(its stream AND order_id > its resume
+        point)`` and brings its row count and max order_id. avg also
+        brings its NULL-aware weight: F.avg skips NULL values, so the
+        cross-batch merge must weight by count(expr), not by the row
+        count. The same aggregate counts the rows of each projection in
+        ``others``. → (the delta's max order_id or 0, {name: rows} of
+        ``others``); (0, None) when the aggregate failed: each reducer is
+        then evaluated alone, so the failure stays with its own
+        projection.
+        """
+        cols = df.columns
+        has_oid = "order_id" in cols
+        try:
+            aggs = [F.max("order_id").alias("top")] if has_oid else []
+            for i, p in enumerate(projs):
+                aggs += _native_aggs(p.reducer, i, _where(p, cols), has_oid)
+            aggs += [F.count(_only(_where(p, cols), F.lit(1))).alias(f"c{j}")
+                     for j, p in enumerate(others)]
             t0 = time.perf_counter()
-            bounds = df.agg(*aggs).first()
+            row = df.agg(*aggs).collect()[0].asDict()
             fold_ms = (time.perf_counter() - t0) * 1000.0
-            if bounds["n"]:
-                prev = proj.current_value
-                if reducer.kind == "avg":
-                    prev_w = proj.native_weight
-                    new_w = bounds["w"]
-                    if new_w:
-                        if prev is None or prev_w == 0:
-                            proj.current_value = bounds["v"]
-                        else:
-                            proj.current_value = (
-                                (prev * prev_w + bounds["v"] * new_w)
-                                / (prev_w + new_w))
-                    proj.native_weight = prev_w + new_w
-                else:
-                    proj.current_value = _combine_native(
-                        reducer.kind, prev, bounds["v"],
-                        proj.processed, bounds["n"])
-                proj.record_fold(bounds["n"], fold_ms, proj.current_value)
-                proj.last_event = bounds["mx"]
-                proj.touch_global_time()
+        except Exception as exc:
+            if len(projs) == 1:
+                errors[projs[0].projection_name] = exc
+            else:
+                for p in projs:
+                    self._fold_native([p], [], df, errors, emit_states)
+            return 0, None
+        for i, p in enumerate(projs):
+            n = row[f"n{i}"]
+            if not n:
+                continue
+            _merge_native(p, n, row[f"v{i}"], row.get(f"w{i}"))
+            p.record_fold(n, fold_ms, p.current_value)
+            p.last_event = row.get(f"mx{i}") or p.last_event
+            p.touch_global_time()
             if emit_states:
                 # per-event states only exist on the serial tier; the
-                # native tier's virtual stream is per-BATCH (one state per
-                # fold call) — emit that rather than silently ignoring the
-                # flag.
-                proj.emitted = ([proj.current_value] if bounds["n"]
-                                else [])  # type: ignore[attr-defined]
-            return proj
+                # native tier's virtual stream is per-BATCH (one state
+                # per fold call)
+                p.emitted = [p.current_value]  # type: ignore[attr-defined]
+        return (row.get("top") or 0,
+                {p.projection_name: row[f"c{j}"]
+                 for j, p in enumerate(others)})
 
-        if isinstance(reducer, AssociativeReducer):
-            before = proj.processed
-            proj = self._fold_associative(proj, df)
-            if emit_states:
-                proj.emitted = ([proj.current_value]  # type: ignore[attr-defined]
-                                if proj.processed != before else [])
-            return proj
+    # -- tiers 2 and 3: one collect, folds on the driver ------------------
+    def _fold_python(self, projs: list[Projection], df: DataFrame,
+                     counts: dict | None, errors: dict,
+                     emit_states: bool) -> int:
+        """Associative and serial projections from ONE Arrow collect of
+        the union of the rows and columns they read; each projection then
+        folds its own rows on the driver. An associative delta above one
+        Arrow batch folds distributed instead, so no associative
+        projection puts more than one Arrow batch on the driver.
 
-        return self._fold_serial(proj, df, emit_states=emit_states)
+        With the row ``counts`` of the native aggregate, the collect
+        takes every serial delta whole and each associative one of at
+        most one Arrow batch, and skips projections with no rows.
+        Without them it stops past one Arrow batch (``limit(cap + 1)``),
+        unless it serves serial folds only, which need their whole delta
+        anyway, so no limit adds a discarded collect; past one batch, the
+        serial folds collect their own rows whole. → the max order_id of
+        the collected rows, 0 when none.
+        """
+        cols = df.columns
+        where = {p.projection_name: _where(p, cols) for p in projs}
+        cap = _arrow_batch_rows(df)
+        serial = {p.projection_name for p in projs
+                  if isinstance(p.reducer, PyReducer)}
+        if counts is not None:
+            projs = [p for p in projs if counts[p.projection_name]]
+            driver = {p.projection_name for p in projs
+                      if p.projection_name in serial or not cap
+                      or counts[p.projection_name] <= cap}
+            pdf = _collect(df, projs, driver, where, 0)
+        else:
+            driver = {p.projection_name for p in projs}
+            pdf = _collect(df, projs, driver, where,
+                           0 if driver == serial else cap)
+            if pdf is None:
+                driver = serial
+                pdf = _collect(df, projs, driver, where, 0)
+        for p in projs:
+            name = p.projection_name
+            if name in serial:
+                rows = _own_rows(pdf, p, cols)
+                self._fold_serial(p, rows, cap or max(len(rows), 1),
+                                  emit_states)
+                continue
+            delta = _own_rows(pdf, p, cols) if name in driver else (
+                df if where[name] is None else df.where(where[name]))
+            try:
+                self._fold_associative(p, delta, emit_states)
+            except Exception as exc:
+                errors[name] = exc
+        if pdf is None or not len(pdf) or "order_id" not in pdf.columns:
+            return 0
+        return int(pdf["order_id"].max())
 
-    # -- tier 3: arbitrary ordered fold on the driver --------------------
-    def _fold_serial(self, proj: Projection, df: DataFrame,
+    def _fold_serial(self, proj: Projection, pdf, chunk: int,
                      emit_states: bool = False) -> Projection:
-        """Ordered fold of the whole delta on the driver.
-
-        One job collects the (column-pruned) delta through Arrow; the
-        driver sorts it by order_id (plan order when the frame has no
-        order_id) and folds it in Arrow-batch-sized chunks, so the
-        per-chunk dict conversion stays bounded. The collected delta
-        itself is held in driver memory — the same contract a serial
-        fold has under any plan, since a single total order ends in one
-        place.
+        """Tier 3: ordered fold of the collected, sorted delta ``pdf`` in
+        ``chunk``-row slices, so the per-slice dict conversion stays
+        bounded. The delta itself is held in driver memory — the same
+        contract a serial fold has under any plan, since a single total
+        order ends in one place.
         """
         reducer: PyReducer = proj.reducer  # type: ignore[assignment]
-        if reducer.columns is not None:
-            keep = list(dict.fromkeys(
-                [*reducer.columns,
-                 *(["order_id"] if "order_id" in df.columns else [])]))
-            df = df.select(*keep)
-        pdf = df.toPandas()
-        if "order_id" in pdf.columns:
-            pdf = pdf.sort_values("order_id", kind="stable",
-                                  ignore_index=True)
-        chunk = _arrow_batch_rows(df) or max(len(pdf), 1)
         emitted = [] if emit_states else None
         state = proj.current_value
         for start in range(0, len(pdf), chunk):
@@ -393,33 +505,143 @@ class ProjectionEngine:
             proj.emitted = emitted  # type: ignore[attr-defined]
         return proj
 
-    # -- tier 2: partial folds + ordered merge ----------------------------
-    def _fold_associative(self, proj: Projection, df: DataFrame) -> Projection:
-        """Fold the delta into partials and merge them, in order_id order,
-        into the current value. A delta of at most one Arrow batch is
-        collected (``limit(cap + 1)`` bounds driver memory when it is
-        larger) and folded on the driver as a single partial; a larger
-        one folds distributed, one partial per range partition, and also
-        pays for the discarded collect."""
+    def _fold_associative(self, proj: Projection, delta,
+                          emit_states: bool = False) -> Projection:
+        """Tier 2: fold the delta into partials and merge them, in
+        order_id order, into the current value. A collected (pandas)
+        delta folds on the driver as a single partial; a DataFrame delta
+        folds distributed, one partial per range partition. A raising
+        fold or merge leaves the projection untouched."""
         reducer: AssociativeReducer = proj.reducer  # type: ignore[assignment]
-        cap = _arrow_batch_rows(df)
-        parts = None
-        if cap:
-            pdf = df.limit(cap + 1).toPandas()
-            if len(pdf) <= cap:
-                parts = _fold_partials(reducer, pdf)
-        if parts is None:
-            parts = _fold_partials_distributed(reducer, df)
+        parts = (_fold_partials_distributed(reducer, delta)
+                 if isinstance(delta, DataFrame)
+                 else _fold_partials(reducer, delta))
         state = (proj.current_value if proj.current_value is not None
                  else reducer.zero)
         for p in parts:
             state = reducer.merge(state, p["state"])
+        before = proj.processed
         proj.record_fold(sum(p["n"] for p in parts),
                          sum(p["ms"] for p in parts), state)
         proj.last_event = max([proj.last_event, *(p["mx"] for p in parts)])
         proj.current_value = state
         proj.touch_global_time()
+        if emit_states and proj.processed != before:
+            proj.emitted = [state]  # type: ignore[attr-defined]
         return proj
+
+
+def _resume(proj: Projection) -> int:
+    """The order_id through which ``proj`` has folded or scanned."""
+    return max(proj.last_event, proj.scanned)
+
+
+def _bounds(proj: Projection, columns: list[str]) -> tuple[str | None, int]:
+    """(stream to keep or None, order_id to fold above or 0) of
+    ``proj``'s rows in a frame with ``columns``."""
+    stream = (proj.stream_name if proj.stream_name != ALL_STREAMS
+              and "stream_name" in columns else None)
+    return stream, (_resume(proj) if "order_id" in columns else 0)
+
+
+def _where(proj: Projection, columns: list[str]):
+    """``proj``'s rows as a Column predicate; None keeps every row."""
+    stream, resume = _bounds(proj, columns)
+    conds = ([F.col("stream_name") == stream] if stream is not None else []) \
+        + ([F.col("order_id") > resume] if resume else [])
+    return functools.reduce(operator.and_, conds) if conds else None
+
+
+def _only(where, col):
+    """``col`` on the rows ``where`` keeps, NULL elsewhere."""
+    return col if where is None else F.when(where, col)
+
+
+def _collect(df: DataFrame, projs: list[Projection], names: set,
+             where: dict, cap: int):
+    """Arrow collect of the union of the rows (``where`` by name) and
+    columns of the projections of ``projs`` named in ``names``, sorted
+    by order_id (plan order without one); None when it holds more than
+    ``cap`` rows (0: no bound) or no projection is named."""
+    projs = [p for p in projs if p.projection_name in names]
+    if not projs:
+        return None
+    conds = [where[p.projection_name] for p in projs]
+    q = df
+    if all(c is not None for c in conds):
+        q = q.where(functools.reduce(operator.or_, conds))
+    q = q.select(*_collect_columns(projs, df.columns))
+    pdf = (q.limit(cap + 1) if cap else q).toPandas()
+    if cap and len(pdf) > cap:
+        return None
+    if "order_id" in pdf.columns:
+        pdf = pdf.sort_values("order_id", kind="stable", ignore_index=True)
+    return pdf
+
+
+def _own_rows(pdf, proj: Projection, columns: list[str]):
+    """``proj``'s rows and columns of the collected union ``pdf``."""
+    stream, resume = _bounds(proj, columns)
+    if stream is not None:
+        pdf = pdf[pdf["stream_name"] == stream]
+    if resume:
+        pdf = pdf[pdf["order_id"] > resume]
+    keep = _reads(proj, columns)
+    return pdf if list(pdf.columns) == keep else pdf[keep]
+
+
+def _reads(proj: Projection, columns: list[str]) -> list[str]:
+    """The event columns ``proj``'s fold sees: a serial reducer's
+    ``columns`` hint (+ order_id), else all of them."""
+    hint = getattr(proj.reducer, "columns", None)
+    if hint is None:
+        return list(columns)
+    return list(dict.fromkeys(
+        [*hint, *(["order_id"] if "order_id" in columns else [])]))
+
+
+def _collect_columns(projs: list[Projection], columns: list[str]) -> list[str]:
+    """The union of the columns ``projs`` read, plus the ones that pick
+    each projection's rows on the driver."""
+    keys = ["order_id"] if "order_id" in columns else []
+    if any(_bounds(p, columns)[0] is not None for p in projs):
+        keys.append("stream_name")
+    want = {c for p in projs for c in _reads(p, columns)} | set(keys)
+    return [c for c in columns if c in want]
+
+
+def _native_aggs(reducer: NativeReducer, i: int, where, has_oid: bool):
+    """The aggregate columns of native reducer number ``i`` over the rows
+    ``where`` keeps: ``n{i}`` rows, ``v{i}`` value, ``mx{i}`` max
+    order_id, and for avg ``w{i}``, its non-NULL weight."""
+    if reducer.kind not in NativeReducer._AGGS:
+        raise ValueError(f"unknown native reducer: {reducer.kind}")
+
+    val = _only(where, F.lit(1) if reducer.kind == "count"
+                else F.expr(reducer.expr))
+    out = [F.count(_only(where, F.lit(1))).alias(f"n{i}"),
+           NativeReducer._AGGS[reducer.kind](val).alias(f"v{i}")]
+    if has_oid:
+        out.append(F.max(_only(where, F.col("order_id"))).alias(f"mx{i}"))
+    if reducer.kind == "avg":
+        out.append(F.count(val).alias(f"w{i}"))
+    return out
+
+
+def _merge_native(proj: Projection, n: int, value: Any, weight: Any) -> None:
+    """Merge a delta's native aggregate (``n`` rows, ``value``, avg's
+    non-NULL ``weight``) into ``proj``'s running value."""
+    prev = proj.current_value
+    if proj.reducer.kind != "avg":  # type: ignore[union-attr]
+        proj.current_value = _combine_native(
+            proj.reducer.kind, prev, value, proj.processed, n)  # type: ignore[union-attr]
+        return
+    if weight:
+        prev_w = proj.native_weight
+        proj.current_value = (value if prev is None or prev_w == 0 else
+                              (prev * prev_w + value * weight)
+                              / (prev_w + weight))
+        proj.native_weight = prev_w + weight
 
 
 def _arrow_batch_rows(df: DataFrame) -> int:
@@ -452,10 +674,8 @@ def _ordered_fold(fold, zero):
 
 
 def _fold_partials(reducer: AssociativeReducer, pdf) -> list[dict]:
-    """One partial from ``zero`` over the collected delta ``pdf``, sorted
-    by order_id on the driver (plan order without one)."""
-    if "order_id" in pdf.columns:
-        pdf = pdf.sort_values("order_id", kind="stable", ignore_index=True)
+    """One partial from ``zero`` over the collected delta ``pdf``,
+    already in order_id order."""
     state, _, mx, n, ms = _ordered_fold(reducer.fold, reducer.zero)([pdf])
     return [{"n": n, "mx": mx, "ms": ms, "state": state}] if n else []
 
@@ -500,7 +720,7 @@ def _combine_native(kind: str, prev: Any, new: Any, prev_n: int, new_n: int) -> 
         return prev
     if kind in ("count", "sum"):
         return prev + new
-    if kind == "avg":  # pragma: no cover - handled NULL-aware in _fold_df
+    if kind == "avg":  # pragma: no cover - handled NULL-aware in _merge_native
         raise AssertionError("avg merges via proj.native_weight")
     if kind == "min":
         return min(prev, new)

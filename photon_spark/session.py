@@ -14,15 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "photon_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with photon_spark defaults.
 
-    Defaults honour the driver environment: ``SPARK_GRAFT_CPUS`` sets the
-    local core count, shuffle partitions default to the core count (AQE
-    coalesces further at runtime).
+    ``master`` defaults to ``local[default_cpus()]`` and shuffle
+    partitions to the same core count (AQE coalesces further at
+    runtime).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

@@ -25,13 +25,14 @@ micro-batches: one ingest's files are hash-partitioned by stream and may
 split across triggers out of order. Use it only for hot-only tails where
 each trigger's files come from distinct ingest calls.
 
-Scale notes: the per-batch work is ``ProjectionEngine._fold_df`` — native
-reducers stay Catalyst aggregates (distributed, no Python); an associative
-reducer folds a batch of at most one Arrow batch of rows on the driver in
-one job and larger batches distributed; the PyReducer tier collects the
-batch through Arrow and folds it driver-side, so the driver holds each
-micro-batch (photon is likewise serial per projection, parallel across
-projections, streams.clj:410-420).
+Scale notes: each micro-batch is one delta of
+``ProjectionEngine._fold_df``, the same fold the pull path runs — all
+native reducers in one Catalyst aggregate (distributed, no Python), the
+associative and serial reducers folded on the driver from one Arrow
+collect of the batch, an associative share above one Arrow batch folded
+distributed. The driver holds the collected batch (photon is likewise
+serial per projection, parallel across projections,
+streams.clj:410-420).
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ import time
 
 from pyspark.sql import functions as F
 
-from photon_spark.events import ALL_STREAMS
 from photon_spark.projections.engine import ProjectionEngine
 from photon_spark.streaming.replay import read_hot_cold
 from photon_spark.streaming.tuning import drain, start
@@ -179,12 +179,11 @@ class StreamingProjectionRunner:
     def _apply_batch(self, batch_df, batch_id: int) -> None:
         """Fold one micro-batch into every running projection.
 
-        Per projection: filter to its stream, drop anything at or below its
-        resume point (no-dup on restart replay), then reuse the engine's
-        tiered fold — each tier establishes order_id order itself (the
-        driver folds sort the collected rows, the distributed associative
-        fold range-partitions + sorts; native aggregates are order-free),
-        so no extra sort here.
+        The batch is the delta of the engine's one fold entry point
+        (``ProjectionEngine._fold_df``): each projection folds only the
+        rows of its stream above its resume point (no-dup on restart
+        replay), all native reducers in one aggregate and the Python
+        tiers from one collect, each tier in order_id order.
         """
         import json
 
@@ -202,30 +201,28 @@ class StreamingProjectionRunner:
                 "silently drop events; stop multi-writer ingest on this "
                 "store or rebuild projections from a cold replay")
 
+        running = list(self.engine.registry.items())
+        before = {name: proj.processed for name, proj in running}
+        errors = self.engine._fold_df([proj for _, proj in running],
+                                      batch_df)
         snaps = []
-        batch_df = batch_df.persist()
-        try:
-            for name, proj in list(self.engine.registry.items()):
-                if proj.status == "failed":
-                    continue
-                df = batch_df
-                if proj.stream_name != ALL_STREAMS:
-                    df = df.where(F.col("stream_name") == proj.stream_name)
-                df = df.where(F.col("order_id") > proj.last_event)
-                before = proj.processed
-                self.engine._fold_df(proj, df)
-                if proj.processed != before:
-                    self.history.append((batch_id, name, proj.current_value))
-                    try:
-                        value_json = json.dumps(proj.current_value)
-                    except (TypeError, ValueError):
-                        value_json = json.dumps(repr(proj.current_value))
-                    snaps.append((int(batch_id), name, proj.stream_name,
-                                  proj.processed, proj.last_event,
-                                  proj.status, value_json))
-        finally:
-            batch_df.unpersist()
+        for name, proj in running:
+            if proj.processed == before[name]:
+                continue
+            self.history.append((batch_id, name, proj.current_value))
+            try:
+                value_json = json.dumps(proj.current_value)
+            except (TypeError, ValueError):
+                value_json = json.dumps(repr(proj.current_value))
+            snaps.append((int(batch_id), name, proj.stream_name,
+                          proj.processed, proj.last_event,
+                          proj.status, value_json))
+        # the projections that did fold keep their snapshots; a raising
+        # reducer then fails the batch (replayed without double folds:
+        # each projection skips rows at or below its resume point)
         self._persist_snapshots(snaps, batch_id)
+        if errors:
+            raise next(iter(errors.values()))
         self.batches += 1
 
     # ----------------------------------------------------------------- run

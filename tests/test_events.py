@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from photon_spark.events import EventStore
+from photon_spark.streaming.tuning import drain
 
 CHATTER = {
     "id": "dbd6eecf-8f5c-42aa-8aa8-1b2172d53c71",
@@ -259,10 +260,10 @@ def test_pluggable_backend_formats(spark, tmp_path):
         assert st.compact() == 2, fmt  # one file per stream partition
 
         # streaming replay over the same backend
-        q = (read_hot_cold(st).groupBy().count()
+        w = (read_hot_cold(st).groupBy().count()
              .writeStream.format("memory").queryName(f"bk_{fmt}")
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+             .outputMode("complete"))
+        drain(w, spark, timeout_sec=120)
         assert spark.sql(f"SELECT * FROM bk_{fmt}").first()["count"] == 16, fmt
 
 

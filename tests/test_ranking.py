@@ -6,6 +6,7 @@ import math
 from pyspark.sql import functions as F
 
 from photon_spark import queries_ranking as qr
+from photon_spark.streaming.tuning import drain
 
 
 def _plan(df) -> str:
@@ -234,13 +235,12 @@ def test_decay_counts_streaming_maintenance(spark, sf_dir, tmp_path):
         pdf = new.toPandas()
         s.createDataFrame(pdf).write.mode("overwrite").parquet(state)
 
-    q = (spark.readStream.schema(ev_raw.schema)
+    w = (spark.readStream.schema(ev_raw.schema)
          .option("maxFilesPerTrigger", 1)
          .parquet(str(drop))
          .writeStream.foreachBatch(apply_batch)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+         .option("checkpointLocation", str(tmp_path / "ckpt")))
+    drain(w, spark, timeout_sec=120)
 
     got = {r["event_type"]: (r["n_events"], r["decayed_units"])
            for r in qr.decay_summary_from_counts(

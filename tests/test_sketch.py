@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from photon_spark.functions import sketches
 from photon_spark.functions.text import tokens
+from photon_spark.streaming.tuning import drain
 
 
 @pytest.fixture(scope="module")
@@ -192,13 +193,12 @@ def test_hll_streaming_foreachbatch_maintenance(spark, sf_dir, tmp_path):
         batch_df.sparkSession.createDataFrame(pdf) \
             .write.mode("overwrite").parquet(state)
 
-    q = (spark.readStream.schema(docs.schema)
+    w = (spark.readStream.schema(docs.schema)
          .option("maxFilesPerTrigger", 1)
          .parquet(str(drop))
          .writeStream.foreachBatch(apply_batch)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+         .option("checkpointLocation", str(tmp_path / "ckpt")))
+    drain(w, spark, timeout_sec=120)
 
     got = spark.read.parquet(state)
     toks_all = (docs.select("source",

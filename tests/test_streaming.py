@@ -18,6 +18,7 @@ from photon_spark.projections.engine import (
     NativeReducer, ProjectionEngine, PyReducer)
 from photon_spark.streaming import (
     StreamingIngest, StreamingProjectionRunner, read_hot_cold)
+from photon_spark.streaming.tuning import drain
 
 
 def _mk_store(spark, tmp_path, name="events"):
@@ -339,11 +340,11 @@ def test_windowed_agg_stream_matches_batch(spark, sf_dir):
            .withWatermark("etime", "1 hour")
            .groupBy(F.window("etime", "1 hour").alias("w"), "event_type")
            .agg(F.count(F.lit(1)).alias("n_events")))
-    q = (agg.select((F.unix_timestamp("w.start") * F.lit(1_000_000_000))
+    w = (agg.select((F.unix_timestamp("w.start") * F.lit(1_000_000_000))
                     .alias("window_start_ns"), "event_type", "n_events")
          .writeStream.format("memory").queryName("win_agg")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=300)
     got = {(r["window_start_ns"], r["event_type"]): r["n_events"]
            for r in spark.sql("select * from win_agg").collect()}
 
@@ -371,11 +372,11 @@ def test_sliding_window_stream_matches_batch(spark, sf_dir):
            .groupBy(F.window("etime", "1 hour", "15 minutes").alias("w"),
                     "event_type")
            .agg(F.count(F.lit(1)).alias("n_events")))
-    q = (agg.select((F.unix_timestamp("w.start") * F.lit(1_000_000_000))
+    w = (agg.select((F.unix_timestamp("w.start") * F.lit(1_000_000_000))
                     .alias("window_start_ns"), "event_type", "n_events")
          .writeStream.format("memory").queryName("slide_agg")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=300)
     got = {(r["window_start_ns"], r["event_type"]): r["n_events"]
            for r in spark.sql("select * from slide_agg").collect()}
 
@@ -401,14 +402,14 @@ def test_session_window_stream_matches_batch_sessionize(spark, sf_dir):
     from photon_spark.queries import _t
 
     gap_s = 24 * 3600
-    q = (_events_stream(spark, sf_dir)
+    w = (_events_stream(spark, sf_dir)
          .withWatermark("etime", "0 seconds")
          .groupBy(F.session_window("etime", f"{gap_s} seconds").alias("w"),
                   "event_type", "user_id")
          .agg(F.count(F.lit(1)).alias("n_events"))
          .writeStream.format("memory").queryName("sess_win")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=300)
     stream = {(r["event_type"], r["user_id"],
                int(r["w"]["start"].timestamp())): r["n_events"]
               for r in spark.sql("select * from sess_win").collect()}
@@ -453,11 +454,11 @@ def test_keyed_stateful_fold_resumes_from_state_store(spark, tmp_path):
             for r in bdf.collect():
                 got[r["stream_name"]] = (r["n_events"], r["sum_local"])
 
-        q = (keyed_running_totals(read_hot_cold(store))
+        w = (keyed_running_totals(read_hot_cold(store))
              .writeStream.foreachBatch(sink)
              .option("checkpointLocation", ckpt)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
+             .outputMode("update"))
+        drain(w, spark, timeout_sec=300)
         return got
 
     first = run_once("keyed1")
@@ -500,10 +501,10 @@ def test_streaming_dedup_within_watermark_matches_batch(spark, sf_dir):
              .withColumn("vc", F.round(F.col("value") * 100).cast("long"))
              .withWatermark("etime", "1 hour")
              .dropDuplicatesWithinWatermark(["user_id", "event_type", "vc"]))
-    q = (keyed.select("user_id", "event_type", "vc")
+    w = (keyed.select("user_id", "event_type", "vc")
          .writeStream.format("memory").queryName("stream_dedup")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=300)
     got = spark.sql(
         "select user_id, event_type, vc from stream_dedup").collect()
 
@@ -558,11 +559,11 @@ def test_keyed_fold_via_transform_with_state(spark, tmp_path):
         for r in bdf.collect():
             got[r["stream_name"]] = (r["n_events"], r["sum_local"])
 
-    q = (keyed_running_totals(read_hot_cold(store))
+    w = (keyed_running_totals(read_hot_cold(store))
          .writeStream.foreachBatch(sink)
          .option("checkpointLocation", os.path.join(str(tmp_path), "ck"))
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
+         .outputMode("update"))
+    drain(w, spark, timeout_sec=300)
     assert got == {"a": (8, sum(range(8)))}
 
 
@@ -606,11 +607,10 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
         got.update((r["view_id"], r["buy_id"])
                    for r in bdf.select("view_id", "buy_id").collect())
 
-    q = (sv.join(sp, F.expr(cond))
+    w = (sv.join(sp, F.expr(cond))
          .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+         .option("checkpointLocation", str(tmp_path / "ck")))
+    drain(w, spark, timeout_sec=300)
     assert got == batch
 
 
@@ -709,11 +709,10 @@ def test_hot_cold_from_bound_matches_batch_coercion(spark, tmp_path):
     def sink(bdf, _bid):
         got.update(r["order_id"] for r in bdf.collect())
 
-    q = (read_hot_cold(store, from_=cut_ms)
+    w = (read_hot_cold(store, from_=cut_ms)
          .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", os.path.join(str(tmp_path), "c2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+         .option("checkpointLocation", os.path.join(str(tmp_path), "c2")))
+    drain(w, spark, timeout_sec=300)
     assert got == batch_ids
     assert len(got) < 6  # the bound actually filtered something
 
@@ -849,11 +848,10 @@ def test_cdc_merge_foreach_batch_stream_equals_batch(spark, sf_dir,
     t = CdcMergeTable(spark, str(tmp_path / "stream"), keys, order)
     stream = spark.readStream.schema(raw).option("maxFilesPerTrigger", 1) \
         .parquet(f"{sf_dir}/events.par*")
-    q = (stream.writeStream
+    w = (stream.writeStream
          .foreachBatch(lambda df, bid: t.foreach_batch()(shape(df), bid))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+         .option("checkpointLocation", str(tmp_path / "ckpt")))
+    drain(w, spark, timeout_sec=120)
 
     ref = CdcMergeTable(spark, str(tmp_path / "batch"), keys, order)
     ref.apply_batch(shape(spark.read.parquet(f"{sf_dir}/events.parquet")), 0)
@@ -1318,11 +1316,10 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, sf_dir,
         got.update((r["view_id"], r["buy_id"])
                    for r in bdf.select("view_id", "buy_id").collect())
 
-    q = (sv.join(sp, F.expr(cond), "leftOuter")
+    w = (sv.join(sp, F.expr(cond), "leftOuter")
          .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+         .option("checkpointLocation", str(tmp_path / "ck")))
+    drain(w, spark, timeout_sec=300)
     got = {(v, b) for v, b in got if v != -1}
     assert got == batch
 
@@ -1723,7 +1720,6 @@ def _drop_dir_writer(spark, tmp_path, fn, name):
 def test_drain_times_out_loudly_and_stops_the_query(spark, tmp_path):
     import time
 
-    from photon_spark.streaming.tuning import drain
 
     writer, src = _drop_dir_writer(
         spark, tmp_path, lambda _df, _bid: time.sleep(3), "slow_drain")
@@ -1738,7 +1734,6 @@ def test_drain_times_out_loudly_and_stops_the_query(spark, tmp_path):
 def test_drain_surfaces_a_failed_batch(spark, tmp_path):
     from pyspark.errors import StreamingQueryException
 
-    from photon_spark.streaming.tuning import drain
 
     def boom(_df, _bid):
         raise ValueError("boom in foreachBatch")

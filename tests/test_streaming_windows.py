@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from photon_spark.streaming.tuning import drain
 from photon_spark.streaming.windows import session_agg, windowed_agg
 
 BASE = 1_700_000_000  # epoch seconds, aligned enough for hour windows
@@ -89,9 +90,9 @@ def test_streaming_windowed_agg_drops_late_rows(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)
               .parquet(src + "/*"))
     agg = windowed_agg(stream, window="1 hour", watermark="10 minutes")
-    q = (agg.writeStream.format("memory").queryName("winlate")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    w = (agg.writeStream.format("memory").queryName("winlate")
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=120)
     rows = spark.sql("SELECT * FROM winlate").collect()
     h0 = BASE - BASE % 3600
     hour_h = [r for r in rows
@@ -113,9 +114,9 @@ def test_streaming_session_agg_runs(spark, tmp_path):
               .schema("event_time timestamp, stream_name string")
               .parquet(src + "/*"))
     agg = session_agg(stream, gap="30 minutes", watermark="1 minute")
-    q = (agg.writeStream.format("memory").queryName("sess")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    w = (agg.writeStream.format("memory").queryName("sess")
+         .outputMode("complete"))
+    drain(w, spark, timeout_sec=120)
     rows = spark.sql("SELECT * FROM sess").collect()
     assert sorted(r["n_events"] for r in rows) == [1, 2]
 
@@ -165,9 +166,9 @@ def test_streaming_session_agg_equals_batch_on_closed_sessions(
               .option("maxFilesPerTrigger", 1)
               .parquet(src + "/*"))
     agg = session_agg(stream, gap="30 minutes", watermark="1 hour")
-    q = (agg.writeStream.format("memory").queryName("sess_eq")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    w = (agg.writeStream.format("memory").queryName("sess_eq")
+         .outputMode("append"))
+    drain(w, spark, timeout_sec=120)
     got = {(r["stream_name"], r["session_start"], r["session_end"],
             r["n_events"])
            for r in spark.sql("SELECT * FROM sess_eq").collect()
@@ -371,11 +372,10 @@ def test_stream_stream_join_tight_watermark_is_subset(spark, sf_dir,
                 & (F.col("pb") == F.col("cb"))
                 & (F.col("cns") >= F.col("pns") - F.lit(RANGE_NS))
                 & (F.col("cns") <= F.col("pns")))
-    q = (j.select("purchase_id", "user_id", "click_id")
+    w = (j.select("purchase_id", "user_id", "click_id")
           .writeStream.format("memory").queryName("ssj_tight")
-          .option("checkpointLocation", os.path.join(str(tmp_path), "ck"))
-          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+          .option("checkpointLocation", os.path.join(str(tmp_path), "ck")))
+    drain(w, spark, timeout_sec=300)
     rows = spark.sql("select * from ssj_tight").collect()
 
     # no invented matches, no duplicates

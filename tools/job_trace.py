@@ -91,8 +91,8 @@ def main():
     @F.pandas_udf("long")
     def _warm(s: pd.Series) -> pd.Series:
         return s
-    warm_df = spark.range(10000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    from photon_spark.session import default_cpus
+    warm_df = spark.range(10000).repartition(default_cpus())
     warm_df.select(_warm("id")).count()
 
     from photon_spark import queries as q

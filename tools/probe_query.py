@@ -36,7 +36,7 @@ def main():
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from photon_spark.session import get_spark
+    from photon_spark.session import default_cpus, get_spark
     from photon_spark import queries as q
 
     spark = get_spark("photon_spark-probe")
@@ -47,8 +47,7 @@ def main():
     @F.pandas_udf("long")
     def _warm(s: pd.Series) -> pd.Series:
         return s
-    warm_df = spark.range(10000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    warm_df = spark.range(10000).repartition(default_cpus())
     warm_df.select(_warm("id")).count()
     warm_df.mapInPandas(lambda it: it, schema="id long").count()
 
