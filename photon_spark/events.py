@@ -25,9 +25,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from photon_spark import generations
 
 ALL_STREAMS = "__all__"
 CONFIG_STREAM = "__config__"
@@ -107,8 +109,8 @@ def _slot_order_id(slot: int, lo: int, width: int) -> int:
     return (slot // width) * 1000 + lo + slot % width
 
 
-def stamp_events(df: DataFrame, base_order_id: int = 0,
-                 partition_offsets: dict[int, int] | None = None,
+def stamp_events(df: DataFrame, base_order_id: int,
+                 partition_offsets: dict[int, int],
                  now_ms: int | None = None, writer_id: int = 0,
                  n_writers: int = 1) -> DataFrame:
     """Assign ``event_time`` + monotonic unique ``order_id`` to a batch.
@@ -132,13 +134,11 @@ def stamp_events(df: DataFrame, base_order_id: int = 0,
     writer owning the whole 0..999 range) reproduces the single-writer
     formula bit-for-bit.
 
-    Sequence assignment: with ``partition_offsets`` (cumulative row offsets
-    per input partition id, as :meth:`EventStore.ingest` computes from one
-    counting pass over the cached batch) the global sequence is
-    per-partition row_number + offset — fully parallel, the scale path. A
-    global dense sequence fundamentally needs that one counting pass;
-    without offsets we fall back to a single-partition window (fine for
-    small ad-hoc batches only).
+    Sequence assignment: ``partition_offsets`` holds the cumulative row
+    offsets per input partition id, as :meth:`EventStore.ingest` computes
+    from one counting pass over the cached batch; the global sequence is
+    per-partition row_number + offset — fully parallel. A global dense
+    sequence fundamentally needs that one counting pass.
     """
     # One driver-evaluated server timestamp per batch (photon stamps the
     # server clock too, streams.clj:296). A LITERAL rather than
@@ -149,19 +149,14 @@ def stamp_events(df: DataFrame, base_order_id: int = 0,
     if now_ms is None:
         now_ms = int(time.time() * 1000)
     df = df.withColumn("event_time", F.timestamp_millis(F.lit(now_ms)))
-    if partition_offsets is not None:
-        # monotonically_increasing_id = (partitionId << 33) | row-in-
-        # partition with consecutive row numbers, so the global sequence is
-        # pure projection arithmetic: partition offset + low 33 bits. No
-        # window, no sort, no shuffle — the stamp stays map-side.
-        off = F.create_map(*[F.lit(x) for pid in sorted(partition_offsets)
-                             for x in (pid, partition_offsets[pid])])
-        mono = F.monotonically_increasing_id()
-        seq = off[F.spark_partition_id()] \
-            + mono.bitwiseAND(F.lit((1 << 33) - 1))
-    else:
-        w = Window.orderBy(F.monotonically_increasing_id())
-        seq = F.row_number().over(w).cast("long") - F.lit(1)
+    # monotonically_increasing_id = (partitionId << 33) | row-in-partition
+    # with consecutive row numbers, so the global sequence is pure
+    # projection arithmetic: partition offset + low 33 bits. No window, no
+    # sort, no shuffle — the stamp stays map-side.
+    off = F.create_map(*[F.lit(x) for pid in sorted(partition_offsets)
+                         for x in (pid, partition_offsets[pid])])
+    mono = F.monotonically_increasing_id()
+    seq = off[F.spark_partition_id()] + mono.bitwiseAND(F.lit((1 << 33) - 1))
     start, lo, width = _writer_start_slot(base_order_id, now_ms,
                                           writer_id, n_writers)
     # integer `div`, not `/`: slots reach ~1.8e15 (ms × width), where
@@ -313,93 +308,15 @@ class EventStore:
         return df
 
     # ------------------------------------------------------ generations
-    # The rewrite paths (delete/expire/compact/clean) commit via a
-    # GENERATION POINTER, not directory renames: new data is written to
-    # a fresh nonce-unique ``gen=<k+1>-<nonce>`` directory and
-    # ``_generation`` (one small file — the atomic-PUT primitive every
-    # object store has) is swapped to point at it BY NAME; the old
-    # generation is then best-effort deleted. A crash at any point
-    # leaves either the old pointer (old data fully intact) or the new
-    # pointer (new data fully written first) — never a half-table, and
-    # never a POSIX ``os.rename`` of a data directory, which S3/GCS
-    # cannot do (the same protocol CdcMergeTable adopted). The nonce
-    # makes coordination-free CONCURRENT maintenance safe too: two
-    # rewrites racing to ordinal k+1 write disjoint dirs and the
-    # pointer swap commits exactly one whole one — files can never
-    # interleave (the pre-nonce protocol had both writing mode=
-    # overwrite into the same ``gen=k+1``). Generation 0 is the store
-    # root itself and a bare-ordinal pointer still resolves to
-    # ``gen=<k>``, so stores written before this protocol read
-    # unchanged.
-    _GEN_FILE = "_generation"
-
-    def _gen_pointer(self) -> tuple[int, str]:
-        """(ordinal, directory name) of the live generation; name ``""``
-        means the store root (generation 0). The pointer file holds
-        either a legacy bare ordinal ``k`` (directory ``gen=k``) or the
-        FULL directory name ``gen=<k>-<nonce>``: rewrites give every
-        target generation a nonce-unique directory, so two concurrent
-        maintainers computing the same next ordinal write to DISJOINT
-        dirs and the pointer swap picks exactly one whole directory —
-        the loser's files can never interleave into the committed
-        generation (they become an inert orphan dir the next rewrite's
-        winner, or an operator sweep, may delete; it is never read,
-        because reads only ever follow the pointer)."""
-        gf = os.path.join(self.path, self._GEN_FILE)
-        if not os.path.exists(gf):
-            return 0, ""
-        with open(gf) as f:
-            s = f.read().strip()
-        if not s:
-            return 0, ""
-        try:
-            g = int(s)
-            return g, ("" if g == 0 else f"gen={g}")
-        except ValueError:
-            ordinal = int(s.split("=", 1)[1].split("-", 1)[0])
-            return ordinal, s
-
-    def _generation(self) -> int:
-        return self._gen_pointer()[0]
-
+    # The rewrite paths (delete/expire/compact/clean) commit through the
+    # generation pointer (photon_spark.generations): survivors are
+    # written to a fresh nonce-unique ``gen=<k+1>-<nonce>`` directory,
+    # the one-file pointer is swapped to it, and every other generation
+    # is swept. Generation 0 is the store root itself. Two rewrites
+    # racing to ordinal k+1 write disjoint dirs; the first commit wins
+    # and the second raises instead of publishing over it.
     def _data_dir(self) -> str:
-        name = self._gen_pointer()[1]
-        return self.path if not name else os.path.join(self.path, name)
-
-    def _new_gen_name(self, ordinal: int) -> str:
-        import uuid
-        return f"gen={int(ordinal)}-{uuid.uuid4().hex[:12]}"
-
-    def _set_generation(self, name: str) -> None:
-        """Commit a generation by name (``""`` = the root). One atomic
-        small-file replace — the object-store PUT primitive."""
-        os.makedirs(self.path, exist_ok=True)
-        gf = os.path.join(self.path, self._GEN_FILE)
-        tmp = gf + f".tmp{self.writer_id}"
-        with open(tmp, "w") as f:
-            f.write(name or "0")
-        os.replace(tmp, gf)
-
-    def _gc_generation(self, name: str) -> None:
-        """Best-effort delete of a superseded generation (by directory
-        name; ``""`` sweeps the root files). Root-level markers
-        (``_multi_writer``, ``_generation``) and live ``gen=`` dirs
-        survive a generation-0 sweep — which also fixes the old rename
-        protocol silently erasing the multi-writer marker on every
-        rewrite."""
-        import shutil
-        if not name:
-            if not os.path.isdir(self.path):
-                return
-            for n in os.listdir(self.path):
-                if n.startswith(("gen=", "_", ".")):
-                    continue
-                full = os.path.join(self.path, n)
-                (shutil.rmtree if os.path.isdir(full)
-                 else os.remove)(full)
-        else:
-            shutil.rmtree(os.path.join(self.path, name),
-                          ignore_errors=True)
+        return generations.data_dir(self.path)
 
     # ---------------------------------------------------------------- write
     def _exists(self) -> bool:
@@ -614,24 +531,20 @@ class EventStore:
         ``DELETE WHERE`` (partition drop for whole streams — SURVEY.md §2.5
         deliberately does NOT reproduce the reference's delete-in-a-loop,
         api.clj:131-147). Commit = write the survivors to the NEXT
-        generation directory, swap the one-file generation pointer
-        (atomic PUT), then best-effort delete the old generation — no
-        data-directory rename anywhere, so the protocol runs unchanged
-        on an object store (see the generations section above).
+        generation directory, then :func:`generations.commit` swaps the
+        one-file pointer (atomic PUT) and sweeps the other generations —
+        no data-directory rename anywhere, so the protocol runs
+        unchanged on an object store.
         """
-        old_ord, old_name = self._gen_pointer()
-        # nonce-unique target: concurrent rewrites racing to ordinal+1
-        # each own a private dir, so the pointer swap commits exactly
-        # one WHOLE generation (the loser's dir is orphaned, never read)
-        new_name = self._new_gen_name(old_ord + 1)
+        old_ord, old_name = generations.live(self.path)
+        new_name = generations.next_name(old_ord + 1)
         (self._write_opts(
             self._encode(self.read_all().where(keep_predicate))
             .repartition("stream_name")
             .sortWithinPartitions("stream_name", "order_id")
             .write.mode("overwrite").partitionBy("stream_name"))
          .save(os.path.join(self.path, new_name)))
-        self._set_generation(new_name)
-        self._gc_generation(old_name)
+        generations.commit(self.path, new_name, old_name)
         self._max_oid = None
 
     def delete_event(self, stream_name: str, order_id: int) -> None:
@@ -650,9 +563,9 @@ class EventStore:
         multi-writer fact) survive, as "ever" semantics require."""
         if not os.path.isdir(self.path):
             return
-        old_ord, old_name = self._gen_pointer()
-        self._set_generation(self._new_gen_name(old_ord + 1))
-        self._gc_generation(old_name)
+        old_ord, old_name = generations.live(self.path)
+        generations.commit(self.path, generations.next_name(old_ord + 1),
+                           old_name)
         self._max_oid = None
 
     # ---------------------------------------------------------- maintenance
@@ -682,10 +595,12 @@ class EventStore:
         OPTIMIZE/compaction maintenance op of a Delta/Iceberg table.
 
         NOT safe under an active file-source subscription (R2/R3): the
-        Structured Streaming file source tracks seen FILES, so a rewrite
-        re-delivers every event as new files. Run between streaming
-        sessions (fresh checkpoint), or use a transactional table format
-        where OPTIMIZE preserves streaming offsets.
+        rewrite writes a new ``gen=`` directory under the root the file
+        source lists, so the stream's next micro-batch fails with
+        ``CONFLICTING_PARTITION_COLUMN_NAMES`` and the query dies. Run
+        between streaming sessions (fresh checkpoint), or use a
+        transactional table format where OPTIMIZE preserves streaming
+        offsets.
         """
         self._rewrite(F.lit(True))
         ext = self._EXT[self.fmt]

@@ -47,19 +47,6 @@ def release_cache(df: DataFrame) -> None:
 
 # --------------------------------------------------------------------- exact
 
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Groups of exact duplicates (after whitespace/case normalization):
-    one row per duplicated fingerprint with group size and the keeper
-    (min id). Only the digest + id shuffle."""
-    return (df.select(F.md5(normalize_text(text_col)).alias("fingerprint"),
-                      F.col(id_col))
-              .groupBy("fingerprint")
-              .agg(F.count(F.lit(1)).alias("n_dups"),
-                   F.min(id_col).alias("keep_id"))
-              .where(F.col("n_dups") > 1))
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id document per normalized-text fingerprint."""

@@ -4,23 +4,16 @@ loader streams in order.
 
 Reference anchor: photon's only export is the gzipped event-line dump
 (api.clj:207-215 → events.py S3); a training pipeline additionally needs
-the corpus exported as N shards of contiguous training sequences. These
-operators provide the PLAN (which doc → which shard; driver-checkable
-against a SQL oracle) and the WRITER (one parquet directory per shard +
-a manifest).
+the corpus exported as N shards of contiguous training sequences.
+:func:`shard_plan` is the PLAN (which doc → which shard), checkable
+against a SQL oracle.
 
 Scale shape: shard assignment is pure arithmetic over the packing
 relation (first_seq div seqs_per_shard) — no new shuffle beyond
-pack_sequences' single bucket exchange; the writer repartitions BY SHARD
-so each shard lands as one writer task's files (at 100 TB: one task per
-shard, shard count chosen so a shard fits a loader's read granularity,
-e.g. 2-10 GB). The manifest aggregate is O(n_shards) rows.
+pack_sequences' single bucket exchange.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,42 +35,3 @@ def shard_plan(packed: DataFrame, seqs_per_shard: int) -> DataFrame:
                  F.sum("n_tokens").cast("long").alias("n_tokens"),
                  F.sum(F.col("spans_boundary").cast("long"))
                   .alias("n_boundary_docs")))
-
-
-def write_training_shards(docs: DataFrame, out_dir: str, budget: int,
-                          seqs_per_shard: int,
-                          token_count_col: str = "n_tokens",
-                          id_col: str = "doc_id") -> dict:
-    """Pack ``docs`` (needs ``token_count_col``) and write one parquet
-    directory per shard (``shard=K/``), each holding that shard's docs
-    with their packing coordinates in ``id_col`` order; write a
-    ``_manifest.json`` with per-shard totals (underscore prefix so
-    parquet readers skip it, like ``_SUCCESS``). Zero-token docs occupy
-    no stream positions, so they are EXCLUDED from the export (the
-    pack_sequences contract) — input count minus manifest total_docs is
-    exactly the zero-token count. Deterministic: same input → same
-    shards, same manifest. Returns the manifest dict."""
-    packed = pack_sequences(docs, budget, token_count_col, id_col)
-    shard = F.expr(f"first_seq div {seqs_per_shard}").cast("long")
-    with_shard = (docs.join(packed.withColumn("shard_id", shard)
-                            .select(id_col, "first_seq", "last_seq",
-                                    "spans_boundary", "shard_id"), id_col))
-    # one writer task per shard: the shard key is both the partition
-    # column and the repartition key, so each directory is written by
-    # the task that owns ALL of its rows (sorted by id for loader order)
-    (with_shard
-     .repartition("shard_id")
-     .sortWithinPartitions(id_col)
-     .write.mode("overwrite").partitionBy("shard_id").parquet(out_dir))
-    manifest_rows = (shard_plan(packed, seqs_per_shard)
-                     .orderBy("shard_id").collect())
-    manifest = {
-        "budget": budget,
-        "seqs_per_shard": seqs_per_shard,
-        "shards": [r.asDict() for r in manifest_rows],
-        "total_docs": int(sum(r["n_docs"] for r in manifest_rows)),
-        "total_tokens": int(sum(r["n_tokens"] for r in manifest_rows)),
-    }
-    with open(os.path.join(out_dir, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    return manifest

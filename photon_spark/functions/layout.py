@@ -15,9 +15,6 @@ analogue — this is part of the driver-mandated scale extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 
 def zvalue_expr(x: str, y: str, bits: int, engine: str) -> str:
     """Morton interleave of the low ``bits`` bits of integer columns
@@ -34,17 +31,3 @@ def zvalue_expr(x: str, y: str, bits: int, engine: str) -> str:
             terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
             terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_layout(df: DataFrame, x: str, y: str, bits: int = 12,
-                  n_ranges: int = 32) -> DataFrame:
-    """The writer path: cluster ``df`` into ``n_ranges`` z-contiguous
-    ranges and sort rows by z within each — what a Z-ordering OPTIMIZE
-    job does before writing files. ``repartitionByRange`` samples range
-    boundaries (a scalable sort, no single-partition window); callers
-    write the result with one file per partition."""
-    z = F.expr(zvalue_expr(x, y, bits, "spark")).alias("__z")
-    return (df.withColumn("__z", z)
-              .repartitionByRange(n_ranges, "__z")
-              .sortWithinPartitions("__z")
-              .drop("__z"))

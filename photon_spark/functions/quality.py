@@ -237,55 +237,3 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
                       "score", F.col("rank").cast("long").alias("rank")),
         [tf])
 
-
-# ------------------------------------------------------ compression ratio
-
-#: zlib level for the compressibility signal: fixed so the byte counts
-#: are deterministic for a given zlib version (the suite pins them by an
-#: independent driver-side recompute, not a stored golden)
-ZLIB_LEVEL = 6
-
-
-def compression_profile(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Per-document zlib compressibility — the quality signal the
-    Gopher/RefinedWeb filter family uses for boilerplate and
-    gibberish: highly repetitive text compresses far below natural
-    prose (ratio → 0), while random-ish strings stay near (or above)
-    1. Emits exact integer byte counts (``raw_bytes``,
-    ``compressed_bytes`` at level {ZLIB_LEVEL}) and their single
-    6dp-rounded division — downstream thresholds cut on the ratio the
-    way quality_classifier_filter cuts on its score.
-
-    NOT oracle-expressible: no SQL engine exposes zlib, so this rides
-    OUTSIDE the hash-gate registry; the pytest pin recomputes every
-    byte count with the driver's own zlib over collected text
-    (same library, independent path — it certifies the Spark-side
-    plumbing: UTF-8 encode, batch iteration, column mapping).
-
-    Scale shape: ONE Arrow-batched map pass, no shuffle — text is read
-    where it lives and only (id, 2 longs, 1 double) leave the
-    executor. DEFLATE is O(n) with a ~32 KB window, so cost is linear
-    in corpus bytes; at 100 TB this is the cheapest quality signal in
-    the stack (cheaper than tokenization — no vocabulary, no state).
-    """
-
-    def run(batches):
-        import zlib
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                t = getattr(rec, text_col) or ""
-                raw = t.encode("utf-8")
-                comp = zlib.compress(raw, ZLIB_LEVEL)
-                ratio = _r6(len(comp) / len(raw)) if raw else None
-                rows.append((getattr(rec, id_col), len(raw), len(comp),
-                             ratio))
-            yield pd.DataFrame(rows, columns=[
-                id_col, "raw_bytes", "compressed_bytes",
-                "compression_ratio"])
-
-    return df.select(id_col, text_col).mapInPandas(
-        run,
-        schema=(f"{id_col} long, raw_bytes long, compressed_bytes long, "
-                "compression_ratio double"))

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from photon_spark import generations
+
 
 def dot(a, b) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -311,37 +313,15 @@ def ivf_topk(df: DataFrame, query_vec: list[float] | int, k: int = 10,
 
 
 # --------------------------------------------- IVF index generations
-# The materialized IVF index adopts the EventStore generation-pointer
-# commit (events.py): the live generation is named by ONE small
-# ``_generation`` file (atomic PUT); a retrain writes a complete new
-# ``gen=<k>-<nonce>`` directory (fresh centroids + full re-assigned
-# base) and swaps the pointer; readers resolve the pointer first, so a
-# probe running DURING a retrain serves the old generation to the end
-# and a crash mid-retrain leaves the old generation live (the
-# half-written new dir is an inert orphan). Indexes built before this
-# protocol have no pointer file and resolve to the root — unchanged.
+# The materialized IVF index commits through the generation pointer
+# (photon_spark.generations), the same protocol as EventStore rewrites:
+# a retrain writes a complete new ``gen=<k>-<nonce>`` directory (fresh
+# centroids + full re-assigned base) and swaps the pointer; readers
+# resolve the pointer first, so a probe running DURING a retrain serves
+# the old generation to the end and a crash mid-retrain leaves the old
+# generation live. Indexes that never retrained resolve to the root.
 
-_IVF_GEN_FILE = "_generation"
 _IVF_CENTS_FILE = "_centroids.json"
-
-
-def _ivf_gen_pointer(path: str) -> tuple[int, str]:
-    """(ordinal, dir name) of the live index generation; ``""`` = root."""
-    import os
-    gf = os.path.join(path, _IVF_GEN_FILE)
-    if not os.path.exists(gf):
-        return 0, ""
-    with open(gf) as f:
-        s = f.read().strip()
-    if not s or s == "0":
-        return 0, ""
-    return int(s.split("=", 1)[1].split("-", 1)[0]), s
-
-
-def _ivf_data_dir(path: str) -> str:
-    import os
-    name = _ivf_gen_pointer(path)[1]
-    return path if not name else os.path.join(path, name)
 
 
 def _save_ivf_centroids(data_dir: str, cents) -> None:
@@ -362,7 +342,7 @@ def load_ivf_centroids(path: str) -> list[tuple[int, list[float]]]:
     :func:`_load_cents_from_data_dir` on that same directory, or a
     retrain committing between the two reads pairs one generation's
     centroids with the other's data."""
-    return _load_cents_from_data_dir(_ivf_data_dir(path))
+    return _load_cents_from_data_dir(generations.data_dir(path))
 
 
 def _load_cents_from_data_dir(data_dir: str) -> list[tuple[int, list[float]]]:
@@ -381,7 +361,7 @@ def retrain_ivf_index(spark, path: str, n_cells: int | None = None,
     (base + every appended batch), re-assign the whole corpus under the
     fresh centroids into a complete new generation directory, and make
     it live with one atomic pointer swap — the FAISS retrain done the
-    EventStore ``gen=`` way (events.py generations section).
+    EventStore ``gen=`` way (photon_spark.generations).
 
     Crash-safe at every step: before the swap, readers resolve the old
     pointer and see the old generation whole (the new dir is an inert
@@ -396,37 +376,18 @@ def retrain_ivf_index(spark, path: str, n_cells: int | None = None,
     shuffle beyond the per-cell repartition the original build pays.
     """
     import os
-    import shutil
-    import uuid
 
-    old_ord, old_name = _ivf_gen_pointer(path)
-    live = _ivf_data_dir(path)
+    old_ord, old_name = generations.live(path)
+    live = generations.data_dir(path)
     df = spark.read.parquet(live).select(id_col, vec_col)
     if n_cells is None:
         n_cells = len(load_ivf_centroids(path))
     cents = ivf_train_cells(df, n_cells, vec_col, id_col)
-    new_name = f"gen={old_ord + 1}-{uuid.uuid4().hex[:12]}"
+    new_name = generations.next_name(old_ord + 1)
     new_dir = os.path.join(path, new_name)
     _write_ivf_batch(df, new_dir, "base", cents, vec_col, id_col)
     _save_ivf_centroids(new_dir, cents)
-    # THE commit: one atomic small-file replace
-    tmp = os.path.join(path, _IVF_GEN_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(new_name)
-    os.replace(tmp, os.path.join(path, _IVF_GEN_FILE))
-    # best-effort GC of the superseded generation (root sweep keeps
-    # markers and gen dirs, exactly the EventStore rule) + orphans
-    if old_name:
-        shutil.rmtree(os.path.join(path, old_name), ignore_errors=True)
-    else:
-        for n in os.listdir(path):
-            if n.startswith(("gen=", "_", ".")):
-                continue
-            full = os.path.join(path, n)
-            (shutil.rmtree if os.path.isdir(full) else os.remove)(full)
-    for n in os.listdir(path):
-        if n.startswith("gen=") and n != new_name:
-            shutil.rmtree(os.path.join(path, n), ignore_errors=True)
+    generations.commit(path, new_name, old_name)
     return cents
 
 
@@ -510,7 +471,7 @@ def append_to_ivf_index(spark, index_dir: str,
     with A's centroids is pinned in tests."""
     # appends land in the LIVE generation (pointer resolved per call,
     # so an append issued after a retrain's swap joins the fresh gen)
-    _write_ivf_batch(new_df, _ivf_data_dir(index_dir), tag, cents,
+    _write_ivf_batch(new_df, generations.data_dir(index_dir), tag, cents,
                      vec_col, id_col)
 
 
@@ -541,7 +502,7 @@ def ivf_topk_from_index(spark, index_dir: str,
     again). Pass ``cents=None`` to rank cells with the live
     generation's own persisted centroids (the safe default once
     retrains run)."""
-    live = _ivf_data_dir(index_dir)
+    live = generations.data_dir(index_dir)
     if cents is None:
         cents = _load_cents_from_data_dir(live)
     idx = _read_gen(spark, live)
@@ -990,7 +951,7 @@ def knn_graph_from_index(spark, index_dir: str, k: int = 3,
     remapped through a literal map expression — map-side, no join. The
     corpus for the exact re-score leg is the index itself, so appended
     vectors are both graph nodes and candidate neighbors."""
-    live = _ivf_data_dir(index_dir)
+    live = generations.data_dir(index_dir)
     cents = sorted(_load_cents_from_data_dir(live))
     idx = _read_gen(spark, live)
     pos = F.element_at(

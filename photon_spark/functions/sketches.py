@@ -87,19 +87,6 @@ def hll_registers(df: DataFrame, group_col: str, item: Column) -> DataFrame:
               .groupBy("grp", "idx").agg(F.max("rank").alias("rank")))
 
 
-def merge_hll_registers(*register_dfs: DataFrame) -> DataFrame:
-    """Union register tables (from :func:`hll_registers`) into one sketch:
-    cell-wise max. THE incremental-maintenance kernel: a streaming ingest
-    (foreachBatch) computes the new batch's registers and merges them into
-    the stored register table — never rescanning the corpus; a federated
-    fleet merges per-engine sketches the same way (registers are
-    md5-derived, so engines agree on them)."""
-    out = register_dfs[0]
-    for d in register_dfs[1:]:
-        out = out.unionByName(d)
-    return out.groupBy("grp", "idx").agg(F.max("rank").alias("rank"))
-
-
 def hll_estimate(df: DataFrame, group_col: str, item: Column) -> DataFrame:
     """Per-group HLL cardinality estimate with exact integer evidence.
 
@@ -126,18 +113,6 @@ def hll_estimate(df: DataFrame, group_col: str, item: Column) -> DataFrame:
         zero_regs.cast("long").alias("n_zero_regs"),
         F.round(F.lit(HLL_EST_NUM) / reg_sum.cast("double"), 2)
          .alias("est_distinct"))
-
-
-def hll_corrected(est_distinct: float, n_zero_regs: int) -> float:
-    """Flajolet's small-range correction, applied to the raw estimate a
-    :func:`hll_estimate` row carries: below 2.5m with empty registers,
-    linear counting m*ln(m/V) is far more accurate. Python-side (ln's
-    last ulp is libm-specific, so this stays out of the hash-gated
-    relational output; the gated columns are integer-exact)."""
-    import math
-    if est_distinct <= 2.5 * HLL_M and n_zero_regs > 0:
-        return HLL_M * math.log(HLL_M / n_zero_regs)
-    return est_distinct
 
 
 def sql_hll_estimate(table_sql: str, group_col: str, item_expr: str) -> str:

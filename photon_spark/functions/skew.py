@@ -291,46 +291,3 @@ def salted_sessionize(df: DataFrame, key_cols: list[str], ts_col: str,
                 .cast("long"))
                .drop("_bkt", "_lcum", "_corr", "_off"))
 
-
-#: hot-key threshold: route to the salted kernels when the largest
-#: key's share of a sampled relation exceeds this fraction
-HOT_KEY_SHARE = 0.05
-#: and only when the relation is big enough for skew to matter at all
-HOT_KEY_MIN_ROWS = 1_000_000
-
-
-def hot_key_share(df: DataFrame, keys: list[str]) -> tuple[int, float]:
-    """(total rows, largest key's share) from ONE keyed count aggregate
-    — the cheap skew diagnostic the adaptive router consumes. At 100 TB
-    run it on a sample or reuse table statistics; here the exact
-    aggregate is one map-side-combinable pass."""
-    row = (df.groupBy(*keys).count()
-             .agg(F.sum("count").alias("n"),
-                  F.max("count").alias("mx")).first())
-    n = int(row["n"] or 0)
-    return n, (int(row["mx"] or 0) / n if n else 0.0)
-
-
-def auto_key_window(df: DataFrame, keys: list[str],
-                    order_cols: list[str], lead_cols: list[str],
-                    n_buckets: int = DEFAULT_SALT,
-                    rn_col: str = "_rn",
-                    share_threshold: float = HOT_KEY_SHARE,
-                    min_rows: int = HOT_KEY_MIN_ROWS) -> DataFrame:
-    """ADAPTIVE per-key window: measure the key histogram once, then
-    route — the plain one-shuffle window when keys are balanced (its
-    cost floor), :func:`bucketed_key_window` when one key's share
-    crosses ``share_threshold`` on a relation of at least ``min_rows``
-    (the regime where a single task's sort would gate the stage).
-    Both paths are row-identical by the kernel's contract, so routing
-    is purely a physical choice — exactly AQE's philosophy, applied to
-    the window shape AQE cannot split."""
-    n, share = hot_key_share(df, keys)
-    if n >= min_rows and share >= share_threshold:
-        return bucketed_key_window(df, keys, order_cols, lead_cols,
-                                   n_buckets=n_buckets, rn_col=rn_col)
-    w = Window.partitionBy(*keys).orderBy(*[F.asc(c) for c in order_cols])
-    out = df.withColumn(rn_col, F.row_number().over(w).cast("long"))
-    for c in lead_cols:
-        out = out.withColumn(f"_next_{c}", F.lead(c).over(w))
-    return out

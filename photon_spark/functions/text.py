@@ -117,11 +117,6 @@ def lang_id_from_tokens(lt) -> Column:
     return expr
 
 
-def lang_id(col) -> Column:
-    """Stopword-marker language ID over a raw text column."""
-    return lang_id_from_tokens(F.transform(tokens(col), lambda t: F.lower(t)))
-
-
 def normalize_text(col) -> Column:
     """Canonical form for fingerprinting: lowercase, collapse whitespace,
     strip leading/trailing space."""

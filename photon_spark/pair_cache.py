@@ -204,31 +204,17 @@ class PairTable:
         # join in verify_candidate_pairs, breaking the pairs(A∪B)
         # identity. Id-only anti-join (corpus text untouched; cand_ids is
         # broadcast-sized), fail loudly instead.
-        # The missing-ids guard and the batch-tag head are independent
-        # bounded collects over different relations — overlap them
-        # (guide §2.6) instead of paying two sequential driver round
-        # trips.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_missing = pool.submit(
-                lambda: cand_ids
-                .join(corpus_docs.select(id_col), id_col, "left_anti")
-                .limit(5).collect())
-            f_head = pool.submit(
-                lambda: new_docs.agg(F.min(id_col).alias("mn"),
-                                     F.count(F.lit(1)).alias("n"))
-                .collect()[0])
-            # check the guard FIRST: if corpus_docs violates the
-            # contract, the diagnostic ValueError below must win over
-            # any unrelated error the head collect might raise
-            missing = f_missing.result()
-            head = None if missing else f_head.result()
+        missing = (cand_ids
+                   .join(corpus_docs.select(id_col), id_col, "left_anti")
+                   .limit(5).collect())
         if missing:
             raise ValueError(
                 "PairTable.update: corpus_docs is missing indexed docs "
                 f"referenced by the band index (e.g. ids "
                 f"{[r[id_col] for r in missing]}); pass the FULL "
                 "already-indexed corpus relation")
+        head = new_docs.agg(F.min(id_col).alias("mn"),
+                            F.count(F.lit(1)).alias("n")).collect()[0]
         sh_old = dedup._shingled(
             corpus_docs.join(cand_ids, id_col, "left_semi"),
             text_col, id_col, self.shingle_n)
@@ -256,8 +242,7 @@ class PairTable:
         # The batch tag derives from the batch's own ids (min id is
         # unique per batch under the global-id-uniqueness contract), so
         # a RETRY of the same batch reuses its tag and overwrites its
-        # own partitions instead of double-appending. (``head`` was
-        # collected above, overlapped with the missing-ids guard.)
+        # own partitions instead of double-appending.
         tag = f"u{head['mn']}-{head['n']}"
         self._write_batch(tag, cross_pairs.unionByName(within_pairs),
                           b_new)

@@ -57,6 +57,7 @@ import functools
 import json
 import operator
 import pickle
+import threading
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -223,6 +224,10 @@ class ProjectionEngine:
     def __init__(self, store: EventStore | None = None):
         self.store = store
         self.registry: dict[str, Projection] = {}
+        # one fold at a time: a live runner's micro-batch (streaming
+        # callback thread) and a pull (caller's thread) would otherwise
+        # both fold from the same resume point and count events twice
+        self._fold_lock = threading.Lock()
 
     @classmethod
     def fold_dataframe(cls, reducer: "Reducer", df: DataFrame,
@@ -319,6 +324,11 @@ class ProjectionEngine:
         → ``{name: error}`` of native and associative reducers that
         raised (a serial reducer's error fails its projection instead).
         """
+        with self._fold_lock:
+            return self._fold_locked(projs, df, emit_states)
+
+    def _fold_locked(self, projs: list[Projection], df: DataFrame | None,
+                     emit_states: bool) -> dict[str, Exception]:
         projs = [p for p in projs if p.status != "failed"]
         if emit_states:
             for p in projs:

@@ -487,10 +487,8 @@ def q_stream_stream_interval_join(spark, sf_dir):
                       F.col("event_id").alias("click_id"),
                       F.col("ts").alias("cns")))
 
-    # The two legs' staging writes are independent jobs — run them from
-    # two driver threads so the second leg back-fills executors the
-    # first leg's write leaves idle (guide §2.6). ONE write job per
-    # leg: partitionBy lands each id%3 slice in its own file under
+    # ONE staging write job per leg: partitionBy lands each id%3 slice
+    # in its own file under
     # _slice=k/ (the cdc_stream_merge_state consolidation — guide §6:
     # 3 changelog scans per leg -> 1); the stream reads with
     # recursiveFileLookup, so _slice never becomes a column and each
@@ -499,12 +497,8 @@ def q_stream_stream_interval_join(spark, sf_dir):
         (rel.withColumn("_slice", F.col(id_col) % 3)
             .coalesce(1).write.partitionBy("_slice").parquet(dest))
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_stage, p_rel, "purchase_id", pdir),
-                pool.submit(_stage, c_rel, "click_id", cdir)]
-        for f in futs:
-            f.result()
+    _stage(p_rel, "purchase_id", pdir)
+    _stage(c_rel, "click_id", cdir)
 
     wm = "30 days"    # > fixture span: nothing evicts, batch ≡ stream
     ps = (spark.readStream.schema(p_rel.schema)

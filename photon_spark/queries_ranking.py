@@ -218,54 +218,6 @@ FROM w GROUP BY event_type
 """
 
 
-def decay_step_counts(events_df, ref_ns: int = DECAY_REF_NS):
-    """The MERGEABLE state behind :func:`q_events_decay_popularity`:
-    per-(event_type, decay-step) exact counters. Incremental maintenance
-    needs per-step counts, not one total — the staircase clamps at step
-    {DECAY_MAX_STEP}, so a clamped event's weight stops halving and a
-    plain shift of the total would over-decay it."""
-    step = (f"greatest(0, least((({ref_ns} - ts) div {DAY_NS})"
-            f" div {DECAY_STEP_DAYS}, {DECAY_MAX_STEP}))")
-    return (events_df.select("event_type",
-                             F.expr(f"cast(({step}) as int)").alias("step"))
-                     .groupBy("event_type", "step")
-                     .agg(F.count(F.lit(1)).alias("n")))
-
-
-def merge_decay_counts(*count_dfs):
-    """Merge counter states (same reference instant): cell-wise sum."""
-    out = count_dfs[0]
-    for other in count_dfs[1:]:
-        out = out.unionAll(other)
-    return (out.groupBy("event_type", "step")
-               .agg(F.sum("n").alias("n")))
-
-
-def advance_decay_counts(counts, k_steps: int):
-    """Advance the reference instant by ``k_steps`` decay steps WITHOUT
-    touching raw events: step' = min(step + k, {DECAY_MAX_STEP}).
-    Exactly equals recomputing from raw data at the later reference
-    (pinned in tests) — the property that lets a daily job re-decay
-    yesterday's 100 TB aggregate in O(types × steps)."""
-    return (counts.select(
-                "event_type",
-                F.least(F.col("step") + k_steps,
-                        F.lit(DECAY_MAX_STEP)).alias("step"), "n")
-                  .groupBy("event_type", "step")
-                  .agg(F.sum("n").alias("n")))
-
-
-def decay_summary_from_counts(counts):
-    """(event_type, n_events, decayed_units, decayed_count) from the
-    counter state — the same shape q_events_decay_popularity emits."""
-    w = F.expr(f"n * cast(shiftleft(1, {DECAY_MAX_STEP} - step) as long)")
-    return (counts.groupBy("event_type")
-                  .agg(F.sum("n").alias("n_events"),
-                       F.sum(w).alias("decayed_units"),
-                       (F.sum(w) / F.lit(float(DECAY_SCALE)))
-                       .alias("decayed_count")))
-
-
 TRENDING_K = 3
 
 

@@ -544,23 +544,10 @@ def q_classifier_eval_split(spark, sf_dir):
     filter needs before deployment; composes classifier_train_gd and
     cluster_split_assign. Same quantized-gradient determinism: the only
     change is a train-split predicate on the gradient pass."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from photon_spark.functions import dedup
 
-    # Overlap the two independent subtrees (guide §2.6): the feature
-    # relation (text-profile Arrow pass — the expensive executor work)
-    # materializes into its persist on a worker thread WHILE the main
-    # thread mines the cluster split (pair-table staging + the
-    # driver-side union-find collect). Neither depends on the other
-    # until the join below, and job-traced the features pass previously
-    # ran inside GD iteration 1, serialized after the split mining.
-    feats_base = _features(spark, sf_dir).persist()
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        warm = pool.submit(lambda: feats_base.count())
-        rooted, cached = _doc_splits(spark, sf_dir)
-        warm.result()
-    feats = (feats_base
+    rooted, cached = _doc_splits(spark, sf_dir)
+    feats = (_features(spark, sf_dir)
              .join(rooted.select("doc_id", "split"), "doc_id").persist())
     train = feats.where(F.col("split") == "train")
     w = [0.0] * 5
@@ -585,7 +572,7 @@ def q_classifier_eval_split(spark, sf_dir):
                      F.round(F.sum(((z >= 0) == (F.col("y") == 1.0))
                                    .cast("long"))
                              / F.count(F.lit(1)), 6).alias("accuracy")))
-    out = dedup._own_cache(out, cached + [feats, feats_base])
+    out = dedup._own_cache(out, cached + [feats])
     return out
 
 

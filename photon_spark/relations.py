@@ -29,6 +29,7 @@ Key safety:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -124,6 +125,27 @@ def _jobs_submitted(sc) -> int:
     memoize on uncertainty). py4j converts the AtomicInteger (a
     java.lang.Number) to a plain int at the boundary."""
     return int(sc._jsc.sc().dagScheduler().nextJobId())
+
+
+_PROBE_WARNED = False
+
+
+def _jobs_probe(sc) -> int | None:
+    """:func:`_jobs_submitted`, or None when the private API fails
+    (e.g. after a Spark upgrade). That leaves every query unmemoized,
+    so the first failure in a process warns instead of staying silent."""
+    global _PROBE_WARNED
+    try:
+        return _jobs_submitted(sc)
+    except Exception as e:
+        if not _PROBE_WARNED:
+            _PROBE_WARNED = True
+            warnings.warn(
+                f"registry plan memo disabled: the DAGScheduler job-count "
+                f"probe failed ({type(e).__name__}: {e})", RuntimeWarning,
+                stacklevel=3)
+        return None
+
 
 #: realpaths of staged tables whose owner guarantees WRITE-ONCE
 #: contents (e.g. the pair_cache near-dup table, keyed by corpus stamp
@@ -230,13 +252,10 @@ def memo_query(name: str, fn):
         if name in _MEMO_DENY:
             return fn(spark, sf_dir)
         sc = spark.sparkContext
-        try:
-            before = _jobs_submitted(sc)
-        except Exception:
-            before = None
+        before = _jobs_probe(sc)
         df = fn(spark, sf_dir)
         try:
-            if before is None or _jobs_submitted(sc) != before:
+            if before is None or _jobs_probe(sc) != before:
                 # NOT a permanent deny: first-call constructions run
                 # one-time warm-up jobs (base-table schema reads,
                 # staging memos). A later clean construction can still

@@ -106,30 +106,28 @@ class CdcMergeTable:
 
     # ------------------------------------------------------------- lease
     def _read_lease(self) -> dict | None:
-        """The compaction lease, or None. Three shapes: a JSON
-        ``{"owner": ..., "expires": <epoch sec>}`` lease (normal), a
-        legacy pre-lease sentinel (returned as an UNEXPIRING lease —
-        the old always-blocks semantics, so an upgrade never weakens a
-        crashed legacy compactor's guard; re-running compact() still
-        converges and clears it), or absent."""
+        """The compaction lease ``{"owner": ..., "expires": <epoch
+        sec>}``, or None. Leases are written whole by an atomic replace,
+        so any other content is corruption and raises: writers and
+        compactors stay locked out until an operator removes it."""
+        path = os.path.join(self.path, self._SENTINEL)
         try:
-            with open(os.path.join(self.path, self._SENTINEL)) as f:
-                raw = f.read()
+            with open(path) as f:
+                lease = json.load(f)
         except FileNotFoundError:
             return None
-        try:
-            lease = json.loads(raw)
-            if not isinstance(lease, dict):
-                raise ValueError
-            return lease
         except ValueError:
-            return {"owner": "legacy", "expires": None}
+            lease = None
+        if not isinstance(lease, dict):
+            raise RuntimeError(
+                f"corrupt compaction lease {path}: a compact() may still "
+                "be running; remove the file once none is")
+        return lease
 
     @staticmethod
     def _lease_expired(lease: dict) -> bool:
         import time
-        exp = lease.get("expires")
-        return exp is not None and time.time() > float(exp)
+        return time.time() > float(lease["expires"])
 
     def _acquire_lease(self, owner: str, ttl_sec: float) -> None:
         """Take the compaction lease: refuse while another holder's
@@ -140,11 +138,7 @@ class CdcMergeTable:
         import time
         lease = self._read_lease()
         if lease is not None and lease.get("owner") != owner \
-                and lease.get("owner") != "legacy" \
                 and not self._lease_expired(lease):
-            # a LEGACY sentinel is reclaimable by any compactor — the
-            # pre-lease protocol's own recovery action was "re-run
-            # compact() to converge, which clears the sentinel"
             raise RuntimeError(
                 f"compact: lease held by {lease.get('owner')!r} until "
                 f"epoch {lease.get('expires'):.0f}; a second compactor "
@@ -232,34 +226,12 @@ class CdcMergeTable:
                        "gc_horizon": int(gc_horizon)}, f)
         os.replace(tmp, os.path.join(self.path, self._MANIFEST))
 
-    #: round-7 protocol's fold-point marker — still honored on READ so a
-    #: table compacted by the pre-manifest code keeps refusing erased
-    #: as-of boundaries after an upgrade (its fold lives inside
-    #: ``batch=<tag>``, which the batch-dir reader still consumes).
-    _LEGACY_MARKER = "_compacted_to"
-
     def _compacted_to(self) -> int:
         """Lowest batch id still individually addressable as an as-of
         boundary: boundaries strictly below this were folded.
         -inf-equivalent before the first compaction."""
         man = self._manifest()
-        floor = int(man["tag"]) if man else _NEG_INF
-        try:
-            with open(os.path.join(self.path, self._LEGACY_MARKER)) as f:
-                floor = max(floor, int(f.read().strip()))
-        except FileNotFoundError:
-            pass  # no legacy marker — the normal case
-        except ValueError:
-            # fail CLOSED: an unreadable marker means some boundary was
-            # erased but we cannot tell which — answering as-of reads
-            # from partial history would be wrong, so refuse everything
-            # until the operator repairs or removes the marker
-            raise ValueError(
-                f"CdcMergeTable at {self.path}: corrupt legacy "
-                f"{self._LEGACY_MARKER} marker — cannot determine the "
-                "erased-boundary floor; repair the marker (it held the "
-                "round-7 fold tag) before reading") from None
-        return floor
+        return int(man["tag"]) if man else _NEG_INF
 
     def _gc_horizon(self) -> int:
         """Ids strictly below this were declared dead by a major
@@ -316,8 +288,7 @@ class CdcMergeTable:
             raise RuntimeError(
                 "apply_batch: a compact() is in progress on this table "
                 f"(lease owner {lease.get('owner')!r}); retry after it "
-                "finishes — or, for a legacy no-expiry sentinel, re-run "
-                "compact() to converge first")
+                "finishes")
         # an EXPIRED lease is a crashed compactor: its fold was never
         # published (the manifest swap is the commit), so writing is
         # safe and nothing deadlocks; the next compact() reclaims

@@ -9,8 +9,7 @@ through :meth:`EventStore.ingest`, which does the stamping with
 driver-side max-order_id bookkeeping, so order_ids stay globally monotonic
 across micro-batches (SURVEY.md §4 custom-work #2).
 
-Backpressure is micro-batch-native (``maxFilesPerTrigger``) — no photon
-sliding-buffer drops.
+Each trigger takes every new file — no photon sliding-buffer drops.
 
 Delivery semantics — stated precisely, because foreachBatch is
 at-least-once: the checkpoint commits source offsets only after the
@@ -50,13 +49,11 @@ class StreamingIngest:
 
     def __init__(self, store: EventStore, source_dir: str,
                  checkpoint_dir: str | None = None,
-                 max_files_per_trigger: int | None = None,
                  dedupe: bool = False):
         self.store = store
         self.source_dir = source_dir
         self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
             prefix="photon_spark_ingest_ckpt_")
-        self.max_files_per_trigger = max_files_per_trigger
         #: idempotent ingest by client key: drop events whose
         #: (stream_name, local_id) is already stored. The reference's
         #: analogue is the import-path name dedupe (api.clj:149-186
@@ -93,11 +90,8 @@ class StreamingIngest:
         self.batches += 1
 
     def _writer(self):
-        reader = self.store.spark.readStream.schema(CLIENT_SCHEMA)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger",
-                                   self.max_files_per_trigger)
-        stream = reader.json(self.source_dir)
+        stream = (self.store.spark.readStream.schema(CLIENT_SCHEMA)
+                  .json(self.source_dir))
         return (stream.writeStream
                 .foreachBatch(self._apply_batch)
                 .option("checkpointLocation", self.checkpoint_dir)

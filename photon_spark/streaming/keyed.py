@@ -16,8 +16,7 @@ Two implementations of the same fold semantics:
   server, so it needs ``google.protobuf`` in the Python environment —
   probed at import; chosen by default when available.
 - **applyInPandasWithState** fallback: identical fold and state content,
-  used where protobuf is absent (this build container) or when
-  ``PHOTON_SPARK_KEYED_LEGACY=1`` forces it.
+  used where protobuf is absent.
 
 Both paths produce value-identical output (the keyed gate query hashes
 prove it wherever both can run), so which one executes is an environment
@@ -30,7 +29,6 @@ and the shuffle is the single groupBy(key) exchange.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -52,11 +50,7 @@ def tws_available() -> bool:
     """True only when transformWithStateInPandas can actually run:
     the grouped-data API must exist (PySpark ≥ 4.0 — protobuf alone is
     not evidence, it ships with many unrelated packages) AND
-    google.protobuf must import (the TWS state client's wire protocol).
-    PHOTON_SPARK_KEYED_LEGACY=1 forces the applyInPandasWithState path
-    regardless."""
-    if os.environ.get("PHOTON_SPARK_KEYED_LEGACY") == "1":
-        return False
+    google.protobuf must import (the TWS state client's wire protocol)."""
     from pyspark.sql.group import GroupedData
     if not hasattr(GroupedData, "transformWithStateInPandas"):
         return False

@@ -18,12 +18,8 @@ Reference semantics (citations into /root/reference):
 Ordering guarantee (the one real constraint): micro-batches must not
 interleave order_ids. That holds by construction for a single-writer store —
 ``EventStore.ingest`` stamps each append strictly above the previous max
-order_id and the file source processes files in arrival order, taking *all*
-new files per trigger when ``maxFilesPerTrigger`` is unset (the default
-here). Setting ``maxFilesPerTrigger`` trades that guarantee for bounded
-micro-batches: one ingest's files are hash-partitioned by stream and may
-split across triggers out of order. Use it only for hot-only tails where
-each trigger's files come from distinct ingest calls.
+order_id and the file source processes files in arrival order, taking all
+new files per trigger.
 
 Scale notes: each micro-batch is one delta of
 ``ProjectionEngine._fold_df``, the same fold the pull path runs — all
@@ -58,7 +54,6 @@ class StreamingProjectionRunner:
     """
 
     def __init__(self, engine: ProjectionEngine, checkpoint_dir: str | None = None,
-                 max_files_per_trigger: int | None = None,
                  state_path: str | None = None):
         # resume correctness depends on single-writer order_id monotony:
         # _apply_batch filters `order_id > proj.last_event`, which is
@@ -84,12 +79,7 @@ class StreamingProjectionRunner:
         self.engine = engine
         self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
             prefix="photon_spark_ckpt_")
-        self.max_files_per_trigger = max_files_per_trigger
         self.batches = 0
-        #: virtual-stream capture: successive state snapshots per projection,
-        #: one per micro-batch that touched it (streams.clj:182-200 — every
-        #: new state value is itself a subscribable stream).
-        self.history: list[tuple[int, str, object]] = []
         #: append-only parquet state table — the durable, *subscribable*
         #: form of the virtual stream (photon exposes each projection's
         #: successive states as a stream endpoint, streams.clj:182-200,
@@ -108,7 +98,7 @@ class StreamingProjectionRunner:
         crashed-and-retried batch clobbers its OWN partial partition
         instead of double-appending state rows; restore() then sees
         exactly-once state."""
-        if not snaps or self.state_path is None:
+        if not snaps:
             return
         import os
 
@@ -207,9 +197,8 @@ class StreamingProjectionRunner:
                                       batch_df)
         snaps = []
         for name, proj in running:
-            if proj.processed == before[name]:
+            if self.state_path is None or proj.processed == before[name]:
                 continue
-            self.history.append((batch_id, name, proj.current_value))
             try:
                 value_json = json.dumps(proj.current_value)
             except (TypeError, ValueError):
@@ -227,9 +216,7 @@ class StreamingProjectionRunner:
 
     # ----------------------------------------------------------------- run
     def _stream_writer(self):
-        stream = read_hot_cold(
-            self.engine.store,
-            max_files_per_trigger=self.max_files_per_trigger)
+        stream = read_hot_cold(self.engine.store)
         return (stream.writeStream
                 .foreachBatch(self._apply_batch)
                 .option("checkpointLocation", self.checkpoint_dir)

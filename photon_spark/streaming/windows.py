@@ -74,92 +74,3 @@ def session_agg(df: DataFrame, time_col: str = "event_time",
               .withColumn("session_start", F.col("win.start"))
               .withColumn("session_end", F.col("win.end"))
               .drop("win"))
-
-
-def downtime_monitor(events: DataFrame, gap_min_ns: int,
-                     key_col: str = "event_type",
-                     ts_col: str = "ts") -> DataFrame:
-    """STREAMING downtime detector — the live twin of the batch
-    events_downtime_gaps query: per key, emit a gap row the moment an
-    event arrives more than ``gap_min_ns`` after the previous one. The
-    only state is ONE long per key (the last-seen timestamp), so a
-    100 TB/day feed holds |keys| longs in the state store, and each
-    finalized gap is emitted exactly once (append mode).
-
-    Ordering contract: per-key event time must be non-decreasing
-    across micro-batches (the event-store replay order; within a batch
-    the fold sorts). A late out-of-order event would register as a
-    bogus gap — run behind a watermarked sort or the ordered replay,
-    the same contract the serial projection runner documents.
-
-    STREAMING-ONLY input (applyInPandasWithState has no batch
-    evaluation mode); the batch form of the same census is the
-    events_downtime_gaps query, and the equivalence test pins this
-    operator against it through a real multi-batch stream.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    out_schema = (f"{key_col} string, gap_start_ns long, "
-                  "gap_end_ns long, gap_ns long")
-
-    def update(key, pdfs, state: GroupState):
-        last = state.get[0] if state.exists else None
-        ts = sorted(int(t) for pdf in pdfs for t in pdf[ts_col].tolist())
-        rows = []
-        for t in ts:
-            if last is not None and t - last > gap_min_ns:
-                rows.append((key[0], last, t, t - last))
-            last = t if last is None else max(last, t)
-        if last is not None:
-            state.update((last,))
-        yield pd.DataFrame(rows, columns=[key_col, "gap_start_ns",
-                                          "gap_end_ns", "gap_ns"])
-
-    return (events.select(key_col, ts_col)
-                  .groupBy(key_col)
-                  .applyInPandasWithState(
-                      update,
-                      outputStructType=out_schema,
-                      stateStructType="last_ts long",
-                      outputMode="append",
-                      timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def new_user_monitor(events: DataFrame, key_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
-    """STREAMING first-seen detector — the live twin of the batch
-    user-growth curve (user_growth_accumulation): emit exactly ONE row
-    per key, the first time it is ever seen, carrying its first event
-    time. Downstream, a per-day count of these rows IS the new-users
-    series, and its running sum the cumulative-distinct curve — the
-    sliding-scale alternative to recomputing min-day over the whole
-    log. State is one boolean per key (the theoretical minimum for
-    exact first-seen), emitted in append mode so every key appears at
-    most once across the stream's lifetime.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    out_schema = f"{key_col} long, first_ts long"
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            yield pd.DataFrame(columns=[key_col, "first_ts"]).astype(
-                {key_col: "int64", "first_ts": "int64"})
-            return
-        first = min(int(t) for pdf in pdfs for t in pdf[ts_col].tolist())
-        state.update((True,))
-        yield pd.DataFrame([(key[0], first)],
-                           columns=[key_col, "first_ts"])
-
-    return (events.select(key_col, ts_col)
-                  .groupBy(key_col)
-                  .applyInPandasWithState(
-                      update,
-                      outputStructType=out_schema,
-                      stateStructType="seen boolean",
-                      outputMode="append",
-                      timeoutConf=GroupStateTimeout.NoTimeout))

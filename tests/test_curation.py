@@ -157,42 +157,6 @@ def test_kmeans_deterministic_across_runs(emb):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
-    """functions/export.py writer: every doc lands in exactly one shard
-    directory, shard membership matches the plan, loader order (doc_id)
-    holds within each shard file set, manifest conserves totals and the
-    write is deterministic."""
-    import json
-    from pyspark.sql import functions as F
-    from photon_spark.functions import text
-    from photon_spark.functions.export import write_training_shards
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id",
-                    F.size(text.tokens("text")).cast("long")
-                     .alias("n_tokens")))
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(docs, out, budget=512,
-                                     seqs_per_shard=8)
-    back = spark.read.parquet(out)
-    n_in = docs.where(F.col("n_tokens") > 0).count()
-    assert back.count() == n_in == manifest["total_docs"]
-    assert back.select("doc_id").distinct().count() == n_in
-    # shard membership = first_seq div seqs_per_shard, tokens conserved
-    bad = back.where(F.col("shard_id")
-                     != F.expr("first_seq div 8")).count()
-    assert bad == 0
-    assert (back.agg(F.sum("n_tokens")).first()[0]
-            == manifest["total_tokens"])
-    # manifest on disk equals returned manifest
-    with open(f"{out}/_manifest.json") as f:
-        assert json.load(f) == manifest
-    # deterministic rewrite
-    out2 = str(tmp_path / "shards2")
-    assert write_training_shards(docs, out2, budget=512,
-                                 seqs_per_shard=8) == manifest
-
-
 # ------------------------- constant-bounded prefix rollup (round 10)
 
 def test_exclusive_prefix_offsets_tiers(spark):

@@ -416,8 +416,8 @@ def test_generation_pointer_is_nonce_unique_dir(spark, tmp_path):
     NONCE-UNIQUE generation dir whose full name is what the pointer
     commits — two maintainers racing to ordinal k+1 own disjoint dirs,
     so a loser's files can never interleave into the committed
-    generation. Also pins: legacy bare-ordinal pointers still resolve,
-    and an orphaned same-ordinal dir is never read."""
+    generation. Also pins: an orphaned same-ordinal dir is never read,
+    and the next commit sweeps it."""
     import os
 
     import photon_spark.events as ev_mod
@@ -448,17 +448,8 @@ def test_generation_pointer_is_nonce_unique_dir(spark, tmp_path):
         name2 = f.read().strip()
     assert name2.startswith("gen=2-") and name2 != name1
     assert store.read_all().count() == 2
-    # legacy bare-ordinal pointer still resolves to gen=<k>
-    legacy_dir = os.path.join(path, "gen=7")
-    os.makedirs(legacy_dir, exist_ok=True)
-    (store.read_all().write.mode("overwrite")
-     .partitionBy("stream_name").parquet(legacy_dir))
-    with open(os.path.join(path, "_generation"), "w") as f:
-        f.write("7")
-    probe = ev_mod.EventStore(spark, path)
-    assert probe._generation() == 7
-    assert probe._data_dir().endswith("gen=7")
-    assert probe.read_all().count() == 2
+    assert sorted(n for n in os.listdir(path)
+                  if n.startswith("gen=")) == [name2]
 
 
 def test_ingest_rows_driver_stamped_append(spark, tmp_path):
@@ -500,3 +491,23 @@ def test_ingest_rows_driver_stamped_append(spark, tmp_path):
     w1.ingest_rows([{"stream_name": "s"}])
     assert EventStore(spark, w1.path).ever_multi_writer()
     assert 500 <= w1.max_order_id() % 1000 < 1000
+
+
+def test_generation_commit_refuses_stale_pointer(tmp_path):
+    """A rewrite that lost the race to another commit raises and drops
+    its own directory instead of publishing over the winner (whose
+    sweep may already have deleted part of it)."""
+    import os
+
+    from photon_spark import generations
+
+    path = str(tmp_path / "t")
+    a, b = generations.next_name(1), generations.next_name(1)
+    for n in (a, b):
+        os.makedirs(os.path.join(path, n))
+    generations.commit(path, a, "")
+    assert generations.live(path) == (1, a)
+    with pytest.raises(RuntimeError, match="another rewrite"):
+        generations.commit(path, b, "")
+    assert generations.live(path) == (1, a)
+    assert sorted(os.listdir(path)) == ["_generation", a]

@@ -268,3 +268,25 @@ def test_get_event_is_one_job(spark, tmp_path):
     ev, jobs = _jobs(spark, api.get_event, "s", oid)
     assert ev["local_id"] == "x" and jobs == 1
     assert api.get_event("s", oid + 1) is None
+
+
+def test_live_runner_and_pulls_on_one_engine_fold_once(spark, tmp_path):
+    """A live runner folding micro-batches on the streaming callback
+    thread and pulls folding on the caller's thread share one engine:
+    the fold lock makes each event count once, whichever side folds it."""
+    api = PhotonAPI(spark, os.path.join(str(tmp_path), "events"))
+    api.post_event("s", "{}")
+    api.engine.register("c", NativeReducer("count"), initial_value=0)
+    runner = StreamingProjectionRunner(
+        api.engine, checkpoint_dir=os.path.join(str(tmp_path), "ckpt"))
+    query = runner.run(available_now=False)
+    try:
+        for _ in range(10):
+            api.post_event("s", "{}")
+            api.projection_value("c")
+        n = api.store.read_all().count()
+        proj = api.engine.projection("c")
+        assert n == 11
+        assert api.projection_value("c") == proj.processed == n
+    finally:
+        query.stop()

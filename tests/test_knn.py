@@ -4,6 +4,7 @@ choice — it must never change the result)."""
 
 from pyspark.sql import functions as F
 
+from photon_spark import generations
 from photon_spark.functions import similarity
 
 
@@ -96,7 +97,7 @@ def test_staged_ivf_reuses_and_invalidates(spark, sf_dir, tmp_path):
         assert corpus in ns._IVF_INDEXES
         # the staged store IS the materialized generation layout: the
         # base batch holds the whole corpus, centroids persist with it
-        idx = spark.read.parquet(similarity._ivf_data_dir(p1))
+        idx = spark.read.parquet(generations.data_dir(p1))
         assert idx.count() == n and "cell_id" in idx.columns
         assert len(similarity.load_ivf_centroids(p1)) > 0
         p2 = ns._staged_ivf(spark, str(d))
@@ -340,13 +341,13 @@ def test_ivf_retrain_and_swap(spark, tmp_path):
     stale_recall = recall(cents0)
     assert stale_recall <= 0.6, stale_recall
 
-    old_dir = similarity._ivf_data_dir(path)
+    old_dir = generations.data_dir(path)
     # probe-during-retrain: build the plan against the OLD pointer now
     pre = similarity.ivf_topk_from_index(spark, path, None, q, k=10,
                                          n_probe=1)
 
     cents1 = similarity.retrain_ivf_index(spark, path, n_cells=5)
-    assert similarity._ivf_gen_pointer(path)[0] == 1
+    assert generations.live(path)[0] == 1
     assert similarity.load_ivf_centroids(path) == cents1
     assert [c for c, _ in cents1] == [0, 1, 2, 3, 4]  # drift exemplar in
 
@@ -354,13 +355,13 @@ def test_ivf_retrain_and_swap(spark, tmp_path):
     assert fresh_recall == 1.0 and fresh_recall > stale_recall
 
     # the index holds every vector exactly once after retrain
-    n = spark.read.parquet(similarity._ivf_data_dir(path)).count()
+    n = spark.read.parquet(generations.data_dir(path)).count()
     assert n == base.count() + drift.count()
 
     # crash mid-retrain: fail the pointer swap — the new dir exists
     # but the OLD generation stays live; a re-run converges
-    # (retrain imports os locally, so patching the os module itself
-    # intercepts exactly its pointer-swap replace)
+    # (the generation commit's only os.replace is the pointer swap, so
+    # patching the os module intercepts exactly that)
     real_replace = os.replace
 
     def boom(src, dst):
@@ -374,12 +375,12 @@ def test_ivf_retrain_and_swap(spark, tmp_path):
             similarity.retrain_ivf_index(spark, path, n_cells=5)
     finally:
         os.replace = real_replace
-    assert similarity._ivf_gen_pointer(path)[0] == 1  # old gen live
+    assert generations.live(path)[0] == 1  # old gen live
     assert recall(None) == fresh_recall  # reads unaffected
     cents2 = similarity.retrain_ivf_index(spark, path, n_cells=5)
-    assert similarity._ivf_gen_pointer(path)[0] == 2
+    assert generations.live(path)[0] == 2
     assert cents2 == cents1  # same corpus, same deterministic train
     # the crashed orphan and the superseded generation are swept
     gens = [d for d in os.listdir(path) if d.startswith("gen=")]
-    assert gens == [similarity._ivf_gen_pointer(path)[1]]
+    assert gens == [generations.live(path)[1]]
     assert recall(None) == fresh_recall

@@ -6,7 +6,7 @@ import os
 from pyspark.sql import functions as F
 
 from photon_spark import queries_layout as ql
-from photon_spark.functions.layout import zorder_layout, zvalue_expr
+from photon_spark.functions.layout import zvalue_expr
 
 
 def test_zorder_audit_sound(spark, sf_dir):
@@ -32,37 +32,6 @@ def test_zorder_audit_workload_wins_at_granularity(spark, sf_dir):
     l_total = sum(r[f"scan_{q}_lin"] for q in ("userq", "hourq", "boxq"))
     assert z_total < l_total
     assert r["scan_userq_z"] < r["scan_userq_lin"]
-
-
-def test_zorder_writer_partitions_are_disjoint_z_ranges(spark, sf_dir):
-    """The production writer (repartitionByRange on the z-value) really
-    range-partitions: per-partition [min_z, max_z] intervals are
-    pairwise disjoint, rows are conserved, and rows are z-sorted within
-    each partition — the layout contract parquet min-max stats feed on."""
-    from photon_spark.queries import _t
-    e = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        F.expr(f"(ts - {ql.T0_NS}) div {ql.HOUR_NS}").alias("hour"))
-    zed = zorder_layout(e, "user_id", "hour", bits=10, n_ranges=8)
-    z = F.expr(zvalue_expr("user_id", "hour", 10, "spark"))
-    boxes = (zed.withColumn("f", F.spark_partition_id())
-                .withColumn("z", z)
-                .groupBy("f")
-                .agg(F.min("z").alias("lo"), F.max("z").alias("hi"),
-                     F.count(F.lit(1)).alias("n"))
-                .orderBy("lo").collect())
-    assert sum(b["n"] for b in boxes) == e.count()
-    for prev, cur in zip(boxes, boxes[1:]):
-        assert prev["hi"] <= cur["lo"]
-    # z-sorted within partitions: per-partition sortedness via a lag scan
-    def part_sorted(it):
-        last = None
-        for row in it:
-            if last is not None and row.z < last:
-                yield row
-            last = row.z
-    bad = (zed.withColumn("z", z).rdd.mapPartitions(part_sorted).count())
-    assert bad == 0
 
 
 def test_zvalue_expr_spark_duckdb_agree(spark):

@@ -164,3 +164,47 @@ def test_lint_flags_complex_typed_output_columns(sf_dir):
     # scalar rendering of the same data passes
     assert bad_columns(
         con, "SELECT array_to_string(['a', 'b'], '>') AS seq") == []
+
+
+#: public functions no program path calls, kept because a test compares
+#: another path against them or composes them: name -> that test
+REFERENCE_ONLY = {
+    "embedding_near_duplicates_bruteforce":
+        "tests/test_northstar.py::test_embedding_blocked_miner_equals_bruteforce",
+    "dedup_exact":
+        "tests/test_pipeline.py::test_training_pipeline_end_to_end",
+}
+
+
+def test_every_public_definition_has_a_caller():
+    # A top-level public function or class in photon_spark/ that nothing
+    # outside tests/ references is dead weight: delete it with its tests,
+    # or name the test it serves as a reference in REFERENCE_ONLY.
+    # Registry rows (q_*) are called through the QUERIES table.
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = sorted((root / "photon_spark").rglob("*.py"))
+    scope = pkg + sorted((root / "tools").rglob("*.py")) \
+        + sorted((root / "perfbench").rglob("*.py")) \
+        + [root / "bench.py", root / "__spark_entry__.py"]
+    texts = {p: p.read_text() for p in scope}
+    unused = []
+    for p in pkg:
+        for node in ast.parse(texts[p]).body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) \
+                    or node.name.startswith(("_", "q_")) \
+                    or node.name in REFERENCE_ONLY:
+                continue
+            word = re.compile(rf"\b{node.name}\b")
+            # the definition itself is one match in its own file
+            refs = sum(len(word.findall(t)) for t in texts.values()) - 1
+            if refs == 0:
+                unused.append(f"{p.relative_to(root)}:{node.name}")
+    assert unused == []
+    for name, test in REFERENCE_ONLY.items():
+        path, fn = test.split("::")
+        assert f"def {fn}(" in (root / path).read_text(), name
+        assert re.search(rf"\b{name}\b", (root / path).read_text()), name

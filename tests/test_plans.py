@@ -48,7 +48,7 @@ def test_text_profile_prunes_scan_columns(docs):
 def test_exact_dedup_partial_aggregation(docs):
     # digest groupBy must map-side combine: two HashAggregate nodes around
     # one Exchange, and only digest+id columns shuffle (never text).
-    plan = _plan(dedup.exact_duplicates(docs))
+    plan = _plan(dedup.dedup_exact(docs))
     assert plan.count("HashAggregate") >= 2
     exchange_lines = [ln for ln in plan.splitlines() if "Exchange" in ln]
     assert exchange_lines and all("text" not in ln for ln in exchange_lines)

@@ -111,44 +111,6 @@ def test_asof_join_matches_sequential_scan(spark, evs, strict):
 
 
 @settings(**_SETTINGS)
-@given(split=st.lists(st.integers(min_value=0, max_value=2),
-                      min_size=5, max_size=40),
-       k=st.integers(min_value=0, max_value=12))
-def test_decay_counts_merge_advance_commute(spark, split, k):
-    """For ANY 3-way partition of an event batch: merging per-part decay
-    counters equals the whole-batch counters, and advancing the merged
-    state by k steps equals advancing each part then merging — the
-    algebra incremental pipelines rely on."""
-    from photon_spark import queries_ranking as qr
-    base = qr.DECAY_REF_NS - 40 * qr.DAY_NS
-    rows = [("t%d" % (i % 2), base + i * 777 * qr.DAY_NS // 13)
-            for i in range(len(split))]
-    df = spark.createDataFrame(rows, "event_type string, ts long")
-    parts = []
-    for g in range(3):
-        sel = [i for i, s in enumerate(split) if s == g]
-        sub = [rows[i] for i in sel]
-        if sub:
-            parts.append(spark.createDataFrame(
-                sub, "event_type string, ts long"))
-    whole = {(r["event_type"], r["step"]): r["n"]
-             for r in qr.decay_step_counts(df).collect()}
-    if parts:
-        merged_df = qr.merge_decay_counts(
-            *[qr.decay_step_counts(p) for p in parts])
-        merged = {(r["event_type"], r["step"]): r["n"]
-                  for r in merged_df.collect()}
-        assert merged == whole
-        a1 = {(r["event_type"], r["step"]): r["n"]
-              for r in qr.advance_decay_counts(merged_df, k).collect()}
-        a2 = {(r["event_type"], r["step"]): r["n"]
-              for r in qr.merge_decay_counts(
-                  *[qr.advance_decay_counts(qr.decay_step_counts(p), k)
-                    for p in parts]).collect()}
-        assert a1 == a2
-
-
-@settings(**_SETTINGS)
 @given(words_a=st.lists(st.sampled_from(
            ["join", "scan", "hash", "filter", "merge", "row"]),
        min_size=1, max_size=8),

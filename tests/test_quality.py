@@ -5,7 +5,6 @@ express — golden values, the winnowing match guarantee, scale-shape
 invariants."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from photon_spark.functions import quality
 
@@ -123,48 +122,4 @@ def test_repetition_profile_is_map_only(docs):
     # No shuffle: the per-doc profile must contain no Exchange at all.
     plan = (quality.repetition_profile(docs)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-
-def test_compression_profile_matches_driver_zlib(spark, sf_dir):
-    # Independent recompute: driver-side zlib over the collected corpus
-    # must reproduce every byte count and 6dp ratio the Arrow pass
-    # emitted (certifies encode/batching/column plumbing; zlib itself
-    # is the same library on both paths by construction).
-    import zlib
-    from photon_spark.functions.quality import (compression_profile,
-                                                ZLIB_LEVEL, _r6)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = {r["doc_id"]: (r["raw_bytes"], r["compressed_bytes"],
-                         r["compression_ratio"])
-           for r in compression_profile(d).collect()}
-    want = {}
-    for r in d.select("doc_id", "text").collect():
-        raw = (r["text"] or "").encode("utf-8")
-        comp = zlib.compress(raw, ZLIB_LEVEL)
-        want[r["doc_id"]] = (len(raw), len(comp),
-                             _r6(len(comp) / len(raw)) if raw else None)
-    assert got == want
-
-
-def test_compression_profile_discriminates_repetition(spark):
-    # The signal must actually rank: highly repetitive text compresses
-    # far below a high-entropy string of the same length.
-    import random
-    from photon_spark.functions.quality import compression_profile
-    rng = random.Random(7)
-    rep = "spam ham " * 500
-    noise = "".join(rng.choice("abcdefghijklmnopqrstuvwxyz 0123456789")
-                    for _ in range(len(rep)))
-    df = spark.createDataFrame([(0, rep), (1, noise)], "doc_id long, text string")
-    r = {x["doc_id"]: x["compression_ratio"]
-         for x in compression_profile(df).collect()}
-    assert r[0] < 0.05 < 0.5 < r[1]
-
-
-def test_compression_profile_is_shuffle_free(spark, sf_dir):
-    from photon_spark.functions.quality import compression_profile
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = (compression_profile(d)._jdf.queryExecution()
-            .executedPlan().toString())
     assert "Exchange" not in plan

@@ -6,7 +6,6 @@ import math
 from pyspark.sql import functions as F
 
 from photon_spark import queries_ranking as qr
-from photon_spark.streaming.tuning import drain
 
 
 def _plan(df) -> str:
@@ -204,69 +203,6 @@ def test_gram_int8_drives_pca(spark, sf_dir):
 
 # ------------------------------------- decay: incremental maintenance
 
-def test_decay_counts_streaming_maintenance(spark, sf_dir, tmp_path):
-    """foreachBatch maintenance of the per-(type, step) counter state
-    over two arriving event files equals the batch decay summary —
-    the mergeable-registers property, end to end."""
-    import os
-    import shutil
-
-    from photon_spark.queries import _t
-
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    for i, cond in enumerate((F.col("event_id") % 2 == 0,
-                              F.col("event_id") % 2 == 1)):
-        ev_raw.where(cond).coalesce(1) \
-              .write.parquet(str(tmp_path / f"p{i}"))
-        part = next((tmp_path / f"p{i}").glob("*.parquet"))
-        shutil.copy(part, drop / f"batch{i}.parquet")
-
-    state = str(tmp_path / "counts")
-
-    def apply_batch(batch_df, batch_id):
-        from photon_spark.queries import _normalize_ts
-        s = batch_df.sparkSession
-        new = qr.decay_step_counts(_normalize_ts(batch_df))
-        if os.path.exists(state):
-            new = qr.merge_decay_counts(s.read.parquet(state), new)
-        new.localCheckpoint()
-        pdf = new.toPandas()
-        s.createDataFrame(pdf).write.mode("overwrite").parquet(state)
-
-    w = (spark.readStream.schema(ev_raw.schema)
-         .option("maxFilesPerTrigger", 1)
-         .parquet(str(drop))
-         .writeStream.foreachBatch(apply_batch)
-         .option("checkpointLocation", str(tmp_path / "ckpt")))
-    drain(w, spark, timeout_sec=120)
-
-    got = {r["event_type"]: (r["n_events"], r["decayed_units"])
-           for r in qr.decay_summary_from_counts(
-               spark.read.parquet(state)).collect()}
-    want = {r["event_type"]: (r["n_events"], r["decayed_units"])
-            for r in qr.q_events_decay_popularity(spark, sf_dir).collect()}
-    assert got == want
-
-
-def test_decay_advance_equals_recompute(spark, sf_dir):
-    """Re-decaying the counter state by k steps (integer shift with
-    clamp) equals recomputing from raw events at the later reference —
-    including events already clamped at the weight floor."""
-    from photon_spark.queries import _t
-    e = _t(spark, sf_dir, "events")
-    for k in (1, 3, 10):
-        later_ref = (qr.DECAY_REF_NS
-                     + k * qr.DECAY_STEP_DAYS * qr.DAY_NS)
-        adv = qr.advance_decay_counts(
-            qr.decay_step_counts(e), k)
-        rec = qr.decay_step_counts(e, ref_ns=later_ref)
-        a = {(r["event_type"], r["step"]): r["n"] for r in adv.collect()}
-        b = {(r["event_type"], r["step"]): r["n"] for r in rec.collect()}
-        assert a == b
-
-
 # ----------------------------------------------------- RRF fusion
 
 def test_rrf_matches_recompute_from_legs(spark, sf_dir):
@@ -350,12 +286,12 @@ def test_trending_users_matches_naive(spark, sf_dir):
             assert got[(t, i)] == (u, -nu)
 
 
-def test_decay_step_clamped_for_future_events(spark):
+def test_decay_step_clamped_for_future_events(spark, tmp_path):
     # A future-dated/late event (ts > DECAY_REF_NS) must get step 0 and
     # the MAX weight — not a negative step that inflates the weight past
     # 2^MAX_STEP (and, ~128 future days out, wraps Spark's 32-bit
     # shiftleft while DuckDB's BIGINT shift does not, splitting the hash
-    # gate). Pins the greatest(0, least(...)) clamp on every decay path.
+    # gate). Pins the greatest(0, least(...)) clamp of the gated row.
     day = qr.DAY_NS
     rows = [
         ("click", 7, qr.DECAY_REF_NS + 3 * day),       # slightly future
@@ -363,14 +299,13 @@ def test_decay_step_clamped_for_future_events(spark):
         ("click", 9, qr.DECAY_REF_NS - 1),             # now → step 0
         ("click", 10, qr.DECAY_REF_NS - 100 * day),    # past → clamp max
     ]
-    e = spark.createDataFrame(rows, "event_type string, user_id long, ts long")
-    counts = qr.decay_step_counts(e).collect()
-    by_step = {r["step"]: r["n"] for r in counts}
-    assert by_step == {0: 3, qr.DECAY_MAX_STEP: 1}
-    summary = qr.decay_summary_from_counts(
-        qr.decay_step_counts(e)).collect()[0]
+    spark.createDataFrame(
+        rows, "event_type string, user_id long, ts long").write.parquet(
+        str(tmp_path / "events.parquet"))
+    summary = qr.q_events_decay_popularity(spark, str(tmp_path)).collect()
     # 3 events at max weight + 1 at min weight, exactly
-    assert summary["decayed_units"] == 3 * qr.DECAY_SCALE + 1
+    assert [(r["n_events"], r["decayed_units"]) for r in summary] == [
+        (4, 3 * qr.DECAY_SCALE + 1)]
 
 
 def test_dup_graph_triangles_matches_naive(spark, sf_dir):

@@ -3,6 +3,7 @@ must reuse PLANS, never results — these tests pin the safety rules."""
 
 import os
 import time
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +62,30 @@ def test_memo_query_pure_plan_reused_not_result(spark, corpus):
     assert d2 is not d1
     rows2 = sorted(map(tuple, d2.collect()))
     assert rows1 == rows2 == [("en", 20)]
+
+
+def test_memo_query_probe_failure_warns_once(spark, corpus, monkeypatch):
+    # a failing private job-count probe (e.g. after a Spark upgrade)
+    # leaves every query unmemoized: it must say so, once per process
+    def broken(sc):
+        raise AttributeError("nextJobId")
+
+    monkeypatch.setattr(relations, "_jobs_submitted", broken)
+    monkeypatch.setattr(relations, "_PROBE_WARNED", False)
+    calls = []
+
+    def q(sp, sf):
+        calls.append(1)
+        return read_base(sp, sf, "documents").select("doc_id")
+
+    read_base(spark, corpus, "documents").schema
+    w = memo_query("_test_probe_broken", q)
+    with pytest.warns(RuntimeWarning, match="plan memo disabled"):
+        w(spark, corpus)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        w(spark, corpus)
+    assert len(calls) == 2  # never memoized
 
 
 def test_memo_query_side_effecting_never_memoized(spark, corpus):

@@ -251,34 +251,3 @@ def test_salted_sessionize_boundary_glue(spark):
     empty = spark.createDataFrame([], "k long, ts long, eid long")
     assert salted_sessionize(empty, ["k"], "ts",
                              gap_ns=20).count() == 0
-
-
-def test_auto_key_window_routes_by_skew(spark):
-    """The adaptive router: balanced keys take the plain one-shuffle
-    window; a hot key above the share threshold takes the bucketed
-    kernel — and both paths return identical rows."""
-    from photon_spark.functions.skew import auto_key_window, hot_key_share
-
-    hot = (spark.range(5_000)
-           .select(F.when(F.col("id") % 2 == 0, 0)
-                    .otherwise(F.col("id")).alias("k"),
-                   F.col("id").alias("ts"), F.col("id").alias("eid")))
-    n, share = hot_key_share(hot, ["k"])
-    assert n == 5_000 and share >= 0.5
-    routed = auto_key_window(hot, ["k"], ["ts", "eid"], ["ts"],
-                             min_rows=1_000, share_threshold=0.05)
-    plain = auto_key_window(hot, ["k"], ["ts", "eid"], ["ts"],
-                            min_rows=10**12)  # force the plain path
-    assert "_bkt" in routed._jdf.queryExecution().executedPlan().toString()
-    pplan = plain._jdf.queryExecution().executedPlan().toString()
-    assert "_bkt" not in pplan
-    cols = sorted(routed.columns)
-    assert ({tuple(r) for r in routed.select(cols).collect()}
-            == {tuple(r) for r in plain.select(cols).collect()})
-    # balanced keys stay on the plain path even above min_rows
-    flat = (spark.range(5_000)
-            .select((F.col("id") % 500).alias("k"),
-                    F.col("id").alias("ts"), F.col("id").alias("eid")))
-    p2 = auto_key_window(flat, ["k"], ["ts", "eid"], [],
-                         min_rows=1_000, share_threshold=0.05)
-    assert "_bkt" not in p2._jdf.queryExecution().executedPlan().toString()

@@ -171,18 +171,23 @@ def test_failed_projection_keeps_last_good_state(spark, tmp_path):
 
 
 def test_virtual_stream_history(spark, tmp_path):
-    """Successive state snapshots are captured per micro-batch (the
+    """Successive state snapshots are persisted per micro-batch (the
     projection's virtual stream, streams.clj:182-200)."""
+    import json
     store = _mk_store(spark, tmp_path)
     engine = ProjectionEngine(store)
     engine.register("c", NativeReducer("count"), initial_value=0)
     ckpt = os.path.join(str(tmp_path), "ckpt")
     _post(store, "s", 5)
-    runner = StreamingProjectionRunner(engine, checkpoint_dir=ckpt)
+    runner = StreamingProjectionRunner(
+        engine, checkpoint_dir=ckpt,
+        state_path=os.path.join(str(tmp_path), "states"))
     runner.run()
     _post(store, "s", 3)
     runner.run()
-    states = [v for (_b, name, v) in runner.history if name == "c"]
+    states = [json.loads(r["value_json"]) for r in
+              runner.state_table().where("projection_name = 'c'")
+              .orderBy("batch_id").collect()]
     assert states == [5, 8]
 
 
@@ -1134,57 +1139,6 @@ def test_cdc_compact_refuses_unmarked_only_table(spark, sf_dir, tmp_path):
     ev.unpersist()
 
 
-def test_cdc_legacy_marker_still_refuses_erased_boundaries(spark, sf_dir,
-                                                           tmp_path):
-    """A table compacted by the ROUND-7 protocol (fold files inside
-    batch=<tag>, lower dirs deleted, `_compacted_to` marker, no
-    manifest) must keep its guarantees after the upgrade: state() reads
-    the in-partition fold, and state_at below the legacy fold point
-    refuses instead of answering from partial history."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-    from photon_spark.streaming.cdc import CdcMergeTable
-    ev = _cdc_changelog(spark, sf_dir).cache()
-    ts = sorted(r["ts"] for r in ev.select("ts").collect())
-    cut = ts[len(ts) // 2]
-    keys, order = ["user_id", "event_type"], ["ts", "event_id"]
-    root = str(tmp_path / "legacy")
-    t = CdcMergeTable(spark, root, keys, order)
-    t.apply_batch(ev.where(F.col("ts") < cut), 0)
-    t.apply_batch(ev.where(F.col("ts") >= cut), 1)
-    s0 = {tuple(r) for r in t.state().collect()}
-
-    # hand-build the round-7 post-compact layout: fold files INSIDE
-    # batch=1 replacing the originals, marker file, batch=0 gone
-    tmp = os.path.join(root, "_legacy_fold_tmp")
-    t.state(include_tombstones=True).write.parquet(tmp)
-    dest = os.path.join(root, "batch=1")
-    for f in os.listdir(dest):
-        if not f.startswith(("_", ".")):
-            os.remove(os.path.join(dest, f))
-    for f in os.listdir(tmp):
-        if not f.startswith(("_", ".")):
-            shutil.copy(os.path.join(tmp, f),
-                        os.path.join(dest, f"fold-{f}"))
-    shutil.rmtree(tmp)
-    shutil.rmtree(os.path.join(root, "batch=0"))
-    with open(os.path.join(root, "_compacted_to"), "w") as f:
-        f.write("1")
-
-    u = CdcMergeTable(spark, root, keys, order)
-    assert {tuple(r) for r in u.state().collect()} == s0
-    assert {tuple(r) for r in u.state_at(1).collect()} == s0
-    with _pytest.raises(ValueError, match="folded"):
-        u.state_at(0)
-    # and a NEW-protocol compaction upgrades the layout in place
-    u.compact()
-    assert {tuple(r) for r in u.state().collect()} == s0
-    assert u._manifest()["tag"] == 1
-    ev.unpersist()
-
-
 def test_cdc_compact_marker_and_concurrent_batches(spark, sf_dir,
                                                    tmp_path):
     """Three protocol guarantees added with the _compacted_to marker:
@@ -1516,8 +1470,8 @@ def test_cdc_compaction_lease_reclaim_and_writer_passthrough(
     """The lease replacing the bare sentinel (VERDICT r8 #5): a crashed
     compactor's EXPIRED lease no longer deadlocks — a writer passes it
     and the next compact() reclaims it and converges; an UNEXPIRED
-    foreign lease still refuses both writer and second compactor; the
-    legacy sentinel keeps its always-blocks semantics for writers."""
+    foreign lease still refuses both writer and second compactor; an
+    unparsable lease is corruption and raises for both."""
     import json
     import os
     import time
@@ -1551,16 +1505,15 @@ def test_cdc_compaction_lease_reclaim_and_writer_passthrough(
     state_after = {tuple(r) for r in t.state().collect()}
     assert state_after  # folded table still serves
 
-    # legacy pre-lease sentinel: writers still always blocked (fail
-    # closed on unknown age), compact() still converges and clears it
+    # leases are written whole by an atomic replace, so an unparsable
+    # one is corruption: writer and compactor both refuse
     with open(lease_path, "w") as f:
         f.write("compact")
-    with _pytest.raises(RuntimeError, match="legacy"):
+    with _pytest.raises(RuntimeError, match="corrupt compaction lease"):
         t.apply_batch(ev.limit(1), 2)
-    # reclaimable by ANY compactor — the legacy protocol's own recovery
-    # action was "re-run compact() to converge"
-    t.compact(lease_ttl_sec=60)
-    assert not os.path.exists(lease_path)
+    with _pytest.raises(RuntimeError, match="corrupt compaction lease"):
+        t.compact(lease_ttl_sec=60)
+    os.remove(lease_path)
     assert {tuple(r) for r in t.state().collect()} == state_after
     ev.unpersist()
 

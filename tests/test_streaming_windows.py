@@ -4,7 +4,6 @@ audit sizes the delay for)."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from photon_spark.streaming.tuning import drain
@@ -182,131 +181,6 @@ def test_streaming_session_agg_equals_batch_on_closed_sessions(
     assert got == want and got
     # the bridged fragment really is one session of 3 events
     assert any(n == 3 and s == "a" for s, _, _, n in got), got
-
-
-def test_downtime_monitor_matches_batch_gaps(spark, tmp_path):
-    """Multi-batch streaming replay through downtime_monitor must emit
-    exactly the over-threshold gap set the batch query computes, each
-    gap exactly once, with per-key state carrying across micro-batch
-    boundaries (a gap straddling two chunks is only visible if
-    last_ts survives in state)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from photon_spark.queries import _t
-    from photon_spark.queries_pipeline import GAP_MIN_NS
-    from photon_spark.streaming.windows import downtime_monitor
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
-                            "/root/testdata/sf0.001")
-    ev = _t(spark, sf_dir, "events").select("event_type", "ts")
-
-    # batch truth: every over-threshold gap (no top-k)
-    from pyspark.sql import Window
-    w = Window.partitionBy("event_type").orderBy("ts")
-    truth = {(r["event_type"], r["p"], r["ts"])
-             for r in ev.withColumn("p", F.lag("ts").over(w))
-                        .where(F.col("p").isNotNull()
-                               & (F.col("ts") - F.col("p") > GAP_MIN_NS))
-                        .collect()}
-    assert truth, "fixture must contain over-threshold gaps"
-
-    # write 4 chronological chunks so gaps straddle micro-batches
-    src = str(tmp_path / "chunks")
-    qs = ev.approxQuantile("ts", [0.25, 0.5, 0.75], 0.0)
-    bounds = [None] + [int(q) for q in qs] + [None]
-    for i in range(4):
-        c = ev
-        if bounds[i] is not None:
-            c = c.where(F.col("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            c = c.where(F.col("ts") <= bounds[i + 1])
-        c.coalesce(1).write.mode("overwrite").parquet(f"{src}/b{i}")
-    # one dir per chunk → maxFilesPerTrigger=1 replays chronologically?
-    # file source orders by path; bN names sort chronologically.
-    import glob
-    files = sorted(glob.glob(f"{src}/b*/part-*.parquet"))
-    merged = str(tmp_path / "feed")
-    os.makedirs(merged)
-    for i, f in enumerate(files):
-        os.rename(f, f"{merged}/{i:03d}.parquet")
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(merged))
-    gaps = downtime_monitor(stream, GAP_MIN_NS)
-    q = (gaps.writeStream.format("memory").queryName("dtm")
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {(r["event_type"], r["gap_start_ns"], r["gap_end_ns"])
-           for r in spark.sql("select * from dtm").collect()}
-    assert got == truth
-
-
-def test_new_user_monitor_matches_batch_growth(spark, tmp_path):
-    """Full chronological replay through new_user_monitor must emit one
-    row per user at its true first event time — aggregated per day it
-    equals the batch growth curve's new_users series, with no key
-    re-emitted across micro-batches."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from photon_spark.queries import _t
-    from photon_spark.queries_pipeline import q_user_growth_accumulation
-    from photon_spark.streaming.windows import new_user_monitor
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
-                            "/root/testdata/sf0.001")
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-
-    src = str(tmp_path / "chunks")
-    qs = ev.approxQuantile("ts", [0.33, 0.66], 0.0)
-    bounds = [None] + [int(q) for q in qs] + [None]
-    for i in range(3):
-        c = ev
-        if bounds[i] is not None:
-            c = c.where(F.col("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            c = c.where(F.col("ts") <= bounds[i + 1])
-        c.coalesce(1).write.mode("overwrite").parquet(f"{src}/b{i}")
-    merged = str(tmp_path / "feed")
-    os.makedirs(merged)
-    for i, f in enumerate(sorted(glob.glob(f"{src}/b*/part-*.parquet"))):
-        os.rename(f, f"{merged}/{i:03d}.parquet")
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(merged))
-    q = (new_user_monitor(stream).writeStream.format("memory")
-         .queryName("num").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck2")).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    emitted = spark.sql("select * from num").collect()
-    # exactly one row per user, at the true first event time
-    assert len(emitted) == len({r["user_id"] for r in emitted})
-    truth_first = {r["user_id"]: r["f"] for r in
-                   ev.groupBy("user_id").agg(F.min("ts").alias("f"))
-                     .collect()}
-    assert {r["user_id"]: r["first_ts"] for r in emitted} == truth_first
-    # per-day rollup equals the batch growth curve's new_users column
-    day = 86_400_000_000_000
-    got_days = {}
-    for r in emitted:
-        d = r["first_ts"] - r["first_ts"] % day
-        got_days[d] = got_days.get(d, 0) + 1
-    batch = {r["day_ns"]: r["new_users"] for r in
-             q_user_growth_accumulation(spark, sf_dir).collect()
-             if r["new_users"] > 0}
-    assert got_days == batch
 
 
 # ------------------------------------- stream-stream interval join
