@@ -16,10 +16,14 @@ Reference parity (SURVEY.md §2.4, citations into /root/reference):
 
 Scale design — three reducer tiers (SURVEY.md §4 custom-work #1):
 
-1. ``NativeReducer`` — named built-ins (count/sum/avg/min/max/...) compile to
-   Catalyst aggregates: fully parallel, map-side partial aggregation, no
-   Python in the hot path. This is the 100 TB path and covers every reducer
-   photon's own tests exercise (count-folds, sum-folds).
+1. ``NativeReducer`` — named built-ins (count/sum/avg/min/max). A delta
+   above one Arrow batch runs as a Catalyst aggregate: fully parallel,
+   map-side partial aggregation, no Python per event. This is the 100 TB
+   path and covers every reducer photon's own tests exercise (count-folds,
+   sum-folds). A smaller delta of integral or floating values is
+   evaluated per row by Catalyst and reduced on the driver, to the same
+   values and Python types; any other value type, and a long sum that
+   could leave the long range, takes the aggregate.
 2. ``AssociativeReducer`` — user fold + user merge. A delta of at most one
    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) is
    folded on the driver; a larger one folds distributed over
@@ -36,19 +40,25 @@ One fold for all projections (:meth:`ProjectionEngine._fold_df`): photon
 feeds each arriving event to every projection from one feed
 (streams.clj:125-145, :410-420), and so does the engine. One delta — a
 streaming micro-batch, or one store read from the lowest resume point —
-advances every projection: all native reducers in ONE aggregate, each
-over ``when(its stream AND order_id > its resume point)``; the
-associative and serial ones from ONE Arrow collect of the union of the
-rows and columns they read, each filtered on the driver. That collect
-stops past one Arrow batch unless it serves serial folds only, which need
-their whole delta anyway; past it, each tier takes its large-delta path
-above. The pull path records the store version
-(:meth:`EventStore.version`, the stat stamp the read plan is memoized
-on) each read was taken at, and a projection whose version is unchanged
-is not read for: a pull after an unchanged store runs no Spark job. A resume point is the higher of ``last_event`` and
-the order_id the last store read covered, so a projection whose stream
-gets no new events does not hold the read's lower bound at its old
-``last_event``.
+advances every projection, each over the rows of its stream above its
+resume point. A delta of at most one Arrow batch is ONE collect: the
+union of the rows and columns the associative and serial projections
+read, plus two per-row columns per native reducer (its row flag and its
+value, evaluated by Catalyst), reduced on the driver; the Python tiers
+fold from the same frame. Past one Arrow batch that collect is
+discarded, and a native reducer over values that are not integral or
+floating skips it: the native reducers run in ONE Catalyst aggregate,
+whose row counts pick the rows of a second collect for the Python
+tiers. Without a native reducer the Python tiers' collect also stops
+past one Arrow batch, unless it serves serial folds only, which need
+their whole delta anyway. Past it each tier takes its large-delta path above. The pull
+path records the store version (:meth:`EventStore.version`, the stat
+stamp the read plan is memoized on) each read was taken at, and a
+projection whose version is unchanged is not read for: a pull after an
+unchanged store runs no Spark job. A resume point is the higher of
+``last_event`` and the order_id the last store read covered, so a
+projection whose stream gets no new events does not hold the read's
+lower bound at its old ``last_event``.
 """
 
 from __future__ import annotations
@@ -62,8 +72,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from photon_spark.events import ALL_STREAMS, EventStore
 
@@ -78,16 +90,21 @@ DEFAULT_PROJECTIONS = ("__streams__", "__security-state__")
 class NativeReducer:
     """Built-in reducer compiled to a native Catalyst aggregate.
 
-    ``kind`` ∈ {count, sum, avg, min, max, count_distinct}; ``expr`` is a SQL
-    expression string over the event columns (e.g. a payload field via
-    ``get_json_object(payload, '$.k')``).
+    ``kind`` ∈ {count, sum, avg, min, max}; ``expr`` is a SQL expression
+    string over the event columns (e.g. a payload field via
+    ``get_json_object(payload, '$.k')``). Every kind merges across deltas,
+    so a projection advanced twice equals one advanced once.
     """
     kind: str
     expr: str | None = None
 
     #: kind → aggregate over the value column (``count`` counts rows)
     _AGGS = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min,
-             "max": F.max, "count_distinct": F.count_distinct}
+             "max": F.max}
+
+    def __post_init__(self):
+        if self.kind not in self._AGGS:
+            raise ValueError(f"unknown native reducer: {self.kind}")
 
 
 @dataclass
@@ -319,8 +336,10 @@ class ProjectionEngine:
         the projections whose recorded store version is stale; the others
         are skipped, so a store whose version has not moved since the
         last read costs no Spark job. Each projection folds only the rows
-        of its stream above its resume point: the native reducers in one
-        aggregate, the associative and serial ones from one collect.
+        of its stream above its resume point, every tier from one collect
+        when the delta fits one Arrow batch (:meth:`_fold_one_batch`);
+        otherwise, the native reducers in one aggregate and the
+        associative and serial ones from a second collect.
         → ``{name: error}`` of native and associative reducers that
         raised (a serial reducer's error fails its projection instead).
         """
@@ -354,19 +373,97 @@ class ProjectionEngine:
                   if not isinstance(p.reducer, NativeReducer)]
         # the highest order_id the read saw; every projection that folded
         # has read all of its stream up to it, new events or none
-        top, counts = 0, None
-        if native:
-            top, counts = self._fold_native(native, python, df, errors,
-                                            emit_states)
-        if python:
-            top = max(top, self._fold_python(python, df, counts, errors,
-                                             emit_states))
+        top = (self._fold_one_batch(native, python, df, errors, emit_states)
+               if native else None)
+        if top is None:
+            top, counts = 0, None
+            if native:
+                top, counts = self._fold_native(native, python, df, errors,
+                                                emit_states)
+            if python:
+                top = max(top, self._fold_python(python, df, counts, errors,
+                                                 emit_states))
         if version is not None:
             for p in projs:
                 if p.status != "failed" and p.projection_name not in errors:
                     p.scanned = max(_resume(p), top)
                     p.read_version = version
         return errors
+
+    # -- a delta of at most one Arrow batch: one collect ------------------
+    def _fold_one_batch(self, native: list[Projection],
+                        python: list[Projection], df: DataFrame,
+                        errors: dict, emit_states: bool) -> int | None:
+        """Every projection from ONE Arrow collect of at most one Arrow
+        batch (``limit(cap + 1)``): the rows and columns the Python tiers
+        read plus, per projection, its row flag ``when(its rows, 1)`` and,
+        per native reducer, its value ``when(its rows, expr)``, evaluated
+        by Catalyst. The native reducers reduce their values on the
+        driver (:func:`_reduce_native`); the flags count the Python
+        tiers' rows, which then fold from the same frame. → the delta's
+        max order_id or 0; None, with nothing folded, when a native value
+        is not integral or floating, the delta holds more than one Arrow
+        batch, a long sum could leave the long range, the query failed
+        or this PySpark lacks the pandas converter: the aggregate path
+        then runs, and Catalyst decides values, overflow and errors.
+        """
+        cap = _arrow_batch_rows(df)
+        convert = _pandas_converter(df.sparkSession) if python else None
+        if not cap or (python and convert is None):
+            return None
+        cols = df.columns
+        projs = native + python
+        where = {p.projection_name: _where(p, cols) for p in projs}
+        events = _collect_columns(python, cols)
+        t0 = time.perf_counter()
+        try:
+            q = _union_rows(df, projs, where).select(
+                *events,
+                *(_only(where[p.projection_name], F.lit(1)).alias(f"__c{j}")
+                  for j, p in enumerate(projs)),
+                *(_only(where[p.projection_name],
+                        F.expr(p.reducer.expr)).alias(f"__x{i}")
+                  for i, p in enumerate(native)
+                  if p.reducer.kind != "count"))
+            schema = q.schema
+            if not all(isinstance(schema[f"__x{i}"].dataType, _NUMERIC)
+                       for i, p in enumerate(native)
+                       if p.reducer.kind != "count"):
+                return None
+            table = q.limit(cap + 1).toArrow()
+        except Exception:
+            # the aggregate path evaluates the same expressions and
+            # reports a failing one against its own projection
+            return None
+        if table.num_rows > cap:
+            return None
+        fold_ms = (time.perf_counter() - t0) * 1000.0
+        reduced = {}
+        for i, p in enumerate(native):
+            flag = table.column(f"__c{i}")
+            n = len(flag) - flag.null_count
+            if n:
+                out = ((n, None) if p.reducer.kind == "count" else
+                       _reduce_native(p.reducer.kind, table.column(f"__x{i}"),
+                                      schema[f"__x{i}"].dataType))
+                if out is None:
+                    return None
+                reduced[i] = n, *out
+        pdf = (_event_frame(table.select(events),
+                            [schema[c] for c in events], convert)
+               if python else None)
+        oid = table.column("order_id") if "order_id" in cols else None
+        for i, (n, value, weight) in reduced.items():
+            mx = (pc.max(pc.filter(oid, pc.is_valid(table.column(f"__c{i}"))))
+                  .as_py() if oid is not None else None)
+            _advance_native(native[i], n, value, weight, mx, fold_ms,
+                            emit_states)
+        if python:
+            counts = {p.projection_name: table.num_rows
+                      - table.column(f"__c{j}").null_count
+                      for j, p in enumerate(python, len(native))}
+            self._fold_python(python, df, counts, errors, emit_states, pdf)
+        return (pc.max(oid).as_py() or 0) if oid is not None else 0
 
     # -- tier 1: one Catalyst aggregate ----------------------------------
     def _fold_native(self, projs: list[Projection], others: list[Projection],
@@ -378,10 +475,10 @@ class ProjectionEngine:
         brings its NULL-aware weight: F.avg skips NULL values, so the
         cross-batch merge must weight by count(expr), not by the row
         count. The same aggregate counts the rows of each projection in
-        ``others``. → (the delta's max order_id or 0, {name: rows} of
-        ``others``); (0, None) when the aggregate failed: each reducer is
-        then evaluated alone, so the failure stays with its own
-        projection.
+        ``others``. The path of a delta above one Arrow batch. → (the
+        delta's max order_id or 0, {name: rows} of ``others``); (0, None)
+        when the aggregate failed: each reducer is then evaluated alone,
+        so the failure stays with its own projection.
         """
         cols = df.columns
         has_oid = "order_id" in cols
@@ -402,35 +499,28 @@ class ProjectionEngine:
                     self._fold_native([p], [], df, errors, emit_states)
             return 0, None
         for i, p in enumerate(projs):
-            n = row[f"n{i}"]
-            if not n:
-                continue
-            _merge_native(p, n, row[f"v{i}"], row.get(f"w{i}"))
-            p.record_fold(n, fold_ms, p.current_value)
-            p.last_event = row.get(f"mx{i}") or p.last_event
-            p.touch_global_time()
-            if emit_states:
-                # per-event states only exist on the serial tier; the
-                # native tier's virtual stream is per-BATCH (one state
-                # per fold call)
-                p.emitted = [p.current_value]  # type: ignore[attr-defined]
+            if row[f"n{i}"]:
+                _advance_native(p, row[f"n{i}"], row[f"v{i}"],
+                                row.get(f"w{i}"), row.get(f"mx{i}"),
+                                fold_ms, emit_states)
         return (row.get("top") or 0,
                 {p.projection_name: row[f"c{j}"]
                  for j, p in enumerate(others)})
 
-    # -- tiers 2 and 3: one collect, folds on the driver ------------------
+    # -- tiers 2 and 3: folds on the driver -------------------------------
     def _fold_python(self, projs: list[Projection], df: DataFrame,
                      counts: dict | None, errors: dict,
-                     emit_states: bool) -> int:
+                     emit_states: bool, pdf=None) -> int:
         """Associative and serial projections from ONE Arrow collect of
         the union of the rows and columns they read; each projection then
         folds its own rows on the driver. An associative delta above one
         Arrow batch folds distributed instead, so no associative
         projection puts more than one Arrow batch on the driver.
 
-        With the row ``counts`` of the native aggregate, the collect
-        takes every serial delta whole and each associative one of at
-        most one Arrow batch, and skips projections with no rows.
+        With row ``counts`` (the native aggregate's, or the flags of
+        :meth:`_fold_one_batch`, which passes its collected ``pdf``), the
+        collect takes every serial delta whole and each associative one
+        of at most one Arrow batch, and skips projections with no rows.
         Without them it stops past one Arrow batch (``limit(cap + 1)``),
         unless it serves serial folds only, which need their whole delta
         anyway, so no limit adds a discarded collect; past one batch, the
@@ -447,7 +537,8 @@ class ProjectionEngine:
             driver = {p.projection_name for p in projs
                       if p.projection_name in serial or not cap
                       or counts[p.projection_name] <= cap}
-            pdf = _collect(df, projs, driver, where, 0)
+            if pdf is None:
+                pdf = _collect(df, projs, driver, where, 0)
         else:
             driver = {p.projection_name for p in projs}
             pdf = _collect(df, projs, driver, where,
@@ -567,23 +658,66 @@ def _only(where, col):
     return col if where is None else F.when(where, col)
 
 
+def _union_rows(df: DataFrame, projs: list[Projection], where: dict):
+    """``df``'s rows that any projection of ``projs`` folds (``where`` by
+    name)."""
+    conds = [where[p.projection_name] for p in projs]
+    if any(c is None for c in conds):
+        return df
+    return df.where(functools.reduce(operator.or_, conds))
+
+
 def _collect(df: DataFrame, projs: list[Projection], names: set,
              where: dict, cap: int):
     """Arrow collect of the union of the rows (``where`` by name) and
-    columns of the projections of ``projs`` named in ``names``, sorted
-    by order_id (plan order without one); None when it holds more than
-    ``cap`` rows (0: no bound) or no projection is named."""
+    columns of the projections of ``projs`` named in ``names``, as
+    pandas sorted by order_id (plan order without one); None when it
+    holds more than ``cap`` rows (0: no bound) or no projection is
+    named."""
     projs = [p for p in projs if p.projection_name in names]
     if not projs:
         return None
-    conds = [where[p.projection_name] for p in projs]
-    q = df
-    if all(c is not None for c in conds):
-        q = q.where(functools.reduce(operator.or_, conds))
-    q = q.select(*_collect_columns(projs, df.columns))
+    q = _union_rows(df, projs, where).select(
+        *_collect_columns(projs, df.columns))
     pdf = (q.limit(cap + 1) if cap else q).toPandas()
     if cap and len(pdf) > cap:
         return None
+    return _by_order_id(pdf)
+
+
+def _pandas_converter(session):
+    """``field`` → PySpark's converter of an Arrow column of that Spark
+    field to pandas, set up as ``DataFrame.toPandas`` sets it up, so a
+    ``toArrow`` collect reaches the folds as a ``toPandas`` one does;
+    None when this PySpark lacks that private API."""
+    try:
+        from pyspark.sql.pandas.types import _create_converter_to_pandas
+        jconf = session._jconf
+        mode = jconf.pandasStructHandlingMode()
+        tz = jconf.sessionLocalTimeZone()
+    except (ImportError, AttributeError):
+        return None
+    return lambda f: _create_converter_to_pandas(
+        f.dataType, f.nullable, timezone=tz,
+        struct_in_pandas="dict" if mode == "legacy" else mode,
+        error_on_duplicated_field_names=mode == "legacy")
+
+
+def _event_frame(table, fields: list, convert):
+    """The Arrow collect ``table`` (columns typed by the Spark ``fields``)
+    as pandas, each column converted by ``convert(field)``
+    (:func:`_pandas_converter`), sorted by order_id."""
+    import pandas as pd
+
+    raw = table.rename_columns([f"c{i}" for i in range(len(fields))]) \
+        .to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    return _by_order_id(pd.DataFrame(
+        {f.name: convert(f)(raw[f"c{i}"]) for i, f in enumerate(fields)},
+        index=raw.index))
+
+
+def _by_order_id(pdf):
+    """``pdf`` stably sorted by order_id, when it has one."""
     if "order_id" in pdf.columns:
         pdf = pdf.sort_values("order_id", kind="stable", ignore_index=True)
     return pdf
@@ -624,9 +758,6 @@ def _native_aggs(reducer: NativeReducer, i: int, where, has_oid: bool):
     """The aggregate columns of native reducer number ``i`` over the rows
     ``where`` keeps: ``n{i}`` rows, ``v{i}`` value, ``mx{i}`` max
     order_id, and for avg ``w{i}``, its non-NULL weight."""
-    if reducer.kind not in NativeReducer._AGGS:
-        raise ValueError(f"unknown native reducer: {reducer.kind}")
-
     val = _only(where, F.lit(1) if reducer.kind == "count"
                 else F.expr(reducer.expr))
     out = [F.count(_only(where, F.lit(1))).alias(f"n{i}"),
@@ -652,6 +783,51 @@ def _merge_native(proj: Projection, n: int, value: Any, weight: Any) -> None:
                               (prev * prev_w + value * weight)
                               / (prev_w + weight))
         proj.native_weight = prev_w + weight
+
+
+def _advance_native(proj: Projection, n: int, value: Any, weight: Any,
+                    mx: int | None, fold_ms: float, emit_states: bool) -> None:
+    """Fold a delta's native aggregate (``n`` > 0 rows, ``value``, avg's
+    ``weight``, max order_id ``mx``) into ``proj`` with its metrics."""
+    _merge_native(proj, n, value, weight)
+    proj.record_fold(n, fold_ms, proj.current_value)
+    proj.last_event = mx or proj.last_event
+    proj.touch_global_time()
+    if emit_states:
+        # per-event states only exist on the serial tier; the native
+        # tier's virtual stream is per-BATCH (one state per fold call)
+        proj.emitted = [proj.current_value]  # type: ignore[attr-defined]
+
+
+_NUMERIC = (T.IntegralType, T.FloatType, T.DoubleType)
+_LONG = 1 << 63
+
+
+def _reduce_native(kind: str, col, dtype):
+    """(value, avg's non-NULL weight) of a native reducer over its per-row
+    values ``col`` (an Arrow column of the integral or floating Spark type
+    ``dtype``, NULL off its rows), equal in value and Python type to its
+    Catalyst aggregate over the same rows; None for an integral sum some
+    partial sum of which could leave the long range, where Catalyst
+    decides whether it raises (ANSI) or wraps.
+
+    The values reach Python through Arrow types, never pandas
+    ``float64``, so longs past 2**53 stay exact."""
+    vals = [v for v in col.to_pylist() if v is not None]
+    if not vals:
+        return None, 0
+    if kind in ("min", "max"):
+        # Spark orders NaN above every other value
+        return (min if kind == "min" else max)(
+            vals, key=lambda v: (v != v, v)), None
+    if kind == "avg":
+        # Catalyst averages integral values as doubles
+        return (functools.reduce(operator.add, map(float, vals), 0.0)
+                / len(vals), len(vals))
+    if isinstance(dtype, T.IntegralType):
+        # under this bound no partial sum, in any order, leaves the range
+        return (sum(vals), None) if sum(map(abs, vals)) < _LONG else None
+    return functools.reduce(operator.add, vals, 0.0), None
 
 
 def _arrow_batch_rows(df: DataFrame) -> int:
@@ -734,8 +910,4 @@ def _combine_native(kind: str, prev: Any, new: Any, prev_n: int, new_n: int) -> 
         raise AssertionError("avg merges via proj.native_weight")
     if kind == "min":
         return min(prev, new)
-    if kind == "max":
-        return max(prev, new)
-    # count_distinct is not incrementally mergeable without state; recompute
-    # callers should re-advance from 0 (documented limitation).
-    return new
+    return max(prev, new)

@@ -22,13 +22,17 @@ order_id and the file source processes files in arrival order, taking all
 new files per trigger.
 
 Scale notes: each micro-batch is one delta of
-``ProjectionEngine._fold_df``, the same fold the pull path runs — all
-native reducers in one Catalyst aggregate (distributed, no Python), the
-associative and serial reducers folded on the driver from one Arrow
-collect of the batch, an associative share above one Arrow batch folded
-distributed. The driver holds the collected batch (photon is likewise
-serial per projection, parallel across projections,
-streams.clj:410-420).
+``ProjectionEngine._fold_df``, the same fold the pull path runs. A batch
+of at most one Arrow batch is one collect: Catalyst evaluates each native
+reducer's value per row and the driver reduces it (integral and floating
+values), and the associative and serial reducers fold on the driver from
+the same frame — one Spark job. Above one Arrow batch that collect is
+discarded, and a native reducer over other values skips it: all native
+reducers run in one Catalyst aggregate (distributed, no Python), the
+serial reducers fold from a second collect, and an associative share
+above one Arrow batch folds distributed. The driver holds the collected
+batch (photon is likewise serial per projection, parallel across
+projections, streams.clj:410-420).
 """
 
 from __future__ import annotations
@@ -172,8 +176,9 @@ class StreamingProjectionRunner:
         The batch is the delta of the engine's one fold entry point
         (``ProjectionEngine._fold_df``): each projection folds only the
         rows of its stream above its resume point (no-dup on restart
-        replay), all native reducers in one aggregate and the Python
-        tiers from one collect, each tier in order_id order.
+        replay), every tier from one collect up to one Arrow batch (the
+        native reducers in one aggregate above it), each tier in
+        order_id order.
         """
         import json
 

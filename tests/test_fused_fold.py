@@ -191,20 +191,24 @@ def collects(spark, monkeypatch):
     """Record (row limit or None, rows) of every Arrow collect."""
     seen = []
     frame = type(spark.range(1))
-    real_limit, real_to_pandas = frame.limit, frame.toPandas
+    real_limit = frame.limit
 
     def limit(self, n):
         out = real_limit(self, n)
         out._limited = n
         return out
 
-    def to_pandas(self):
-        out = real_to_pandas(self)
-        seen.append((getattr(self, "_limited", None), len(out)))
-        return out
+    def recorded(real, rows):
+        def collect(self):
+            out = real(self)
+            seen.append((getattr(self, "_limited", None), rows(out)))
+            return out
+        return collect
 
     monkeypatch.setattr(frame, "limit", limit)
-    monkeypatch.setattr(frame, "toPandas", to_pandas)
+    monkeypatch.setattr(frame, "toPandas", recorded(frame.toPandas, len))
+    monkeypatch.setattr(frame, "toArrow",
+                        recorded(frame.toArrow, lambda t: t.num_rows))
     return seen
 
 
@@ -213,10 +217,10 @@ def test_collects_stay_bounded_and_add_no_discarded_collect(
     """One collect serves both Python tiers. A serial-only collect takes
     no limit it would discard. Past one Arrow batch the associative
     projections fold distributed and the serial ones collect only their
-    own rows, so the driver never holds a large associative delta; with
-    a native reducer in the fold, its aggregate's row counts pick the
-    collected rows without any limit, and no collect runs for
-    projections without new rows."""
+    own rows, so the driver never holds a large associative delta. With
+    a native reducer in the fold, one collect of at most one batch
+    serves every tier; past one batch it is discarded and the native
+    aggregate's row counts pick the serial rows without any limit."""
     store = EventStore(spark, str(tmp_path / "ev"))
     _post(store, "a", list(range(6)))
     _post(store, "sec", [0])
@@ -250,15 +254,51 @@ def test_collects_stay_bounded_and_add_no_discarded_collect(
         _post(store, "sec", [1])
         collects.clear()
         assert engine.advance_all() == {}
-        assert collects == [(None, 1)]           # counts, not a limit
+        assert collects == [(5, 5), (None, 1)]   # past a batch: counts
         _post(store, "a", [9])
         collects.clear()
         engine.unregister("assoc")
         engine.unregister("assoc2")
         assert engine.advance_all() == {}
-        assert collects == []                    # no serial rows: none
+        assert collects == [(5, 1)]              # one collect, native too
     assert [engine.value(n) for n in ("serial", "n")] == [2, 14]
     assert engine.projection("serial").last_event < store.max_order_id()
+
+
+def test_one_event_fold_is_one_job(spark, tmp_path):
+    """A one-event delta folds every tier from one collect: a pull and a
+    live micro-batch each submit exactly one Spark job."""
+    store = EventStore(spark, str(tmp_path / "ev"))
+    _post(store, "a", [1, 2, 3])
+    pull, live = ProjectionEngine(store), ProjectionEngine(store)
+    for engine in (pull, live):
+        engine.register("sum", NativeReducer("sum", f"cast({V} as long)"),
+                        initial_value=0)
+        engine.register("count_a", NativeReducer("count"), stream_name="a")
+        engine.register("assoc", AssociativeReducer(
+            fold=lambda st, ev: st + 1, merge=lambda x, y: x + y, zero=0),
+            initial_value=0)
+        engine.register("serial", PyReducer(
+            fn=lambda st, ev: st + [ev["order_id"]], columns=("order_id",)),
+            initial_value=[])
+    runner = StreamingProjectionRunner(
+        live, checkpoint_dir=str(tmp_path / "ck"))
+    batch_jobs = []
+    apply_batch = runner._apply_batch
+
+    def counted(batch_df, batch_id):
+        batch_jobs.append(_jobs(spark, apply_batch, batch_df, batch_id)[1])
+
+    runner._apply_batch = counted
+    assert pull.advance_all() == {}
+    runner.run(available_now=True, timeout_sec=120)
+    _post(store, "b", [4])
+    assert _jobs(spark, pull.advance_all) == ({}, 1)
+    batch_jobs.clear()
+    runner.run(available_now=True, timeout_sec=120)
+    assert batch_jobs == [1]
+    assert _outcome(pull) == _outcome(live)
+    assert [pull.value(n) for n in ("sum", "count_a", "assoc")] == [10, 3, 4]
 
 
 def test_get_event_is_one_job(spark, tmp_path):

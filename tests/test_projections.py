@@ -381,3 +381,149 @@ def test_assoc_fold_failure_leaves_state_unchanged(spark, tmp_path,
         assert (proj.current_value, proj.processed,
                 proj.last_event) == before
     assert len(distributed_calls) == 2
+
+
+def test_count_distinct_is_refused_at_register(engine):
+    """count_distinct has no cross-delta merge (a second delta would
+    report only its own distinct count), so it is not a native kind."""
+    with pytest.raises(ValueError, match="count_distinct"):
+        engine.register("d", NativeReducer("count_distinct", "local_id"))
+    assert engine.projection("d") is None
+
+
+def _typed_value(v):
+    """A value with its Python type; NaN compares equal to NaN."""
+    return (type(v), "nan" if v != v else v)
+
+
+_J = "get_json_object(payload, '$.{}')"
+_TYPED = {"long": f"cast({_J.format('l')} as long)",
+          "int": f"cast({_J.format('l')} as int)",
+          "double": f"cast({_J.format('d')} as double)",
+          "decimal": f"cast({_J.format('m')} as decimal(20, 3))",
+          "big": f"cast({_J.format('b')} as long)",
+          "text": _J.format("s"),
+          "nan": f"cast({_J.format('f')} as double)"}
+
+
+def _differential_reducers():
+    """{name: (reducer, stream)}: every kind over long, double and decimal
+    values, min/max over strings and NaN-bearing doubles, a long column
+    with NULLs past 2**53, per-stream, empty and all-NULL deltas, and
+    kinds over strings and timestamps (sum/avg coerce strings)."""
+    from photon_spark.events import ALL_STREAMS
+    out = {}
+    for kind in ("sum", "avg", "min", "max"):
+        for typ in ("long", "double", "decimal", "big"):
+            out[f"{kind}_{typ}"] = (NativeReducer(kind, _TYPED[typ]),
+                                    ALL_STREAMS)
+        out[f"{kind}_long_null"] = (NativeReducer(kind, _TYPED["long"]), "n")
+        out[f"{kind}_empty"] = (NativeReducer(kind, _TYPED["long"]), "e")
+        # strings: ordered by min/max, coerced to double by sum/avg
+        out[f"{kind}_text"] = (NativeReducer(kind, _TYPED["text"] if kind
+                                             in ("min", "max") else
+                                             _J.format("l")), ALL_STREAMS)
+    for kind in ("min", "max"):
+        out[f"{kind}_nan"] = (NativeReducer(kind, _TYPED["nan"]), "b")
+        out[f"{kind}_time"] = (NativeReducer(kind, "event_time"), "a")
+    out["sum_int"] = (NativeReducer("sum", _TYPED["int"]), ALL_STREAMS)
+    out["sum_double_b"] = (NativeReducer("sum", _TYPED["double"]), "b")
+    out["avg_long_a"] = (NativeReducer("avg", _TYPED["long"]), "a")
+    for stream in (ALL_STREAMS, "a", "e"):
+        out[f"count_{stream}"] = (NativeReducer("count"), stream)
+    return out
+
+
+_DELTAS = [
+    [("a", {"l": 3, "d": 0.5, "m": "1.250", "s": "pear",
+            "b": 2 ** 53 + 1}),
+     ("a", {"d": -2.25, "m": "-0.005", "s": "Äpfel"}),
+     ("b", {"l": -7, "d": 1.75, "s": "zebra", "b": 2 ** 60 + 3, "f": 1.5}),
+     ("n", {}),
+     ("b", {"l": 40, "m": "99999.999", "f": "NaN"})],
+    [("a", {"l": 2 ** 30, "d": 0.125, "s": "apple", "b": -(2 ** 55) - 1}),
+     ("n", {}),
+     ("c", {"l": 5, "d": 3.0, "m": "0.001", "s": "éclair", "b": 7}),
+     ("b", {"f": -0.5, "s": "pear", "l": -1})],
+]
+
+
+def test_one_batch_native_reduction_equals_the_aggregate(
+        spark, tmp_path, monkeypatch):
+    """A delta of at most one Arrow batch reduces integral and floating
+    native values on the driver from one collect; a larger one, or a
+    fold with a native reducer over other values, runs the Catalyst
+    aggregate. Both give the same value, Python type, processed,
+    last_event and native_weight for every kind and value type, across
+    two deltas (so the second merges into a running value)."""
+    store = EventStore(spark, str(tmp_path / "ev"))
+    reducers = _differential_reducers()
+    other = {n for n in reducers
+             if n.rsplit("_", 1)[1] in ("decimal", "text", "time")}
+    groups = {"driver": {n: reducers[n] for n in reducers if n not in other},
+              "catalyst": {n: reducers[n] for n in other}}
+    engines = {}
+    for group, regs in groups.items():
+        for path in ("one_batch", "aggregate"):
+            engines[group, path] = ProjectionEngine(store)
+            for name, (reducer, stream) in regs.items():
+                engines[group, path].register(name, reducer,
+                                              stream_name=stream)
+    aggregates = []
+    real = ProjectionEngine._fold_native
+
+    def spy(self, *args):
+        aggregates.append(self)
+        return real(self, *args)
+
+    monkeypatch.setattr(ProjectionEngine, "_fold_native", spy)
+
+    def outcome(engine):
+        return {n: (_typed_value(p.current_value), p.processed,
+                    p.last_event, p.native_weight)
+                for n, p in engine.registry.items()}
+
+    for delta in _DELTAS:
+        store.ingest_rows([{"stream_name": s, "payload": json.dumps(v)}
+                           for s, v in delta])
+        for group in groups:
+            assert engines[group, "one_batch"].advance_all() == {}
+            with arrow_batch_rows(spark, 1):
+                assert engines[group, "aggregate"].advance_all() == {}
+            assert (outcome(engines[group, "one_batch"])
+                    == outcome(engines[group, "aggregate"]))
+    assert id(engines["driver", "one_batch"]) not in set(map(id, aggregates))
+    got = {**outcome(engines["driver", "one_batch"]),
+           **outcome(engines["catalyst", "one_batch"])}
+    assert got["sum_big"][0] == (int, 2 ** 53 + 1 + 2 ** 60 + 3
+                                 - 2 ** 55 - 1 + 7)
+    assert got["max_big"][0] == (int, 2 ** 60 + 3)
+    assert got["sum_decimal"][0][0].__name__ == "Decimal"
+    assert got["max_nan"][0] == (float, "nan")
+    assert got["min_nan"][0] == (float, -0.5)
+    assert got["sum_long_null"][:2] == ((type(None), None), 2)
+    assert got["count_e"][1] == 0 and got["avg_long_a"][3] == 2
+    assert got["max_time"][0][0].__name__ == "datetime"
+
+
+def test_overflowing_long_sum_raises_on_both_paths(spark, tmp_path):
+    from pyspark.errors import ArithmeticException
+
+    # the second overflows only on the way: its final sum fits a long.
+    # One file, so one partition: Catalyst's running sum meets the rows
+    # in order and raises (merging per-file partials could skip it).
+    for k, values in enumerate(((2 ** 62, 2 ** 62, 5),
+                                (2 ** 62, 2 ** 62, -(2 ** 62)))):
+        store = EventStore(spark, str(tmp_path / f"ev{k}"))
+        store.ingest(spark.createDataFrame(
+            [{"stream_name": "s", "payload": json.dumps({"l": v})}
+             for v in values]).coalesce(1))
+        for cap in (10000, 1):
+            engine = ProjectionEngine(store)
+            engine.register("sum", NativeReducer("sum", _TYPED["long"]))
+            engine.register("count", NativeReducer("count"))
+            with arrow_batch_rows(spark, cap):
+                with pytest.raises(ArithmeticException, match="OVERFLOW"):
+                    engine.advance("sum")
+                assert engine.projection("sum").processed == 0
+                assert engine.advance("count").current_value == 3
