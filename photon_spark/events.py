@@ -18,13 +18,23 @@ per-stream reads prune partitions, and each partition is written sorted by
 ``order_id`` so parquet row-group min/max stats make time-range scans
 (``order_id >= from``) skip files. Both predicates therefore reach the scan
 as PushedFilters — verified in tests via ``explain``.
+
+Two writers produce that layout. Bulk :meth:`EventStore.ingest` and the
+rewrite paths run a Spark write job. :meth:`EventStore.ingest_rows` (one
+``post_event``, one ``__config__`` DDL event) writes a parquet store from
+the driver with no Spark job: one pyarrow file per stream, written under a
+hidden name and renamed into its ``stream_name=`` directory, so a batch
+read or the streaming file source sees the whole file or none of it.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,6 +67,47 @@ EVENT_SCHEMA = T.StructType([
 
 _CLIENT_FIELDS = ["stream_name", "event_type", "service_id", "local_id",
                   "schema_tag", "provenance", "payload"]
+
+#: stream names Spark writes to the default partition (the one it writes
+#: for NULL) and reads back as NULL, so their events would leave their
+#: stream
+_LOST_STREAM_NAMES = ("", "__HIVE_DEFAULT_PARTITION__")
+
+#: characters Spark escapes as ``%XX`` in a partition directory name
+#: (``ExternalCatalogUtils.escapePathName``, non-Windows)
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(0x01, 0x20)]
+    + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def escape_path_name(value: str) -> str:
+    """``value`` escaped as Spark names a partition directory after it."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c
+                   for c in value)
+
+
+def _check_stream_names(names) -> None:
+    """Reject stream names Spark cannot write as their own partition:
+    NULL, ``""`` and the default-partition sentinel read back as NULL."""
+    for name in names:
+        if name is None:
+            raise ValueError("event must carry stream_name")
+        if not isinstance(name, str):
+            raise TypeError(f"stream_name must be a string, got "
+                            f"{type(name).__name__}")
+        if name in _LOST_STREAM_NAMES:
+            raise ValueError(f"stream_name {name!r} is not a storable "
+                             f"stream name: Spark reads it back as NULL")
+
+
+def _arrow_type(dtype: T.DataType):
+    """The Arrow type the Spark parquet writer stores ``dtype`` as, as
+    far as the event schema needs it."""
+    if isinstance(dtype, T.StructType):
+        return pa.struct([(f.name, _arrow_type(f.dataType))
+                          for f in dtype.fields])
+    return {T.StringType(): pa.string(), T.LongType(): pa.int64(),
+            T.TimestampType(): pa.timestamp("us", tz="UTC")}[dtype]
 
 
 def coerce_order_bound(from_: int) -> int:
@@ -338,7 +389,8 @@ class EventStore:
 
         Returns the number of events written. Missing envelope columns are
         filled with NULL; ``stream_name`` is required (streams.clj:295,
-        EventTemplate validation api.clj:36).
+        EventTemplate validation api.clj:36), and a NULL, empty or
+        default-partition stream name raises before anything is written.
         """
         cols = set(df.columns)
         if "stream_name" not in cols:
@@ -347,13 +399,26 @@ class EventStore:
             if c not in cols:
                 typ = PROVENANCE_TYPE if c == "provenance" else T.StringType()
                 df = df.withColumn(c, F.lit(None).cast(typ))
-        # One counting pass over the cached batch yields both N (photon
-        # returns it) and per-partition offsets for the parallel global
-        # sequence — no single-partition window, no double execution.
+        # One counting pass over the cached batch yields N (photon
+        # returns it), the per-partition offsets for the parallel global
+        # sequence and the rows whose stream name Spark cannot store —
+        # no single-partition window, no double execution.
         src = df.select(_CLIENT_FIELDS).persist()
+        name = F.col("stream_name")
         try:
             counts = (src.groupBy(F.spark_partition_id().alias("pid"))
-                         .agg(F.count(F.lit(1)).alias("cnt")).collect())
+                         .agg(F.count(F.lit(1)).alias("cnt"),
+                              F.count(F.when(
+                                  name.isNull()
+                                  | name.isin(*_LOST_STREAM_NAMES), 1))
+                              .alias("lost"))
+                         .collect())
+            lost = sum(r["lost"] for r in counts)
+            if lost:
+                raise ValueError(
+                    f"{lost} event(s) with a NULL, empty or "
+                    f"__HIVE_DEFAULT_PARTITION__ stream_name: Spark reads "
+                    f"them back with stream_name NULL")
             offsets, acc = {}, 0
             for r in sorted(counts, key=lambda r: r["pid"]):
                 offsets[r["pid"]] = acc
@@ -387,29 +452,35 @@ class EventStore:
              .save(self._data_dir()))
         finally:
             src.unpersist()
-        if n:
-            # stamp_events assigns slots start..start+n-1 of this writer's
-            # sub-range, so the batch max is closed-form — the high-water
-            # mark advances without a rescan.
-            start, lo, width = _writer_start_slot(
-                base, now_ms, self.writer_id, self.n_writers)
-            self._max_oid = _slot_order_id(start + n - 1, lo, width)
+        # stamp_events assigns slots start..start+n-1 of this writer's
+        # sub-range, so the batch max is closed-form — the high-water
+        # mark advances without a rescan.
+        start, lo, width = _writer_start_slot(
+            base, now_ms, self.writer_id, self.n_writers)
+        self._max_oid = _slot_order_id(start + n - 1, lo, width)
         self.ingested += n
         return n
 
     def ingest_rows(self, rows: list[dict]) -> int:
         """S1 for client events already on the driver (one ``post_event``,
         one ``__config__`` DDL event): validate the envelope, stamp
-        ``event_time``/``order_id`` on the driver and append in ONE job —
-        no counting pass, no shuffle. Bulk DataFrames go through
-        :meth:`ingest`; both stamp the same slots for the same base."""
+        ``event_time``/``order_id`` on the driver and append. Bulk
+        DataFrames go through :meth:`ingest`; both stamp the same slots
+        for the same base.
+
+        The write is split by format, on purpose. A parquet store gets
+        one file per stream written by pyarrow on the driver, with no
+        Spark job (:meth:`_append_parquet`). The orc, json and csv
+        stores keep one Spark write job: their encodings (the
+        ``timestampFormat``, the CSV ``\\N`` NULL sentinel and its
+        quoting) belong to Spark's writers.
+        """
         unknown = set().union(*rows) - set(_CLIENT_FIELDS)
         if unknown:
             raise ValueError(f"unknown event envelope field(s): "
                              f"{sorted(unknown)}; "
                              f"envelope is {_CLIENT_FIELDS}")
-        if any(r.get("stream_name") is None for r in rows):
-            raise ValueError("event must carry stream_name")
+        _check_stream_names(r.get("stream_name") for r in rows)
         n = len(rows)
         if n == 0:
             return 0
@@ -430,6 +501,68 @@ class EventStore:
                 rec["provenance"] = dict(zip(prov_fields, prov))
             rec["order_id"] = _slot_order_id(slot, lo, width)
             stamped.append(rec)
+        if self.fmt == "parquet":
+            self._append_parquet(stamped, now_ms)
+        else:
+            self._append_spark(stamped, now_ms)
+        self._max_oid = _slot_order_id(start + n - 1, lo, width)
+        self.ingested += n
+        return n
+
+    def _append_parquet(self, stamped: list[dict], now_ms: int) -> None:
+        """Append stamped rows as one snappy parquet file per stream,
+        written by pyarrow on the driver: no Spark job.
+
+        Each file carries the Spark writer's columns and types (the event
+        schema minus the ``stream_name`` directory column; ``event_time``
+        as UTC µs) with statistics, so ``order_id`` pushdown prunes it
+        as it prunes a Spark-written file. It is written under a hidden
+        ``.``-name in its ``stream_name=`` directory and then renamed to
+        ``part-<uuid>.snappy.parquet``: Spark's batch listing and the
+        streaming file source skip ``.``- and ``_``-names, so a reader
+        sees either the whole file or nothing. A post holds one stream,
+        so one file. A call over several streams renames its files back
+        to back after all are written; as with a Spark job commit, which
+        also moves one file per stream, a listing between two renames
+        can see one stream's file without the other's.
+        """
+        fields = [f for f in EVENT_SCHEMA.fields if f.name != "stream_name"]
+        schema = pa.schema([(f.name, _arrow_type(f.dataType))
+                            for f in fields])
+        by_stream: dict[str, list[dict]] = {}
+        for rec in stamped:  # slot order, so each group is order_id-sorted
+            by_stream.setdefault(rec["stream_name"], []).append(rec)
+        # a value of the wrong type raises here, before any file exists
+        tables = {}
+        for stream, recs in by_stream.items():
+            cols = {f.name: [r.get(f.name) for r in recs] for f in fields}
+            cols["event_time"] = [now_ms * 1000] * len(recs)
+            tables[stream] = pa.Table.from_pydict(cols, schema)
+        data_dir = self._data_dir()
+        staged = []
+        try:
+            for stream, table in tables.items():
+                part = os.path.join(
+                    data_dir, f"stream_name={escape_path_name(stream)}")
+                os.makedirs(part, exist_ok=True)
+                name = f"part-{uuid.uuid4()}.snappy.parquet"
+                tmp = os.path.join(part, f".{name}.tmp")
+                staged.append((tmp, os.path.join(part, name)))
+                pq.write_table(table, tmp, compression="snappy",
+                               write_statistics=True)
+            for tmp, final in staged:
+                os.replace(tmp, final)
+        except BaseException:
+            for tmp, _ in staged:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+            # some renames may have published rows: rescan the mark
+            self._max_oid = None
+            raise
+
+    def _append_spark(self, stamped: list[dict], now_ms: int) -> None:
+        """Append stamped rows with one Spark write job (the orc, json
+        and csv stores)."""
         schema = T.StructType(
             [f for f in EVENT_SCHEMA.fields if f.name in _CLIENT_FIELDS]
             + [T.StructField("order_id", T.LongType())])
@@ -445,9 +578,6 @@ class EventStore:
             .write.mode("append")
             .partitionBy("stream_name"))
          .save(self._data_dir()))
-        self._max_oid = _slot_order_id(start + n - 1, lo, width)
-        self.ingested += n
-        return n
 
     # ----------------------------------------------------------------- read
     def version(self) -> tuple:

@@ -74,7 +74,6 @@ from typing import Any, Callable
 
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from photon_spark.events import ALL_STREAMS, EventStore
@@ -98,12 +97,12 @@ class NativeReducer:
     kind: str
     expr: str | None = None
 
-    #: kind → aggregate over the value column (``count`` counts rows)
-    _AGGS = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min,
-             "max": F.max}
+    #: each kind is the SQL aggregate of that name over the value column
+    #: (``count`` counts rows)
+    KINDS = ("count", "sum", "avg", "min", "max")
 
     def __post_init__(self):
-        if self.kind not in self._AGGS:
+        if self.kind not in self.KINDS:
             raise ValueError(f"unknown native reducer: {self.kind}")
 
 
@@ -362,26 +361,34 @@ class ProjectionEngine:
                 return {}
             df = self.store.read_all()
             lo = min(_resume(p) for p in projs)
-            if lo:
-                df = df.where(F.col("order_id") > lo)
             streams = {p.stream_name for p in projs}
+            conds = [f"order_id > {lo}"] if lo else []
             if ALL_STREAMS not in streams:
-                df = df.where(F.col("stream_name").isin(sorted(streams)))
+                names = ", ".join(map(_sql_string, sorted(streams)))
+                conds.append(f"stream_name IN ({names})")
+            if conds:
+                df = df.where(" AND ".join(conds))
         errors: dict[str, Exception] = {}
         native = [p for p in projs if isinstance(p.reducer, NativeReducer)]
         python = [p for p in projs
                   if not isinstance(p.reducer, NativeReducer)]
+        # each projection's rows, as SQL, built once for every path below
+        cols = df.columns
+        where = {p.projection_name: _where(p, cols) for p in projs}
+        cap = _arrow_batch_rows(df)
         # the highest order_id the read saw; every projection that folded
         # has read all of its stream up to it, new events or none
-        top = (self._fold_one_batch(native, python, df, errors, emit_states)
+        top = (self._fold_one_batch(native, python, df, where, cap, errors,
+                                    emit_states)
                if native else None)
         if top is None:
             top, counts = 0, None
             if native:
-                top, counts = self._fold_native(native, python, df, errors,
-                                                emit_states)
+                top, counts = self._fold_native(native, python, df, where,
+                                                errors, emit_states)
             if python:
-                top = max(top, self._fold_python(python, df, counts, errors,
+                top = max(top, self._fold_python(python, df, where, cap,
+                                                 counts, errors,
                                                  emit_states))
         if version is not None:
             for p in projs:
@@ -393,36 +400,38 @@ class ProjectionEngine:
     # -- a delta of at most one Arrow batch: one collect ------------------
     def _fold_one_batch(self, native: list[Projection],
                         python: list[Projection], df: DataFrame,
-                        errors: dict, emit_states: bool) -> int | None:
+                        where: dict, cap: int, errors: dict,
+                        emit_states: bool) -> int | None:
         """Every projection from ONE Arrow collect of at most one Arrow
         batch (``limit(cap + 1)``): the rows and columns the Python tiers
         read plus, per projection, its row flag ``when(its rows, 1)`` and,
         per native reducer, its value ``when(its rows, expr)``, evaluated
         by Catalyst. The native reducers reduce their values on the
         driver (:func:`_reduce_native`); the flags count the Python
-        tiers' rows, which then fold from the same frame. → the delta's
+        tiers' rows, which then fold from the same frame. ``where`` holds
+        each projection's rows as SQL (:func:`_where`) and ``cap`` the
+        Arrow batch size. A running long sum merged out of the long range
+        is that projection's error (:func:`_merge_native`). → the delta's
         max order_id or 0; None, with nothing folded, when a native value
         is not integral or floating, the delta holds more than one Arrow
         batch, a long sum could leave the long range, the query failed
         or this PySpark lacks the pandas converter: the aggregate path
         then runs, and Catalyst decides values, overflow and errors.
         """
-        cap = _arrow_batch_rows(df)
         convert = _pandas_converter(df.sparkSession) if python else None
         if not cap or (python and convert is None):
             return None
         cols = df.columns
         projs = native + python
-        where = {p.projection_name: _where(p, cols) for p in projs}
         events = _collect_columns(python, cols)
         t0 = time.perf_counter()
         try:
-            q = _union_rows(df, projs, where).select(
+            q = _union_rows(df, projs, where).selectExpr(
                 *events,
-                *(_only(where[p.projection_name], F.lit(1)).alias(f"__c{j}")
+                *(f"{_only(where[p.projection_name], '1')} AS __c{j}"
                   for j, p in enumerate(projs)),
-                *(_only(where[p.projection_name],
-                        F.expr(p.reducer.expr)).alias(f"__x{i}")
+                *(f"{_only(where[p.projection_name], p.reducer.expr)} "
+                  f"AS __x{i}"
                   for i, p in enumerate(native)
                   if p.reducer.kind != "count"))
             schema = q.schema
@@ -456,61 +465,71 @@ class ProjectionEngine:
         for i, (n, value, weight) in reduced.items():
             mx = (pc.max(pc.filter(oid, pc.is_valid(table.column(f"__c{i}"))))
                   .as_py() if oid is not None else None)
-            _advance_native(native[i], n, value, weight, mx, fold_ms,
-                            emit_states)
+            try:
+                _advance_native(native[i], n, value, weight, mx, fold_ms,
+                                emit_states, df.sparkSession)
+            except OverflowError as exc:
+                errors[native[i].projection_name] = exc
         if python:
             counts = {p.projection_name: table.num_rows
                       - table.column(f"__c{j}").null_count
                       for j, p in enumerate(python, len(native))}
-            self._fold_python(python, df, counts, errors, emit_states, pdf)
+            self._fold_python(python, df, where, cap, counts, errors,
+                              emit_states, pdf)
         return (pc.max(oid).as_py() or 0) if oid is not None else 0
 
     # -- tier 1: one Catalyst aggregate ----------------------------------
     def _fold_native(self, projs: list[Projection], others: list[Projection],
-                     df: DataFrame, errors: dict, emit_states: bool):
+                     df: DataFrame, where: dict, errors: dict,
+                     emit_states: bool):
         """Every native reducer in ONE aggregate, no Python per event.
 
         Each reducer reads ``when(its stream AND order_id > its resume
         point)`` and brings its row count and max order_id. avg also
-        brings its NULL-aware weight: F.avg skips NULL values, so the
+        brings its NULL-aware weight: avg skips NULL values, so the
         cross-batch merge must weight by count(expr), not by the row
         count. The same aggregate counts the rows of each projection in
         ``others``. The path of a delta above one Arrow batch. → (the
         delta's max order_id or 0, {name: rows} of ``others``); (0, None)
         when the aggregate failed: each reducer is then evaluated alone,
-        so the failure stays with its own projection.
+        so the failure stays with its own projection, as does a running
+        long sum merged out of the long range (:func:`_merge_native`).
         """
-        cols = df.columns
-        has_oid = "order_id" in cols
+        has_oid = "order_id" in df.columns
         try:
-            aggs = [F.max("order_id").alias("top")] if has_oid else []
+            aggs = ["max(order_id) AS top"] if has_oid else []
             for i, p in enumerate(projs):
-                aggs += _native_aggs(p.reducer, i, _where(p, cols), has_oid)
-            aggs += [F.count(_only(_where(p, cols), F.lit(1))).alias(f"c{j}")
+                aggs += _native_aggs(p.reducer, i, where[p.projection_name],
+                                     has_oid)
+            aggs += [f"count({_only(where[p.projection_name], '1')}) AS c{j}"
                      for j, p in enumerate(others)]
             t0 = time.perf_counter()
-            row = df.agg(*aggs).collect()[0].asDict()
+            row = df.selectExpr(*aggs).collect()[0].asDict()
             fold_ms = (time.perf_counter() - t0) * 1000.0
         except Exception as exc:
             if len(projs) == 1:
                 errors[projs[0].projection_name] = exc
             else:
                 for p in projs:
-                    self._fold_native([p], [], df, errors, emit_states)
+                    self._fold_native([p], [], df, where, errors,
+                                      emit_states)
             return 0, None
         for i, p in enumerate(projs):
             if row[f"n{i}"]:
-                _advance_native(p, row[f"n{i}"], row[f"v{i}"],
-                                row.get(f"w{i}"), row.get(f"mx{i}"),
-                                fold_ms, emit_states)
+                try:
+                    _advance_native(p, row[f"n{i}"], row[f"v{i}"],
+                                    row.get(f"w{i}"), row.get(f"mx{i}"),
+                                    fold_ms, emit_states, df.sparkSession)
+                except OverflowError as exc:
+                    errors[p.projection_name] = exc
         return (row.get("top") or 0,
                 {p.projection_name: row[f"c{j}"]
                  for j, p in enumerate(others)})
 
     # -- tiers 2 and 3: folds on the driver -------------------------------
     def _fold_python(self, projs: list[Projection], df: DataFrame,
-                     counts: dict | None, errors: dict,
-                     emit_states: bool, pdf=None) -> int:
+                     where: dict, cap: int, counts: dict | None,
+                     errors: dict, emit_states: bool, pdf=None) -> int:
         """Associative and serial projections from ONE Arrow collect of
         the union of the rows and columns they read; each projection then
         folds its own rows on the driver. An associative delta above one
@@ -525,11 +544,10 @@ class ProjectionEngine:
         unless it serves serial folds only, which need their whole delta
         anyway, so no limit adds a discarded collect; past one batch, the
         serial folds collect their own rows whole. → the max order_id of
-        the collected rows, 0 when none.
+        the collected rows, 0 when none. ``where`` holds each projection's
+        rows as SQL and ``cap`` the Arrow batch size, both from the caller.
         """
         cols = df.columns
-        where = {p.projection_name: _where(p, cols) for p in projs}
-        cap = _arrow_batch_rows(df)
         serial = {p.projection_name for p in projs
                   if isinstance(p.reducer, PyReducer)}
         if counts is not None:
@@ -645,17 +663,26 @@ def _bounds(proj: Projection, columns: list[str]) -> tuple[str | None, int]:
     return stream, (_resume(proj) if "order_id" in columns else 0)
 
 
-def _where(proj: Projection, columns: list[str]):
-    """``proj``'s rows as a Column predicate; None keeps every row."""
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslash escapes, the
+    parser's default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _where(proj: Projection, columns: list[str]) -> str | None:
+    """``proj``'s rows as a SQL predicate; None keeps every row. One
+    SQL string is one py4j call wherever it is used, where a Column
+    expression costs a call per operator."""
     stream, resume = _bounds(proj, columns)
-    conds = ([F.col("stream_name") == stream] if stream is not None else []) \
-        + ([F.col("order_id") > resume] if resume else [])
-    return functools.reduce(operator.and_, conds) if conds else None
+    conds = ([f"stream_name = {_sql_string(stream)}"]
+             if stream is not None else []) \
+        + ([f"order_id > {resume}"] if resume else [])
+    return " AND ".join(conds) or None
 
 
-def _only(where, col):
-    """``col`` on the rows ``where`` keeps, NULL elsewhere."""
-    return col if where is None else F.when(where, col)
+def _only(where: str | None, expr: str) -> str:
+    """SQL of ``expr`` on the rows ``where`` keeps, NULL elsewhere."""
+    return expr if where is None else f"CASE WHEN {where} THEN {expr} END"
 
 
 def _union_rows(df: DataFrame, projs: list[Projection], where: dict):
@@ -664,7 +691,7 @@ def _union_rows(df: DataFrame, projs: list[Projection], where: dict):
     conds = [where[p.projection_name] for p in projs]
     if any(c is None for c in conds):
         return df
-    return df.where(functools.reduce(operator.or_, conds))
+    return df.where(" OR ".join(f"({c})" for c in conds))
 
 
 def _collect(df: DataFrame, projs: list[Projection], names: set,
@@ -754,28 +781,44 @@ def _collect_columns(projs: list[Projection], columns: list[str]) -> list[str]:
     return [c for c in columns if c in want]
 
 
-def _native_aggs(reducer: NativeReducer, i: int, where, has_oid: bool):
-    """The aggregate columns of native reducer number ``i`` over the rows
-    ``where`` keeps: ``n{i}`` rows, ``v{i}`` value, ``mx{i}`` max
-    order_id, and for avg ``w{i}``, its non-NULL weight."""
-    val = _only(where, F.lit(1) if reducer.kind == "count"
-                else F.expr(reducer.expr))
-    out = [F.count(_only(where, F.lit(1))).alias(f"n{i}"),
-           NativeReducer._AGGS[reducer.kind](val).alias(f"v{i}")]
+def _native_aggs(reducer: NativeReducer, i: int, where: str | None,
+                 has_oid: bool) -> list[str]:
+    """The aggregate columns, as SQL, of native reducer number ``i`` over
+    the rows ``where`` keeps: ``n{i}`` rows, ``v{i}`` value, ``mx{i}``
+    max order_id, and for avg ``w{i}``, its non-NULL weight."""
+    val = _only(where, "1" if reducer.kind == "count" else reducer.expr)
+    out = [f"count({_only(where, '1')}) AS n{i}",
+           f"{reducer.kind}({val}) AS v{i}"]
     if has_oid:
-        out.append(F.max(_only(where, F.col("order_id"))).alias(f"mx{i}"))
+        out.append(f"max({_only(where, 'order_id')}) AS mx{i}")
     if reducer.kind == "avg":
-        out.append(F.count(val).alias(f"w{i}"))
+        out.append(f"count({val}) AS w{i}")
     return out
 
 
-def _merge_native(proj: Projection, n: int, value: Any, weight: Any) -> None:
+def _merge_native(proj: Projection, n: int, value: Any, weight: Any,
+                  session) -> None:
     """Merge a delta's native aggregate (``n`` rows, ``value``, avg's
-    non-NULL ``weight``) into ``proj``'s running value."""
+    non-NULL ``weight``) into ``proj``'s running value.
+
+    A merged count or integral sum outside the long range is what
+    Catalyst's own sum would meet folding the same events from zero:
+    with ``spark.sql.ansi.enabled`` (read from ``session`` only then)
+    this raises OverflowError and leaves ``proj`` unchanged; without it
+    the sum wraps as a long does."""
     prev = proj.current_value
-    if proj.reducer.kind != "avg":  # type: ignore[union-attr]
-        proj.current_value = _combine_native(
-            proj.reducer.kind, prev, value, proj.processed, n)  # type: ignore[union-attr]
+    kind = proj.reducer.kind  # type: ignore[union-attr]
+    if kind != "avg":
+        merged = _combine_native(kind, prev, value, proj.processed, n)
+        if type(merged) is int and not -_LONG <= merged < _LONG:
+            if session.conf.get("spark.sql.ansi.enabled",
+                                "true").lower() == "true":
+                raise OverflowError(
+                    f"[ARITHMETIC_OVERFLOW] long overflow: the running "
+                    f"{kind} of projection {proj.projection_name!r} "
+                    f"leaves the long range")
+            merged = (merged + _LONG) % (2 * _LONG) - _LONG
+        proj.current_value = merged
         return
     if weight:
         prev_w = proj.native_weight
@@ -786,10 +829,12 @@ def _merge_native(proj: Projection, n: int, value: Any, weight: Any) -> None:
 
 
 def _advance_native(proj: Projection, n: int, value: Any, weight: Any,
-                    mx: int | None, fold_ms: float, emit_states: bool) -> None:
+                    mx: int | None, fold_ms: float, emit_states: bool,
+                    session) -> None:
     """Fold a delta's native aggregate (``n`` > 0 rows, ``value``, avg's
-    ``weight``, max order_id ``mx``) into ``proj`` with its metrics."""
-    _merge_native(proj, n, value, weight)
+    ``weight``, max order_id ``mx``) into ``proj`` with its metrics;
+    OverflowError, ``proj`` unchanged, as :func:`_merge_native` raises."""
+    _merge_native(proj, n, value, weight, session)
     proj.record_fold(n, fold_ms, proj.current_value)
     proj.last_event = mx or proj.last_event
     proj.touch_global_time()

@@ -454,7 +454,8 @@ def test_generation_pointer_is_nonce_unique_dir(spark, tmp_path):
 
 def test_ingest_rows_driver_stamped_append(spark, tmp_path):
     """Driver-known rows (post_event, __config__ DDL) are stamped on the
-    driver and appended in one job: the same envelope on every backend,
+    driver and appended, by a pyarrow file write on a parquet store and
+    by one Spark job on the others: the same envelope on every backend,
     slots continuing the arithmetic high-water mark, the same validation
     and the durable multi-writer marker."""
     import pyspark.sql.functions as F

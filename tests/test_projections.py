@@ -527,3 +527,77 @@ def test_overflowing_long_sum_raises_on_both_paths(spark, tmp_path):
                     engine.advance("sum")
                 assert engine.projection("sum").processed == 0
                 assert engine.advance("count").current_value == 3
+
+
+@contextlib.contextmanager
+def ansi(spark, on):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(on).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def test_running_long_sum_overflow_matches_a_from_zero_fold(spark, tmp_path):
+    """Two one-event deltas of 2**62: the merged running sum leaves the
+    long range. With ANSI on it is the projection's error, state kept,
+    as a fresh engine's from-zero fold raises ARITHMETIC_OVERFLOW; with
+    ANSI off it wraps to the fresh engine's value. Both the one-batch
+    path and the aggregate path (an unlimited Arrow batch skips the
+    one-batch path)."""
+    from pyspark.errors import ArithmeticException
+
+    for on in (True, False):
+        for cap in (10000, 0):
+            store = EventStore(spark, str(tmp_path / f"ev{on}{cap}"))
+            engine = ProjectionEngine(store)
+            engine.register("sum", NativeReducer("sum", _TYPED["long"]))
+            engine.register("count", NativeReducer("count"))
+            with ansi(spark, on), arrow_batch_rows(spark, cap):
+                for _ in range(2):
+                    store.ingest_rows([{"stream_name": "s",
+                                        "payload": json.dumps({"l": 2**62})}])
+                    errors = engine.advance_all()
+                fresh = ProjectionEngine(store)
+                fresh.register("sum", NativeReducer("sum", _TYPED["long"]))
+                if on:
+                    assert set(errors) == {"sum"}
+                    assert "ARITHMETIC_OVERFLOW" in str(errors["sum"])
+                    proj = engine.projection("sum")
+                    assert (proj.current_value, proj.processed) == (2**62, 1)
+                    with pytest.raises(ArithmeticException,
+                                       match="ARITHMETIC_OVERFLOW"):
+                        fresh.advance("sum")
+                else:
+                    assert errors == {}
+                    assert engine.value("sum") == -(2**63)
+                    assert fresh.advance("sum").current_value == -(2**63)
+                assert engine.value("count") == 2
+
+
+def test_stream_name_literals_are_quoted(spark, tmp_path):
+    """Stream names with a quote, a backslash and a backtick select their
+    own rows on every fold path."""
+    from photon_spark.projections.engine import _sql_string
+
+    names = ["it's", "back\\slash", "tick`s", "a\\'b", "%_x"]
+    for name in names:
+        assert spark.sql(f"SELECT {_sql_string(name)}").first()[0] == name
+    store = EventStore(spark, str(tmp_path / "ev"))
+    store.ingest_rows([{"stream_name": n, "payload": json.dumps({"l": i})}
+                       for i, n in enumerate(names, 1) for _ in range(i)])
+    for cap in (10000, 1):
+        engine = ProjectionEngine(store)
+        for name in names:
+            engine.register(f"n{name}", NativeReducer("count"),
+                            stream_name=name)
+            engine.register(f"s{name}", PyReducer(fn=lambda st, ev: st + 1),
+                            stream_name=name, initial_value=0)
+            engine.register(f"a{name}", AssociativeReducer(
+                fold=lambda st, ev: st + 1, merge=lambda x, y: x + y,
+                zero=0), stream_name=name, initial_value=0)
+        with arrow_batch_rows(spark, cap):
+            assert engine.advance_all() == {}
+        for i, name in enumerate(names, 1):
+            assert [engine.value(f"{t}{name}") for t in "nsa"] == [i] * 3
