@@ -41,24 +41,36 @@ feeds each arriving event to every projection from one feed
 (streams.clj:125-145, :410-420), and so does the engine. One delta — a
 streaming micro-batch, or one store read from the lowest resume point —
 advances every projection, each over the rows of its stream above its
-resume point. A delta of at most one Arrow batch is ONE collect: the
-union of the rows and columns the associative and serial projections
-read, plus two per-row columns per native reducer (its row flag and its
-value, evaluated by Catalyst), reduced on the driver; the Python tiers
-fold from the same frame. Past one Arrow batch that collect is
-discarded, and a native reducer over values that are not integral or
-floating skips it: the native reducers run in ONE Catalyst aggregate,
-whose row counts pick the rows of a second collect for the Python
-tiers. Without a native reducer the Python tiers' collect also stops
-past one Arrow batch, unless it serves serial folds only, which need
-their whole delta anyway. Past it each tier takes its large-delta path above. The pull
-path records the store version (:meth:`EventStore.version`, the stat
-stamp the read plan is memoized on) each read was taken at, and a
-projection whose version is unchanged is not read for: a pull after an
-unchanged store runs no Spark job. A resume point is the higher of
-``last_event`` and the order_id the last store read covered, so a
-projection whose stream gets no new events does not hold the read's
-lower bound at its old ``last_event``.
+resume point, in order_id order. Every delta carries ``order_id``, the
+event log's monotone offset (:meth:`ProjectionEngine.fold_dataframe`
+refuses a frame without one). The fold's path rule:
+
+- Every fold starts as ONE Arrow collect: the union of the rows and
+  columns the associative and serial projections read, a row flag per
+  projection and a per-row value per native reducer, evaluated by
+  Catalyst. It stops past one Arrow batch, unless every projection in
+  the fold is serial and needs its whole delta anyway.
+- Within one Arrow batch the native reducers reduce on the driver and
+  the Python tiers fold from the same frame, their row counts taken
+  from the flags: one Spark job.
+- Past one Arrow batch the collect is discarded, and a native reducer
+  over values that are not integral or floating skips it. With a native
+  reducer in the fold, the native reducers run in ONE Catalyst
+  aggregate whose row counts pick the rows of a second collect for the
+  Python tiers: every serial delta whole and each associative one of at
+  most one Arrow batch; a larger associative delta folds distributed.
+  Without one, the serial projections collect their rows whole and the
+  associative ones fold distributed.
+
+Every collect reaches pandas through PySpark's own Arrow-to-pandas
+column converters (:func:`_event_frame`). The pull path records the
+store version (:meth:`EventStore.version`, the stat stamp the read plan
+is memoized on) each read was taken at, and a projection whose version
+is unchanged is not read for: a pull after an unchanged store runs no
+Spark job. A resume point is the higher of ``last_event`` and the
+order_id the last store read covered, so a projection whose stream gets
+no new events does not hold the read's lower bound at its old
+``last_event``.
 """
 
 from __future__ import annotations
@@ -75,6 +87,7 @@ from typing import Any, Callable
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import _create_converter_to_pandas
 
 from photon_spark.events import ALL_STREAMS, EventStore
 
@@ -249,8 +262,12 @@ class ProjectionEngine:
     def fold_dataframe(cls, reducer: "Reducer", df: DataFrame,
                        initial_value: Any = None,
                        name: str = "adhoc") -> Projection:
-        """Fold an arbitrary ordered DataFrame through a reducer without an
-        EventStore (ad-hoc / driver-contract use). Returns the descriptor."""
+        """Fold a DataFrame through a reducer, in order_id order, without
+        an EventStore (ad-hoc / driver-contract use). Returns the
+        descriptor; ValueError when ``df`` has no ``order_id`` column."""
+        if "order_id" not in df.columns:
+            raise ValueError("fold_dataframe folds in order_id order: the "
+                             "frame needs an order_id column")
         engine = cls(store=None)
         proj = Projection(projection_name=name, reducer=reducer,
                           initial_value=initial_value,
@@ -303,17 +320,15 @@ class ProjectionEngine:
         return None
 
     # ---------------------------------------------------------------- fold
-    def advance(self, name: str, emit_states: bool = False) -> Projection:
+    def advance(self, name: str) -> Projection:
         """Fold all events newer than the projection's resume point.
 
         The one-projection case of :meth:`_fold_df`. Returns the updated
         descriptor; a native or associative reducer that raises re-raises
-        here, its projection's state unchanged. With ``emit_states`` the
-        successive state values (the projection's *virtual stream*,
-        streams.clj:182-200) are recorded on ``proj.emitted``.
+        here, its projection's state unchanged.
         """
         proj = self.registry[name]
-        errors = self._fold_df([proj], emit_states=emit_states)
+        errors = self._fold_df([proj])
         if errors:
             raise errors[name]
         return proj
@@ -326,31 +341,27 @@ class ProjectionEngine:
         """
         return self._fold_df(list(self.registry.values()))
 
-    def _fold_df(self, projs: list[Projection], df: DataFrame | None = None,
-                 emit_states: bool = False) -> dict[str, Exception]:
+    def _fold_df(self, projs: list[Projection],
+                 df: DataFrame | None = None) -> dict[str, Exception]:
         """Fold every running projection of ``projs`` from one delta.
 
         ``df`` is the delta when given (a micro-batch, an ad-hoc frame).
         Otherwise the store is read once, from the lowest resume point of
         the projections whose recorded store version is stale; the others
         are skipped, so a store whose version has not moved since the
-        last read costs no Spark job. Each projection folds only the rows
-        of its stream above its resume point, every tier from one collect
-        when the delta fits one Arrow batch (:meth:`_fold_one_batch`);
-        otherwise, the native reducers in one aggregate and the
-        associative and serial ones from a second collect.
+        last read costs no Spark job. The path each tier takes is the
+        rule in this module's docstring.
         → ``{name: error}`` of native and associative reducers that
         raised (a serial reducer's error fails its projection instead).
         """
         with self._fold_lock:
-            return self._fold_locked(projs, df, emit_states)
+            return self._fold_locked(projs, df)
 
-    def _fold_locked(self, projs: list[Projection], df: DataFrame | None,
-                     emit_states: bool) -> dict[str, Exception]:
+    def _fold_locked(self, projs: list[Projection],
+                     df: DataFrame | None) -> dict[str, Exception]:
         projs = [p for p in projs if p.status != "failed"]
-        if emit_states:
-            for p in projs:
-                p.emitted = []  # type: ignore[attr-defined]
+        if not projs:
+            return {}
         version = None
         if df is None:
             if not self.store._exists():
@@ -373,23 +384,19 @@ class ProjectionEngine:
         python = [p for p in projs
                   if not isinstance(p.reducer, NativeReducer)]
         # each projection's rows, as SQL, built once for every path below
-        cols = df.columns
-        where = {p.projection_name: _where(p, cols) for p in projs}
+        where = {p.projection_name: _where(p) for p in projs}
         cap = _arrow_batch_rows(df)
         # the highest order_id the read saw; every projection that folded
         # has read all of its stream up to it, new events or none
-        top = (self._fold_one_batch(native, python, df, where, cap, errors,
-                                    emit_states)
-               if native else None)
+        top = self._fold_one_batch(native, python, df, where, cap, errors)
         if top is None:
             top, counts = 0, None
             if native:
                 top, counts = self._fold_native(native, python, df, where,
-                                                errors, emit_states)
+                                                errors)
             if python:
                 top = max(top, self._fold_python(python, df, where, cap,
-                                                 counts, errors,
-                                                 emit_states))
+                                                 counts, errors))
         if version is not None:
             for p in projs:
                 if p.status != "failed" and p.projection_name not in errors:
@@ -397,33 +404,34 @@ class ProjectionEngine:
                     p.read_version = version
         return errors
 
-    # -- a delta of at most one Arrow batch: one collect ------------------
+    # -- every fold: one collect ------------------------------------------
     def _fold_one_batch(self, native: list[Projection],
                         python: list[Projection], df: DataFrame,
-                        where: dict, cap: int, errors: dict,
-                        emit_states: bool) -> int | None:
-        """Every projection from ONE Arrow collect of at most one Arrow
-        batch (``limit(cap + 1)``): the rows and columns the Python tiers
-        read plus, per projection, its row flag ``when(its rows, 1)`` and,
-        per native reducer, its value ``when(its rows, expr)``, evaluated
-        by Catalyst. The native reducers reduce their values on the
-        driver (:func:`_reduce_native`); the flags count the Python
-        tiers' rows, which then fold from the same frame. ``where`` holds
-        each projection's rows as SQL (:func:`_where`) and ``cap`` the
-        Arrow batch size. A running long sum merged out of the long range
-        is that projection's error (:func:`_merge_native`). → the delta's
-        max order_id or 0; None, with nothing folded, when a native value
-        is not integral or floating, the delta holds more than one Arrow
-        batch, a long sum could leave the long range, the query failed
-        or this PySpark lacks the pandas converter: the aggregate path
-        then runs, and Catalyst decides values, overflow and errors.
+                        where: dict, cap: int, errors: dict) -> int | None:
+        """Every projection from ONE Arrow collect: the rows and columns
+        the Python tiers read plus, per projection, its row flag
+        ``when(its rows, 1)`` and, per native reducer, its value
+        ``when(its rows, expr)``, evaluated by Catalyst. It stops past one
+        Arrow batch (``limit(cap + 1)``) unless every projection is
+        serial. The native reducers reduce their values on the driver
+        (:func:`_reduce_native`); the flags count the Python tiers' rows,
+        which then fold from the same frame. ``where`` holds each
+        projection's rows as SQL (:func:`_where`) and ``cap`` the Arrow
+        batch size. A running long sum merged out of the long range is
+        that projection's error (:func:`_merge_native`). → the delta's
+        max order_id or 0; None, with nothing folded, past one Arrow
+        batch, when a native value is not integral or floating, a long
+        sum could leave the long range, the query failed or a native
+        reducer meets an unbounded Arrow batch (``cap`` 0): the caller's
+        large-delta path then runs, where Catalyst decides native values,
+        overflow and errors.
         """
-        convert = _pandas_converter(df.sparkSession) if python else None
-        if not cap or (python and convert is None):
-            return None
-        cols = df.columns
         projs = native + python
-        events = _collect_columns(python, cols)
+        if native and not cap:
+            return None
+        bound = 0 if all(isinstance(p.reducer, PyReducer)
+                         for p in projs) else cap
+        events = _collect_columns(python, df.columns)
         t0 = time.perf_counter()
         try:
             q = _union_rows(df, projs, where).selectExpr(
@@ -439,12 +447,12 @@ class ProjectionEngine:
                        for i, p in enumerate(native)
                        if p.reducer.kind != "count"):
                 return None
-            table = q.limit(cap + 1).toArrow()
+            table = (q.limit(bound + 1) if bound else q).toArrow()
         except Exception:
-            # the aggregate path evaluates the same expressions and
+            # the large-delta path evaluates the same expressions and
             # reports a failing one against its own projection
             return None
-        if table.num_rows > cap:
+        if bound and table.num_rows > bound:
             return None
         fold_ms = (time.perf_counter() - t0) * 1000.0
         reduced = {}
@@ -458,30 +466,27 @@ class ProjectionEngine:
                 if out is None:
                     return None
                 reduced[i] = n, *out
-        pdf = (_event_frame(table.select(events),
-                            [schema[c] for c in events], convert)
-               if python else None)
-        oid = table.column("order_id") if "order_id" in cols else None
+        oid = table.column("order_id")
         for i, (n, value, weight) in reduced.items():
-            mx = (pc.max(pc.filter(oid, pc.is_valid(table.column(f"__c{i}"))))
-                  .as_py() if oid is not None else None)
+            mx = pc.max(pc.filter(oid, pc.is_valid(table.column(f"__c{i}"))))
             try:
-                _advance_native(native[i], n, value, weight, mx, fold_ms,
-                                emit_states, df.sparkSession)
+                _advance_native(native[i], n, value, weight, mx.as_py(),
+                                fold_ms, df.sparkSession)
             except OverflowError as exc:
                 errors[native[i].projection_name] = exc
         if python:
+            pdf = _by_order_id(_event_frame(
+                table.select(events), [schema[c] for c in events],
+                _pandas_converter(df.sparkSession)))
             counts = {p.projection_name: table.num_rows
                       - table.column(f"__c{j}").null_count
                       for j, p in enumerate(python, len(native))}
-            self._fold_python(python, df, where, cap, counts, errors,
-                              emit_states, pdf)
-        return (pc.max(oid).as_py() or 0) if oid is not None else 0
+            self._fold_python(python, df, where, cap, counts, errors, pdf)
+        return pc.max(oid).as_py() or 0
 
-    # -- tier 1: one Catalyst aggregate ----------------------------------
+    # -- tier 1, past one Arrow batch: one Catalyst aggregate -------------
     def _fold_native(self, projs: list[Projection], others: list[Projection],
-                     df: DataFrame, where: dict, errors: dict,
-                     emit_states: bool):
+                     df: DataFrame, where: dict, errors: dict):
         """Every native reducer in ONE aggregate, no Python per event.
 
         Each reducer reads ``when(its stream AND order_id > its resume
@@ -495,12 +500,10 @@ class ProjectionEngine:
         so the failure stays with its own projection, as does a running
         long sum merged out of the long range (:func:`_merge_native`).
         """
-        has_oid = "order_id" in df.columns
         try:
-            aggs = ["max(order_id) AS top"] if has_oid else []
+            aggs = ["max(order_id) AS top"]
             for i, p in enumerate(projs):
-                aggs += _native_aggs(p.reducer, i, where[p.projection_name],
-                                     has_oid)
+                aggs += _native_aggs(p.reducer, i, where[p.projection_name])
             aggs += [f"count({_only(where[p.projection_name], '1')}) AS c{j}"
                      for j, p in enumerate(others)]
             t0 = time.perf_counter()
@@ -511,78 +514,68 @@ class ProjectionEngine:
                 errors[projs[0].projection_name] = exc
             else:
                 for p in projs:
-                    self._fold_native([p], [], df, where, errors,
-                                      emit_states)
+                    self._fold_native([p], [], df, where, errors)
             return 0, None
         for i, p in enumerate(projs):
             if row[f"n{i}"]:
                 try:
                     _advance_native(p, row[f"n{i}"], row[f"v{i}"],
-                                    row.get(f"w{i}"), row.get(f"mx{i}"),
-                                    fold_ms, emit_states, df.sparkSession)
+                                    row.get(f"w{i}"), row[f"mx{i}"],
+                                    fold_ms, df.sparkSession)
                 except OverflowError as exc:
                     errors[p.projection_name] = exc
-        return (row.get("top") or 0,
+        return (row["top"] or 0,
                 {p.projection_name: row[f"c{j}"]
                  for j, p in enumerate(others)})
 
     # -- tiers 2 and 3: folds on the driver -------------------------------
     def _fold_python(self, projs: list[Projection], df: DataFrame,
                      where: dict, cap: int, counts: dict | None,
-                     errors: dict, emit_states: bool, pdf=None) -> int:
-        """Associative and serial projections from ONE Arrow collect of
-        the union of the rows and columns they read; each projection then
-        folds its own rows on the driver. An associative delta above one
-        Arrow batch folds distributed instead, so no associative
-        projection puts more than one Arrow batch on the driver.
+                     errors: dict, pdf=None) -> int:
+        """Associative and serial projections, each folding its own rows
+        on the driver from ONE collect of the union of the rows and
+        columns they read, or, for an associative projection above one
+        Arrow batch, distributed, so no associative projection puts more
+        than one Arrow batch on the driver.
 
-        With row ``counts`` (the native aggregate's, or the flags of
-        :meth:`_fold_one_batch`, which passes its collected ``pdf``), the
-        collect takes every serial delta whole and each associative one
-        of at most one Arrow batch, and skips projections with no rows.
-        Without them it stops past one Arrow batch (``limit(cap + 1)``),
-        unless it serves serial folds only, which need their whole delta
-        anyway, so no limit adds a discarded collect; past one batch, the
-        serial folds collect their own rows whole. → the max order_id of
-        the collected rows, 0 when none. ``where`` holds each projection's
-        rows as SQL and ``cap`` the Arrow batch size, both from the caller.
+        ``pdf`` is that collect when :meth:`_fold_one_batch` took it,
+        with its flags' row ``counts``. Otherwise row ``counts`` (the
+        native aggregate's) put every serial delta whole and each
+        associative one of at most one Arrow batch into the collect;
+        without counts, the serial deltas are collected whole and the
+        associative ones fold distributed. Counts skip projections with
+        no rows. → the max order_id of the collected rows, 0 when none.
+        ``where`` holds each projection's rows as SQL and ``cap`` the
+        Arrow batch size, both from the caller.
         """
         cols = df.columns
         serial = {p.projection_name for p in projs
                   if isinstance(p.reducer, PyReducer)}
         if counts is not None:
             projs = [p for p in projs if counts[p.projection_name]]
-            driver = {p.projection_name for p in projs
-                      if p.projection_name in serial or not cap
-                      or counts[p.projection_name] <= cap}
-            if pdf is None:
-                pdf = _collect(df, projs, driver, where, 0)
-        else:
-            driver = {p.projection_name for p in projs}
-            pdf = _collect(df, projs, driver, where,
-                           0 if driver == serial else cap)
-            if pdf is None:
-                driver = serial
-                pdf = _collect(df, projs, driver, where, 0)
+        driver = {p.projection_name for p in projs
+                  if p.projection_name in serial
+                  or (counts is not None
+                      and (not cap or counts[p.projection_name] <= cap))}
+        if pdf is None:
+            pdf = _collect(df, projs, driver, where)
         for p in projs:
             name = p.projection_name
             if name in serial:
                 rows = _own_rows(pdf, p, cols)
-                self._fold_serial(p, rows, cap or max(len(rows), 1),
-                                  emit_states)
+                self._fold_serial(p, rows, cap or max(len(rows), 1))
                 continue
             delta = _own_rows(pdf, p, cols) if name in driver else (
                 df if where[name] is None else df.where(where[name]))
             try:
-                self._fold_associative(p, delta, emit_states)
+                self._fold_associative(p, delta)
             except Exception as exc:
                 errors[name] = exc
-        if pdf is None or not len(pdf) or "order_id" not in pdf.columns:
+        if pdf is None or not len(pdf):
             return 0
         return int(pdf["order_id"].max())
 
-    def _fold_serial(self, proj: Projection, pdf, chunk: int,
-                     emit_states: bool = False) -> Projection:
+    def _fold_serial(self, proj: Projection, pdf, chunk: int) -> Projection:
         """Tier 3: ordered fold of the collected, sorted delta ``pdf`` in
         ``chunk``-row slices, so the per-slice dict conversion stays
         bounded. The delta itself is held in driver memory — the same
@@ -590,7 +583,6 @@ class ProjectionEngine:
         order ends in one place.
         """
         reducer: PyReducer = proj.reducer  # type: ignore[assignment]
-        emitted = [] if emit_states else None
         state = proj.current_value
         for start in range(0, len(pdf), chunk):
             recs = pdf.iloc[start:start + chunk].to_dict("records")
@@ -607,25 +599,17 @@ class ProjectionEngine:
                     # keeps the last good state queryable on failure).
                     proj.processed += i
                     if i:
-                        proj.last_event = recs[i - 1].get("order_id") \
-                            or proj.last_event
+                        proj.last_event = recs[i - 1]["order_id"]
                     proj.current_value = state
-                    if emitted is not None:
-                        proj.emitted = emitted  # type: ignore[attr-defined]
                     return proj
-                if emitted is not None:
-                    emitted.append(state)
             proj.record_fold(len(recs), (time.perf_counter() - t0) * 1000.0,
                              state)
-            proj.last_event = recs[-1].get("order_id") or proj.last_event
+            proj.last_event = recs[-1]["order_id"]
         proj.current_value = state
         proj.touch_global_time()
-        if emitted is not None:
-            proj.emitted = emitted  # type: ignore[attr-defined]
         return proj
 
-    def _fold_associative(self, proj: Projection, delta,
-                          emit_states: bool = False) -> Projection:
+    def _fold_associative(self, proj: Projection, delta) -> Projection:
         """Tier 2: fold the delta into partials and merge them, in
         order_id order, into the current value. A collected (pandas)
         delta folds on the driver as a single partial; a DataFrame delta
@@ -639,14 +623,11 @@ class ProjectionEngine:
                  else reducer.zero)
         for p in parts:
             state = reducer.merge(state, p["state"])
-        before = proj.processed
         proj.record_fold(sum(p["n"] for p in parts),
                          sum(p["ms"] for p in parts), state)
         proj.last_event = max([proj.last_event, *(p["mx"] for p in parts)])
         proj.current_value = state
         proj.touch_global_time()
-        if emit_states and proj.processed != before:
-            proj.emitted = [state]  # type: ignore[attr-defined]
         return proj
 
 
@@ -655,12 +636,11 @@ def _resume(proj: Projection) -> int:
     return max(proj.last_event, proj.scanned)
 
 
-def _bounds(proj: Projection, columns: list[str]) -> tuple[str | None, int]:
+def _bounds(proj: Projection) -> tuple[str | None, int]:
     """(stream to keep or None, order_id to fold above or 0) of
-    ``proj``'s rows in a frame with ``columns``."""
-    stream = (proj.stream_name if proj.stream_name != ALL_STREAMS
-              and "stream_name" in columns else None)
-    return stream, (_resume(proj) if "order_id" in columns else 0)
+    ``proj``'s rows."""
+    stream = proj.stream_name if proj.stream_name != ALL_STREAMS else None
+    return stream, _resume(proj)
 
 
 def _sql_string(value: str) -> str:
@@ -669,11 +649,11 @@ def _sql_string(value: str) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _where(proj: Projection, columns: list[str]) -> str | None:
+def _where(proj: Projection) -> str | None:
     """``proj``'s rows as a SQL predicate; None keeps every row. One
     SQL string is one py4j call wherever it is used, where a Column
     expression costs a call per operator."""
-    stream, resume = _bounds(proj, columns)
+    stream, resume = _bounds(proj)
     conds = ([f"stream_name = {_sql_string(stream)}"]
              if stream is not None else []) \
         + ([f"order_id > {resume}"] if resume else [])
@@ -695,35 +675,27 @@ def _union_rows(df: DataFrame, projs: list[Projection], where: dict):
 
 
 def _collect(df: DataFrame, projs: list[Projection], names: set,
-             where: dict, cap: int):
+             where: dict):
     """Arrow collect of the union of the rows (``where`` by name) and
     columns of the projections of ``projs`` named in ``names``, as
-    pandas sorted by order_id (plan order without one); None when it
-    holds more than ``cap`` rows (0: no bound) or no projection is
-    named."""
+    pandas sorted by order_id; None when no projection is named."""
     projs = [p for p in projs if p.projection_name in names]
     if not projs:
         return None
     q = _union_rows(df, projs, where).select(
         *_collect_columns(projs, df.columns))
-    pdf = (q.limit(cap + 1) if cap else q).toPandas()
-    if cap and len(pdf) > cap:
-        return None
-    return _by_order_id(pdf)
+    return _by_order_id(_event_frame(q.toArrow(), q.schema.fields,
+                                     _pandas_converter(df.sparkSession)))
 
 
 def _pandas_converter(session):
     """``field`` → PySpark's converter of an Arrow column of that Spark
-    field to pandas, set up as ``DataFrame.toPandas`` sets it up, so a
-    ``toArrow`` collect reaches the folds as a ``toPandas`` one does;
-    None when this PySpark lacks that private API."""
-    try:
-        from pyspark.sql.pandas.types import _create_converter_to_pandas
-        jconf = session._jconf
-        mode = jconf.pandasStructHandlingMode()
-        tz = jconf.sessionLocalTimeZone()
-    except (ImportError, AttributeError):
-        return None
+    field to pandas, set up as PySpark's own pandas collect sets it up,
+    so a ``toArrow`` collect reaches the folds with the same values and
+    types."""
+    jconf = session._jconf
+    mode = jconf.pandasStructHandlingMode()
+    tz = jconf.sessionLocalTimeZone()
     return lambda f: _create_converter_to_pandas(
         f.dataType, f.nullable, timezone=tz,
         struct_in_pandas="dict" if mode == "legacy" else mode,
@@ -733,26 +705,24 @@ def _pandas_converter(session):
 def _event_frame(table, fields: list, convert):
     """The Arrow collect ``table`` (columns typed by the Spark ``fields``)
     as pandas, each column converted by ``convert(field)``
-    (:func:`_pandas_converter`), sorted by order_id."""
+    (:func:`_pandas_converter`)."""
     import pandas as pd
 
     raw = table.rename_columns([f"c{i}" for i in range(len(fields))]) \
         .to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
-    return _by_order_id(pd.DataFrame(
+    return pd.DataFrame(
         {f.name: convert(f)(raw[f"c{i}"]) for i, f in enumerate(fields)},
-        index=raw.index))
+        index=raw.index)
 
 
 def _by_order_id(pdf):
-    """``pdf`` stably sorted by order_id, when it has one."""
-    if "order_id" in pdf.columns:
-        pdf = pdf.sort_values("order_id", kind="stable", ignore_index=True)
-    return pdf
+    """``pdf`` stably sorted by order_id."""
+    return pdf.sort_values("order_id", kind="stable", ignore_index=True)
 
 
 def _own_rows(pdf, proj: Projection, columns: list[str]):
     """``proj``'s rows and columns of the collected union ``pdf``."""
-    stream, resume = _bounds(proj, columns)
+    stream, resume = _bounds(proj)
     if stream is not None:
         pdf = pdf[pdf["stream_name"] == stream]
     if resume:
@@ -767,30 +737,28 @@ def _reads(proj: Projection, columns: list[str]) -> list[str]:
     hint = getattr(proj.reducer, "columns", None)
     if hint is None:
         return list(columns)
-    return list(dict.fromkeys(
-        [*hint, *(["order_id"] if "order_id" in columns else [])]))
+    return list(dict.fromkeys([*hint, "order_id"]))
 
 
 def _collect_columns(projs: list[Projection], columns: list[str]) -> list[str]:
     """The union of the columns ``projs`` read, plus the ones that pick
     each projection's rows on the driver."""
-    keys = ["order_id"] if "order_id" in columns else []
-    if any(_bounds(p, columns)[0] is not None for p in projs):
+    keys = ["order_id"]
+    if any(_bounds(p)[0] is not None for p in projs):
         keys.append("stream_name")
     want = {c for p in projs for c in _reads(p, columns)} | set(keys)
     return [c for c in columns if c in want]
 
 
-def _native_aggs(reducer: NativeReducer, i: int, where: str | None,
-                 has_oid: bool) -> list[str]:
+def _native_aggs(reducer: NativeReducer, i: int,
+                 where: str | None) -> list[str]:
     """The aggregate columns, as SQL, of native reducer number ``i`` over
     the rows ``where`` keeps: ``n{i}`` rows, ``v{i}`` value, ``mx{i}``
     max order_id, and for avg ``w{i}``, its non-NULL weight."""
     val = _only(where, "1" if reducer.kind == "count" else reducer.expr)
     out = [f"count({_only(where, '1')}) AS n{i}",
-           f"{reducer.kind}({val}) AS v{i}"]
-    if has_oid:
-        out.append(f"max({_only(where, 'order_id')}) AS mx{i}")
+           f"{reducer.kind}({val}) AS v{i}",
+           f"max({_only(where, 'order_id')}) AS mx{i}"]
     if reducer.kind == "avg":
         out.append(f"count({val}) AS w{i}")
     return out
@@ -799,7 +767,9 @@ def _native_aggs(reducer: NativeReducer, i: int, where: str | None,
 def _merge_native(proj: Projection, n: int, value: Any, weight: Any,
                   session) -> None:
     """Merge a delta's native aggregate (``n`` rows, ``value``, avg's
-    non-NULL ``weight``) into ``proj``'s running value.
+    non-NULL ``weight``) into ``proj``'s running value: the first delta
+    takes ``value``, count and sum add, min and max compare, and avg
+    weights by the non-NULL counts.
 
     A merged count or integral sum outside the long range is what
     Catalyst's own sum would meet folding the same events from zero:
@@ -808,40 +778,42 @@ def _merge_native(proj: Projection, n: int, value: Any, weight: Any,
     the sum wraps as a long does."""
     prev = proj.current_value
     kind = proj.reducer.kind  # type: ignore[union-attr]
-    if kind != "avg":
-        merged = _combine_native(kind, prev, value, proj.processed, n)
-        if type(merged) is int and not -_LONG <= merged < _LONG:
-            if session.conf.get("spark.sql.ansi.enabled",
-                                "true").lower() == "true":
-                raise OverflowError(
-                    f"[ARITHMETIC_OVERFLOW] long overflow: the running "
-                    f"{kind} of projection {proj.projection_name!r} "
-                    f"leaves the long range")
-            merged = (merged + _LONG) % (2 * _LONG) - _LONG
-        proj.current_value = merged
+    if kind == "avg":
+        if weight:
+            prev_w = proj.native_weight
+            proj.current_value = (value if prev is None or prev_w == 0 else
+                                  (prev * prev_w + value * weight)
+                                  / (prev_w + weight))
+            proj.native_weight = prev_w + weight
         return
-    if weight:
-        prev_w = proj.native_weight
-        proj.current_value = (value if prev is None or prev_w == 0 else
-                              (prev * prev_w + value * weight)
-                              / (prev_w + weight))
-        proj.native_weight = prev_w + weight
+    if prev is None or proj.processed == 0:
+        merged = value
+    elif value is None:
+        merged = prev
+    elif kind in ("count", "sum"):
+        merged = prev + value
+    else:
+        merged = (min if kind == "min" else max)(prev, value)
+    if type(merged) is int and not -_LONG <= merged < _LONG:
+        if session.conf.get("spark.sql.ansi.enabled",
+                            "true").lower() == "true":
+            raise OverflowError(
+                f"[ARITHMETIC_OVERFLOW] long overflow: the running "
+                f"{kind} of projection {proj.projection_name!r} "
+                f"leaves the long range")
+        merged = (merged + _LONG) % (2 * _LONG) - _LONG
+    proj.current_value = merged
 
 
 def _advance_native(proj: Projection, n: int, value: Any, weight: Any,
-                    mx: int | None, fold_ms: float, emit_states: bool,
-                    session) -> None:
+                    mx: int, fold_ms: float, session) -> None:
     """Fold a delta's native aggregate (``n`` > 0 rows, ``value``, avg's
     ``weight``, max order_id ``mx``) into ``proj`` with its metrics;
     OverflowError, ``proj`` unchanged, as :func:`_merge_native` raises."""
     _merge_native(proj, n, value, weight, session)
     proj.record_fold(n, fold_ms, proj.current_value)
-    proj.last_event = mx or proj.last_event
+    proj.last_event = mx
     proj.touch_global_time()
-    if emit_states:
-        # per-event states only exist on the serial tier; the native
-        # tier's virtual stream is per-BATCH (one state per fold call)
-        proj.emitted = [proj.current_value]  # type: ignore[attr-defined]
 
 
 _NUMERIC = (T.IntegralType, T.FloatType, T.DoubleType)
@@ -885,16 +857,16 @@ def _arrow_batch_rows(df: DataFrame) -> int:
 def _ordered_fold(fold, zero):
     """→ ``run(batches)``: fold pandas ``batches`` (already in order_id
     order) from ``zero`` → (state, first order_id, last order_id, events,
-    fold ms); order ids are 0 without an order_id column. The driver path
-    and the executors' partition fold both run it, so the fold sees the
-    same event dicts on either path. Nested, so cloudpickle ships it by
-    value and executors need not import this package."""
+    fold ms). The driver path and the executors' partition fold both run
+    it, so the fold sees the same event dicts on either path. Nested, so
+    cloudpickle ships it by value and executors need not import this
+    package."""
     def run(batches):
         state, lo, mx, n = zero, None, 0, 0
         t0 = time.perf_counter()
         for pdf in batches:
             for rec in pdf.to_dict("records"):
-                oid = rec.get("order_id", 0)
+                oid = rec["order_id"]
                 if lo is None:
                     lo = oid
                 mx = oid
@@ -925,34 +897,14 @@ def _fold_partials_distributed(reducer: AssociativeReducer,
                                 "ms": [ms], "blob": [pickle.dumps(state)]})
 
     # Range-partition so each partition is a contiguous, sorted order_id
-    # span → partials merge left-to-right correctly. No order_id (the
-    # fold_dataframe ad-hoc contract): preserve the plan's own order in
-    # one partition.
-    if "order_id" in df.columns:
-        df = (df.repartitionByRange("order_id")
-                .sortWithinPartitions("order_id"))
-    else:
-        df = df.coalesce(1)
-    rows = (df.mapInPandas(
-                fold_partition,
-                schema="lo long, mx long, n long, ms double, blob binary")
+    # span → partials merge left-to-right correctly.
+    rows = (df.repartitionByRange("order_id")
+              .sortWithinPartitions("order_id")
+              .mapInPandas(
+                  fold_partition,
+                  schema="lo long, mx long, n long, ms double, blob binary")
               .collect())
     rows.sort(key=lambda r: r["lo"])
     return [{"n": r["n"], "mx": r["mx"], "ms": r["ms"],
              "state": pickle.loads(r["blob"])} for r in rows]
 
-
-def _combine_native(kind: str, prev: Any, new: Any, prev_n: int, new_n: int) -> Any:
-    """Merge a fresh native-aggregate value into the running projection value
-    (incremental advance across batches)."""
-    if prev is None or prev_n == 0:
-        return new
-    if new is None:
-        return prev
-    if kind in ("count", "sum"):
-        return prev + new
-    if kind == "avg":  # pragma: no cover - handled NULL-aware in _merge_native
-        raise AssertionError("avg merges via proj.native_weight")
-    if kind == "min":
-        return min(prev, new)
-    return max(prev, new)

@@ -22,17 +22,8 @@ order_id and the file source processes files in arrival order, taking all
 new files per trigger.
 
 Scale notes: each micro-batch is one delta of
-``ProjectionEngine._fold_df``, the same fold the pull path runs. A batch
-of at most one Arrow batch is one collect: Catalyst evaluates each native
-reducer's value per row and the driver reduces it (integral and floating
-values), and the associative and serial reducers fold on the driver from
-the same frame — one Spark job. Above one Arrow batch that collect is
-discarded, and a native reducer over other values skips it: all native
-reducers run in one Catalyst aggregate (distributed, no Python), the
-serial reducers fold from a second collect, and an associative share
-above one Arrow batch folds distributed. The driver holds the collected
-batch (photon is likewise serial per projection, parallel across
-projections, streams.clj:410-420).
+``ProjectionEngine._fold_df``, the same fold the pull path runs, by the
+path rule of the ``photon_spark.projections.engine`` module docstring.
 """
 
 from __future__ import annotations
@@ -59,28 +50,8 @@ class StreamingProjectionRunner:
 
     def __init__(self, engine: ProjectionEngine, checkpoint_dir: str | None = None,
                  state_path: str | None = None):
-        # resume correctness depends on single-writer order_id monotony:
-        # _apply_batch filters `order_id > proj.last_event`, which is
-        # only exact when files arrive in order_id order. A multi-writer
-        # store interleaves writers' files in wall-clock order, so a
-        # later file can carry LOWER order_ids — those would be silently
-        # skipped. The check consults the store's durable _multi_writer
-        # marker (EventStore.ever_multi_writer), not just this handle's
-        # n_writers: opening a fresh default single-writer handle on a
-        # store that EVER ingested multi-writer must not bypass it.
-        store = getattr(engine, "store", None)
-        multi = (store.ever_multi_writer()
-                 if hasattr(store, "ever_multi_writer")
-                 else getattr(store, "n_writers", 1) > 1)
-        if multi:
-            raise ValueError(
-                "StreamingProjectionRunner requires a store that has "
-                "only ever seen single-writer ingest: the resume filter "
-                "order_id > last_event assumes files arrive in order_id "
-                "order, which multi-writer ingest does not guarantee — "
-                "this store carries the _multi_writer marker (or this "
-                "handle has n_writers > 1)")
         self.engine = engine
+        self._require_single_writer()
         self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
             prefix="photon_spark_ckpt_")
         self.batches = 0
@@ -89,6 +60,29 @@ class StreamingProjectionRunner:
         #: successive states as a stream endpoint, streams.clj:182-200,
         #: muon.clj:91-103). None disables persistence.
         self.state_path = state_path
+
+    def _require_single_writer(self) -> None:
+        """Refuse a store that has ever seen multi-writer ingest.
+
+        Resume correctness depends on single-writer order_id monotony:
+        each projection folds only ``order_id > last_event``, which is
+        exact only when files arrive in order_id order. A multi-writer
+        store interleaves writers' files in wall-clock order, so a later
+        file can carry LOWER order_ids, which would be silently skipped.
+        ``EventStore.ever_multi_writer`` covers this handle's
+        ``n_writers`` and the store's durable marker, so a fresh
+        single-writer handle on such a store is refused too. Checked at
+        construction and again every micro-batch, since a second
+        producer can turn the store multi-writer while the runner is
+        live."""
+        if self.engine.store.ever_multi_writer():
+            raise ValueError(
+                "StreamingProjectionRunner requires a store that has "
+                "only ever seen single-writer ingest: the resume filter "
+                "order_id > last_event assumes files arrive in order_id "
+                "order, which multi-writer ingest does not guarantee — "
+                "this store carries the _multi_writer marker or this "
+                "handle has n_writers > 1")
 
     STATE_SCHEMA = ("batch_id long, projection_name string, "
                     "stream_name string, processed long, last_event long, "
@@ -176,25 +170,11 @@ class StreamingProjectionRunner:
         The batch is the delta of the engine's one fold entry point
         (``ProjectionEngine._fold_df``): each projection folds only the
         rows of its stream above its resume point (no-dup on restart
-        replay), every tier from one collect up to one Arrow batch (the
-        native reducers in one aggregate above it), each tier in
-        order_id order.
+        replay), by the path rule of the engine's module docstring.
         """
         import json
 
-        # re-check the durable multi-writer marker EVERY batch, not just
-        # at construction: a second producer can open the store with
-        # n_writers > 1 while this runner is live, after which ordered
-        # arrival no longer holds — fail the stream loudly instead of
-        # silently skipping lower-order_id files
-        store = getattr(self.engine, "store", None)
-        if hasattr(store, "ever_multi_writer") and store.ever_multi_writer():
-            raise ValueError(
-                "StreamingProjectionRunner: the store gained the "
-                "_multi_writer marker mid-run — order_id-ordered file "
-                "arrival no longer holds, so resume filtering would "
-                "silently drop events; stop multi-writer ingest on this "
-                "store or rebuild projections from a cold replay")
+        self._require_single_writer()
 
         running = list(self.engine.registry.items())
         before = {name: proj.processed for name, proj in running}

@@ -77,14 +77,6 @@ def test_ordered_fold_is_ordered(engine, spark):
     assert seen == sorted(seen) and len(seen) == 50
 
 
-def test_virtual_stream_emission(engine, spark):
-    # streams.clj:182-200 — successive states are emitted as a stream.
-    engine.store.ingest(make_events(spark, 5, stream="s"))
-    engine.register("v", "lambda p, e: p + 1", stream_name="s", initial_value=0)
-    proj = engine.advance("v", emit_states=True)
-    assert proj.emitted == [1, 2, 3, 4, 5]
-
-
 def test_failure_capture(engine, spark):
     # streams.clj:84-97 — error ⇒ failed + last_error, state queryable.
     engine.store.ingest(make_events(spark, 5, stream="s"))
@@ -183,43 +175,50 @@ def test_native_avg_skips_nulls_across_batches(spark, tmp_path):
     assert abs(engine.value("avg_v") - one_shot) < 1e-9
 
 
-def test_emit_states_supported_on_every_tier(spark, tmp_path):
-    """emit_states must not be silently ignored: serial emits per-event,
-    native/associative emit their per-batch state."""
-    import os
-    from photon_spark.events import EventStore
-    from photon_spark.projections.engine import (AssociativeReducer,
-                                                 NativeReducer,
-                                                 ProjectionEngine, PyReducer)
-
-    store = EventStore(spark, os.path.join(str(tmp_path), "ev"))
-    engine = ProjectionEngine(store)
-    rows = [("s", None, None, str(i), None, "{}") for i in range(3)]
-    store.ingest(spark.createDataFrame(
-        rows, "stream_name string, event_type string, service_id string,"
-              " local_id string, schema_tag string, payload string"))
-    engine.register("n", NativeReducer("count"))
-    engine.register("a", AssociativeReducer(
-        fold=lambda st, ev: st + 1, merge=lambda x, y: x + y, zero=0))
-    engine.register("p", PyReducer(fn=lambda st, ev: (st or 0) + 1,
-                                   source="p"))
-    assert engine.advance("n", emit_states=True).emitted == [3]
-    assert engine.advance("a", emit_states=True).emitted == [3]
-    assert engine.advance("p", emit_states=True).emitted == [1, 2, 3]
-
-
-def test_fold_dataframe_associative_without_order_id(spark):
-    """fold_dataframe advertises arbitrary DataFrames; the associative
-    tier must take the same no-order_id fallback as the serial tier."""
-    from photon_spark.projections.engine import (AssociativeReducer,
-                                                 ProjectionEngine)
-
+def test_fold_dataframe_refuses_a_frame_without_order_id(spark):
+    """Every delta carries order_id, the order the fold follows: an
+    ad-hoc frame without one is refused before any fold runs."""
     df = spark.createDataFrame([(i,) for i in range(10)], "v long")
-    proj = ProjectionEngine.fold_dataframe(
-        AssociativeReducer(fold=lambda st, ev: st + ev["v"],
-                           merge=lambda x, y: x + y, zero=0), df)
-    assert proj.current_value == sum(range(10))
-    assert proj.processed == 10
+    for reducer in (AssociativeReducer(fold=lambda st, ev: st + ev["v"],
+                                       merge=lambda x, y: x + y, zero=0),
+                    PyReducer(fn=lambda st, ev: st + ev["v"]),
+                    NativeReducer("sum", "v")):
+        with pytest.raises(ValueError, match="order_id"):
+            ProjectionEngine.fold_dataframe(reducer, df, initial_value=0)
+
+
+def test_event_frame_converts_as_the_pandas_collect_does(spark):
+    """Every fold's collect is ``toArrow`` converted by
+    ``_event_frame``: over every column type an event or an ad-hoc frame
+    carries, each with a NULL, and over an empty frame, it gives what
+    ``DataFrame.toPandas`` gives in values, dtypes and Python types."""
+    import pandas as pd
+
+    q = spark.sql("""
+        SELECT * FROM VALUES
+          (1L, 1, 1.5D, CAST(1.25 AS DECIMAL(10, 2)), 'a', true,
+           DATE'2024-01-02', TIMESTAMP'2024-01-02 03:04:05.123456',
+           named_struct('service_id', 's', 'local_id', 'l',
+                        'relationship_type', 'r'),
+           array(1L, 2L), map('k', 1L)),
+          (CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS DOUBLE),
+           CAST(NULL AS DECIMAL(10, 2)), CAST(NULL AS STRING),
+           CAST(NULL AS BOOLEAN), CAST(NULL AS DATE),
+           CAST(NULL AS TIMESTAMP),
+           CAST(NULL AS STRUCT<service_id: STRING, local_id: STRING,
+                               relationship_type: STRING>),
+           CAST(NULL AS ARRAY<BIGINT>), CAST(NULL AS MAP<STRING, BIGINT>))
+        AS t(l, i, d, dec, s, b, dt, ts, prov, arr, m)""")
+    convert = engine_mod._pandas_converter(spark)
+    for frame in (q, q.limit(0)):
+        got = engine_mod._event_frame(frame.toArrow(), frame.schema.fields,
+                                      convert)
+        want = frame.toPandas()
+        pd.testing.assert_frame_equal(got, want)
+        assert [[type(v) for v in r.values()]
+                for r in got.to_dict("records")] == \
+            [[type(v) for v in r.values()]
+             for r in want.to_dict("records")]
 
 
 _BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -275,13 +274,14 @@ def test_assoc_driver_and_distributed_paths_agree(spark, tmp_path,
     """The one-Arrow-batch driver fold and the range-partitioned
     distributed fold hand the fold the same event dicts (values and
     Python types) in the same order and produce the same value,
-    processed, last_event and emitted — across two incremental advances,
-    so the second merges into a non-zero current value."""
+    processed and last_event, and the same value after each of two
+    incremental advances, so the second merges into a non-zero current
+    value."""
     store = _envelope_store(spark, str(tmp_path / "ev"))
     red = AssociativeReducer(fold=lambda st, ev: st + [ev],
                              merge=lambda a, b: a + b, zero=[])
     caps = {"driver": 10000, "distributed": 2}
-    engines, emitted = {}, {p: [] for p in caps}
+    engines, values = {}, {p: [] for p in caps}
     for path in caps:
         engines[path] = ProjectionEngine(store)
         engines[path].register("a", red, stream_name="s", initial_value=[])
@@ -290,21 +290,21 @@ def test_assoc_driver_and_distributed_paths_agree(spark, tmp_path,
             store.ingest(make_events(spark, 3, stream="s"))
         for path, cap in caps.items():
             with arrow_batch_rows(spark, cap):
-                proj = engines[path].advance("a", emit_states=True)
-            emitted[path].append(proj.emitted)
+                proj = engines[path].advance("a")
+            values[path].append(proj.current_value)
     assert len(distributed_calls) == 2
 
     def outcome(path):
         q = engines[path].projection("a")
         assert q.avg_time > 0.0
-        return emitted[path], q.current_value, q.processed, q.last_event
+        return values[path], q.current_value, q.processed, q.last_event
 
     drv, dist = outcome("driver"), outcome("distributed")
     assert drv == dist
     events = drv[1]
     assert _typed(events) == _typed(dist[1])
     assert len(events) == 12 and drv[2] == 12
-    assert [len(e[0]) for e in drv[0]] == [9, 12]
+    assert [len(v) for v in drv[0]] == [9, 12]
     oids = [ev["order_id"] for ev in events]
     assert oids == sorted(oids) and drv[3] == oids[-1]
     full = next(ev for ev in events if ev["local_id"] == "full")
@@ -347,11 +347,10 @@ def test_serial_fold_orders_many_small_files(engine, spark):
     engine.register("order", "lambda p, e: p + [e['order_id']]",
                     initial_value=[])
     with arrow_batch_rows(spark, 5):
-        proj = engine.advance("order", emit_states=True)
+        proj = engine.advance("order")
     want = [r["order_id"] for r in engine.store.read_cold().collect()]
     assert proj.current_value == want and len(want) == 12
     assert proj.processed == 12 and proj.last_event == want[-1]
-    assert [len(s) for s in proj.emitted] == list(range(1, 13))
 
 
 def test_assoc_fold_failure_leaves_state_unchanged(spark, tmp_path,
