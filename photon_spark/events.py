@@ -25,6 +25,22 @@ rewrite paths run a Spark write job. :meth:`EventStore.ingest_rows` (one
 the driver with no Spark job: one pyarrow file per stream, written under a
 hidden name and renamed into its ``stream_name=`` directory, so a batch
 read or the streaming file source sees the whole file or none of it.
+
+The hot tail. A handle keeps every file it published that way as a tail
+entry: the data dir, the file's path under it, its stream and its rows
+as an Arrow table with ``stream_name``; at most one Arrow batch of rows
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` when the handle was
+opened) in all. The projection engine folds a pull from the tail rows a
+projection's store version lacks, and :meth:`EventStore.event` answers
+from them, with no Spark job and without reading the files back. These
+empty the tail: a Spark :meth:`EventStore.ingest`, a Spark-written
+append (orc, json, csv), every rewrite (delete, expire, compact),
+:meth:`EventStore.clean`, a failed append, and an append that would take
+it past one Arrow batch. A fold uses the tail only where
+:meth:`EventStore.version` shows that this handle's own appends are all
+that changed the store, and a lookup only while the event's file is in
+the live data dir, so another handle's append or rewrite sends every
+reader back to the files.
 """
 
 from __future__ import annotations
@@ -34,6 +50,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +125,32 @@ def _arrow_type(dtype: T.DataType):
                           for f in dtype.fields])
     return {T.StringType(): pa.string(), T.LongType(): pa.int64(),
             T.TimestampType(): pa.timestamp("us", tz="UTC")}[dtype]
+
+
+def _stamp_files(stamp: tuple, prefix: str = "") -> dict | None:
+    """{path under the stamped dir: stat} of every file in a
+    :func:`photon_spark.relations._stamp` directory stamp; directories
+    themselves drop out. None for a stamp that could not be taken."""
+    out = {}
+    for entry in stamp:
+        if not isinstance(entry, tuple):
+            return None
+        name, *rest = entry
+        if len(rest) == 1:
+            sub = _stamp_files(rest[0], f"{prefix}{name}/")
+            if sub is None:
+                return None
+            out.update(sub)
+        else:
+            out[prefix + name] = tuple(rest)
+    return out
+
+
+def _arrow_batch_rows(session) -> int:
+    """Rows per Arrow batch of ``session``; 0 when unlimited."""
+    cap = int(session.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    return max(cap, 0)
 
 
 def coerce_order_bound(from_: int) -> int:
@@ -292,6 +335,11 @@ class EventStore:
         #: independent of cache freshness; only own-monotonicity needs
         #: the own mark.
         self._max_oid: int | None = None
+        #: the hot tail (module docstring): (data dir, file path under
+        #: it, stream, rows) of each file this handle published from the
+        #: driver, replaced whole on every change, never edited in place
+        self._tail: tuple = ()
+        self._tail_cap = _arrow_batch_rows(spark)
 
     def ever_multi_writer(self) -> bool:
         """True if ANY handle ever ingested into this store with
@@ -403,6 +451,7 @@ class EventStore:
         # returns it), the per-partition offsets for the parallel global
         # sequence and the rows whose stream name Spark cannot store —
         # no single-partition window, no double execution.
+        self._tail = ()
         src = df.select(_CLIENT_FIELDS).persist()
         name = F.col("stream_name")
         try:
@@ -526,6 +575,8 @@ class EventStore:
         also moves one file per stream, a listing between two renames
         can see one stream's file without the other's.
         """
+        # taken out while the append runs, so a failed one leaves it empty
+        tail, self._tail = self._tail, ()
         fields = [f for f in EVENT_SCHEMA.fields if f.name != "stream_name"]
         schema = pa.schema([(f.name, _arrow_type(f.dataType))
                             for f in fields])
@@ -539,17 +590,19 @@ class EventStore:
             cols["event_time"] = [now_ms * 1000] * len(recs)
             tables[stream] = pa.Table.from_pydict(cols, schema)
         data_dir = self._data_dir()
-        staged = []
+        staged, entries = [], []
         try:
             for stream, table in tables.items():
-                part = os.path.join(
-                    data_dir, f"stream_name={escape_path_name(stream)}")
-                os.makedirs(part, exist_ok=True)
+                part = f"stream_name={escape_path_name(stream)}"
+                os.makedirs(os.path.join(data_dir, part), exist_ok=True)
                 name = f"part-{uuid.uuid4()}.snappy.parquet"
-                tmp = os.path.join(part, f".{name}.tmp")
-                staged.append((tmp, os.path.join(part, name)))
+                tmp = os.path.join(data_dir, part, f".{name}.tmp")
+                staged.append((tmp, os.path.join(data_dir, part, name)))
                 pq.write_table(table, tmp, compression="snappy",
                                write_statistics=True)
+                entries.append((data_dir, f"{part}/{name}", stream,
+                                table.add_column(0, "stream_name", pa.array(
+                                    [stream] * table.num_rows, pa.string()))))
             for tmp, final in staged:
                 os.replace(tmp, final)
         except BaseException:
@@ -559,10 +612,14 @@ class EventStore:
             # some renames may have published rows: rescan the mark
             self._max_oid = None
             raise
+        tail += tuple(entries)
+        if sum(t.num_rows for *_, t in tail) <= self._tail_cap:
+            self._tail = tail
 
     def _append_spark(self, stamped: list[dict], now_ms: int) -> None:
         """Append stamped rows with one Spark write job (the orc, json
         and csv stores)."""
+        self._tail = ()
         schema = T.StructType(
             [f for f in EVENT_SCHEMA.fields if f.name in _CLIENT_FIELDS]
             + [T.StructField("order_id", T.LongType())])
@@ -590,6 +647,28 @@ class EventStore:
         from photon_spark.relations import _stamp
         data_dir = self._data_dir()
         return data_dir, _stamp(data_dir)
+
+    def _tail_rows(self, since: tuple | None, now: tuple):
+        """The tail's rows in files that version ``now`` shows and version
+        ``since`` does not, as one Arrow table with ``stream_name``: the
+        rows a consumer that has read the store at ``since`` has not yet
+        read at ``now``. None unless both versions name one data dir and
+        agree on every file outside the tail and on every tail file
+        ``since`` shows, i.e. unless only this handle's own appends tell
+        them apart; None too when no tail file is new. No Spark job."""
+        tail = self._tail
+        if since is None or not tail or since[0] != now[0]:
+            return None
+        old, new = _stamp_files(since[1]), _stamp_files(now[1])
+        if old is None or new is None:
+            return None
+        names = {rel for _, rel, _, _ in tail}
+        if (any(rel in old and old[rel] != new.get(rel) for rel in names)
+                or {k: v for k, v in old.items() if k not in names}
+                != {k: v for k, v in new.items() if k not in names}):
+            return None
+        fresh = [t for _, rel, _, t in tail if rel in new and rel not in old]
+        return pa.concat_tables(fresh) if fresh else None
 
     def read_all(self) -> DataFrame:
         if not self._exists():  # empty store reads as an empty relation
@@ -640,11 +719,25 @@ class EventStore:
 
     def event(self, stream_name: str, order_id: int):
         """R4 point lookup → Row or None (streams.clj:322, api.clj:17-18).
-        (stream, order_id) is unique, so a plain collect of the filtered
-        scan is one job, where ``first()`` runs take's incremental scan."""
+        An event of the hot tail whose file is still in the live data dir
+        is the one-row local relation of its tail row, collected with no
+        Spark job (a local relation needs a bounded Arrow batch).
+        Otherwise (stream, order_id) is unique, so a plain collect of the
+        filtered scan is one job, where ``first()`` runs take's
+        incremental scan."""
+        order_id = int(order_id)
+        for data_dir, rel, stream, table in self._tail:
+            if stream != stream_name:
+                continue
+            i = pc.index(table.column("order_id"), order_id).as_py()
+            if i >= 0 and data_dir == self._data_dir() \
+                    and os.path.isfile(os.path.join(data_dir, rel)) \
+                    and _arrow_batch_rows(self.spark):
+                return self.spark.createDataFrame(
+                    table.slice(i, 1), EVENT_SCHEMA).collect()[0]
         rows = (self.read_all()
                 .where((F.col("stream_name") == stream_name)
-                       & (F.col("order_id") == int(order_id)))
+                       & (F.col("order_id") == order_id))
                 .collect())
         return rows[0] if rows else None
 
@@ -666,6 +759,7 @@ class EventStore:
         no data-directory rename anywhere, so the protocol runs
         unchanged on an object store.
         """
+        self._tail = ()
         old_ord, old_name = generations.live(self.path)
         new_name = generations.next_name(old_ord + 1)
         (self._write_opts(
@@ -691,6 +785,7 @@ class EventStore:
         empty generation, then sweep the old one — same rename-free
         commit as :meth:`_rewrite`. Root markers (e.g. the durable
         multi-writer fact) survive, as "ever" semantics require."""
+        self._tail = ()
         if not os.path.isdir(self.path):
             return
         old_ord, old_name = generations.live(self.path)

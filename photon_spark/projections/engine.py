@@ -71,6 +71,16 @@ Spark job. A resume point is the higher of ``last_event`` and the
 order_id the last store read covered, so a projection whose stream gets
 no new events does not hold the read's lower bound at its old
 ``last_event``.
+
+A pull of the store handle's own posts folds from its hot tail (the
+``events`` module docstring) when every stale projection stands at one
+version and the tail holds all that changed since
+(:meth:`EventStore._tail_rows`). The delta is then the local relation of
+those rows: the one-batch collect above is built on the driver, its
+flags and native values evaluated by Catalyst with ``collect()`` and its
+event columns taken from the tail's Arrow table, with no Spark job. A
+tail fold the one-batch path refuses, and every other pull, reads the
+store.
 """
 
 from __future__ import annotations
@@ -84,12 +94,14 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import _create_converter_to_pandas
 
-from photon_spark.events import ALL_STREAMS, EventStore
+from photon_spark.events import (
+    ALL_STREAMS, EVENT_SCHEMA, EventStore, _arrow_batch_rows)
 
 DEFAULT_PROJECTIONS = ("__streams__", "__security-state__")
 
@@ -191,8 +203,10 @@ class Projection:
     #: moves it too, so an idle projection does not hold the next
     #: read's lower bound down
     scanned: int = 0
-    #: EventStore.version() the last store read was taken at; while the
-    #: store's version is unchanged there is nothing new to read
+    #: EventStore.version() the last pull was folded at, from the files
+    #: or from the hot tail; while the store's version is unchanged there
+    #: is nothing new to read, and when it moved by this store handle's
+    #: own posts only, the tail holds what is new
     read_version: tuple | None = None
 
     def touch_global_time(self) -> None:
@@ -362,7 +376,7 @@ class ProjectionEngine:
         projs = [p for p in projs if p.status != "failed"]
         if not projs:
             return {}
-        version = None
+        version = tail = None
         if df is None:
             if not self.store._exists():
                 return {}
@@ -370,25 +384,29 @@ class ProjectionEngine:
             projs = [p for p in projs if p.read_version != version]
             if not projs:
                 return {}
-            df = self.store.read_all()
-            lo = min(_resume(p) for p in projs)
-            streams = {p.stream_name for p in projs}
-            conds = [f"order_id > {lo}"] if lo else []
-            if ALL_STREAMS not in streams:
-                names = ", ".join(map(_sql_string, sorted(streams)))
-                conds.append(f"stream_name IN ({names})")
-            if conds:
-                df = df.where(" AND ".join(conds))
+            cap = _arrow_batch_rows(self.store.spark)
+            since = {p.read_version for p in projs}
+            if len(since) == 1 and cap:
+                tail = self.store._tail_rows(since.pop(), version)
+            df = self._read(projs, tail)
+        else:
+            cap = _arrow_batch_rows(df.sparkSession)
         errors: dict[str, Exception] = {}
         native = [p for p in projs if isinstance(p.reducer, NativeReducer)]
         python = [p for p in projs
                   if not isinstance(p.reducer, NativeReducer)]
         # each projection's rows, as SQL, built once for every path below
         where = {p.projection_name: _where(p) for p in projs}
-        cap = _arrow_batch_rows(df)
         # the highest order_id the read saw; every projection that folded
         # has read all of its stream up to it, new events or none
-        top = self._fold_one_batch(native, python, df, where, cap, errors)
+        top = self._fold_one_batch(native, python, df, where, cap, errors,
+                                   tail)
+        if top is None and tail is not None:
+            # a tail fold the one-batch path refuses is the store's to
+            # decide, overflow and errors included
+            df = self._read(projs)
+            top = self._fold_one_batch(native, python, df, where, cap,
+                                       errors)
         if top is None:
             top, counts = 0, None
             if native:
@@ -404,21 +422,39 @@ class ProjectionEngine:
                     p.read_version = version
         return errors
 
+    def _read(self, projs: list[Projection], tail=None) -> DataFrame:
+        """The store's rows above the lowest resume point of ``projs``, in
+        their streams: read from the files, or, given the hot tail's new
+        rows ``tail`` (:meth:`EventStore._tail_rows`), their local
+        relation."""
+        df = (self.store.read_all() if tail is None else
+              self.store.spark.createDataFrame(tail, EVENT_SCHEMA))
+        lo = min(_resume(p) for p in projs)
+        streams = {p.stream_name for p in projs}
+        conds = [f"order_id > {lo}"] if lo else []
+        if ALL_STREAMS not in streams:
+            names = ", ".join(map(_sql_string, sorted(streams)))
+            conds.append(f"stream_name IN ({names})")
+        return df.where(" AND ".join(conds)) if conds else df
+
     # -- every fold: one collect ------------------------------------------
     def _fold_one_batch(self, native: list[Projection],
                         python: list[Projection], df: DataFrame,
-                        where: dict, cap: int, errors: dict) -> int | None:
+                        where: dict, cap: int, errors: dict,
+                        tail=None) -> int | None:
         """Every projection from ONE Arrow collect: the rows and columns
         the Python tiers read plus, per projection, its row flag
         ``when(its rows, 1)`` and, per native reducer, its value
         ``when(its rows, expr)``, evaluated by Catalyst. It stops past one
         Arrow batch (``limit(cap + 1)``) unless every projection is
-        serial. The native reducers reduce their values on the driver
-        (:func:`_reduce_native`); the flags count the Python tiers' rows,
-        which then fold from the same frame. ``where`` holds each
-        projection's rows as SQL (:func:`_where`) and ``cap`` the Arrow
-        batch size. A running long sum merged out of the long range is
-        that projection's error (:func:`_merge_native`). → the delta's
+        serial. When ``df`` is the local relation of the hot tail's rows
+        ``tail``, the collect is built on the driver with no Spark job
+        (:func:`_tail_table`). The native reducers reduce their values on
+        the driver (:func:`_reduce_native`); the flags count the Python
+        tiers' rows, which then fold from the same frame. ``where`` holds
+        each projection's rows as SQL (:func:`_where`) and ``cap`` the
+        Arrow batch size. A running long sum merged out of the long range
+        is that projection's error (:func:`_merge_native`). → the delta's
         max order_id or 0; None, with nothing folded, past one Arrow
         batch, when a native value is not integral or floating, a long
         sum could leave the long range, the query failed or a native
@@ -447,7 +483,8 @@ class ProjectionEngine:
                        for i, p in enumerate(native)
                        if p.reducer.kind != "count"):
                 return None
-            table = (q.limit(bound + 1) if bound else q).toArrow()
+            table = (_to_arrow(q.limit(bound + 1) if bound else q)
+                     if tail is None else _tail_table(q, tail, events))
         except Exception:
             # the large-delta path evaluates the same expressions and
             # reports a failing one against its own projection
@@ -684,8 +721,53 @@ def _collect(df: DataFrame, projs: list[Projection], names: set,
         return None
     q = _union_rows(df, projs, where).select(
         *_collect_columns(projs, df.columns))
-    return _by_order_id(_event_frame(q.toArrow(), q.schema.fields,
+    return _by_order_id(_event_frame(_to_arrow(q), q.schema.fields,
                                      _pandas_converter(df.sparkSession)))
+
+
+def _nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field, element and value below it nullable."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                           True, f.metadata)
+                             for f in dtype.fields])
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(dtype.keyType, _nullable(dtype.valueType), True)
+    return dtype
+
+
+def _to_arrow(df: DataFrame):
+    """``df.toArrow()`` with the fields below its columns made nullable
+    first: ``toArrow`` casts to the declared schema and refuses a NULL
+    struct whose fields are declared non-nullable, which ``toPandas``
+    reads. A frame with no such field (a store read, a micro-batch) is
+    collected as it is."""
+    schema = T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                         f.nullable, f.metadata)
+                           for f in df.schema.fields])
+    return (df if schema == df.schema else df.to(schema)).toArrow()
+
+
+def _tail_table(q: DataFrame, tail, events: list[str]):
+    """The Arrow table ``q`` would collect, for ``q`` over the local
+    relation of the hot tail's rows ``tail``, in order_id order, with no
+    Spark job: Catalyst evaluates ``q``'s other columns (row flags,
+    native values) by ``collect()``, which runs none over a local
+    relation, and the ``events`` columns are ``tail``'s own, so the
+    Python tiers see what :func:`_event_frame` makes of a store read."""
+    computed = [c for c in q.columns if c not in events]
+    rows = sorted(q.select("order_id", *computed).collect(),
+                  key=lambda r: r[0])
+    kept = tail.filter(pc.is_in(
+        tail.column("order_id"),
+        value_set=pa.array([r[0] for r in rows], pa.int64())))
+    kept = kept.sort_by("order_id").select(events)
+    return pa.Table.from_arrays(
+        [*kept.columns, *(pa.array([r[k] for r in rows])
+                          for k in range(1, len(computed) + 1))],
+        names=[*events, *computed])
 
 
 def _pandas_converter(session):
@@ -845,13 +927,6 @@ def _reduce_native(kind: str, col, dtype):
         # under this bound no partial sum, in any order, leaves the range
         return (sum(vals), None) if sum(map(abs, vals)) < _LONG else None
     return functools.reduce(operator.add, vals, 0.0), None
-
-
-def _arrow_batch_rows(df: DataFrame) -> int:
-    """Rows per Arrow batch of ``df``'s session; 0 when unlimited."""
-    cap = int(df.sparkSession.conf.get(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
-    return max(cap, 0)
 
 
 def _ordered_fold(fold, zero):

@@ -220,11 +220,13 @@ def test_collects_stay_bounded_and_add_no_discarded_collect(
     own rows, so the driver never holds a large associative delta. With
     a native reducer in the fold, one collect of at most one batch
     serves every tier; past one batch it is discarded and the native
-    aggregate's row counts pick the serial rows without any limit."""
+    aggregate's row counts pick the serial rows without any limit. The
+    engine reads through a second handle, so no fold takes the posting
+    handle's hot tail."""
     store = EventStore(spark, str(tmp_path / "ev"))
     _post(store, "a", list(range(6)))
     _post(store, "sec", [0])
-    engine = ProjectionEngine(store)
+    engine = ProjectionEngine(EventStore(spark, store.path))
 
     def counter():
         return AssociativeReducer(fold=lambda st, ev: st + 1,
@@ -266,8 +268,10 @@ def test_collects_stay_bounded_and_add_no_discarded_collect(
 
 
 def test_one_event_fold_is_one_job(spark, tmp_path):
-    """A one-event delta folds every tier from one collect: a pull and a
-    live micro-batch each submit exactly one Spark job."""
+    """A one-event delta folds every tier from one collect: a live
+    micro-batch and a pull from the files each submit exactly one Spark
+    job, and a pull of the handle's own post, folded from its hot tail,
+    none."""
     store = EventStore(spark, str(tmp_path / "ev"))
     _post(store, "a", [1, 2, 3])
     pull, live = ProjectionEngine(store), ProjectionEngine(store)
@@ -293,21 +297,34 @@ def test_one_event_fold_is_one_job(spark, tmp_path):
     assert pull.advance_all() == {}
     runner.run(available_now=True, timeout_sec=120)
     _post(store, "b", [4])
-    assert _jobs(spark, pull.advance_all) == ({}, 1)
+    assert _jobs(spark, pull.advance_all) == ({}, 0)
     batch_jobs.clear()
     runner.run(available_now=True, timeout_sec=120)
     assert batch_jobs == [1]
     assert _outcome(pull) == _outcome(live)
     assert [pull.value(n) for n in ("sum", "count_a", "assoc")] == [10, 3, 4]
+    # another handle's post is read from the files
+    _post(EventStore(spark, store.path), "b", [5])
+    assert _jobs(spark, pull.advance_all) == ({}, 1)
+    runner.run(available_now=True, timeout_sec=120)
+    assert _outcome(pull) == _outcome(live)
 
 
 def test_get_event_is_one_job(spark, tmp_path):
-    api = PhotonAPI(spark, os.path.join(str(tmp_path), "events"))
+    """A lookup of the handle's own post answers from its hot tail with
+    no Spark job; one of another handle's post reads the files in one."""
+    path = os.path.join(str(tmp_path), "events")
+    api = PhotonAPI(spark, path)
     api.post_event("s", payload='{"k": 1}', local_id="x")
     oid = api.store.max_order_id()
     ev, jobs = _jobs(spark, api.get_event, "s", oid)
-    assert ev["local_id"] == "x" and jobs == 1
+    assert ev["local_id"] == "x" and jobs == 0
     assert api.get_event("s", oid + 1) is None
+    other = EventStore(spark, path)
+    other.ingest_rows([{"stream_name": "s", "local_id": "y"}])
+    ev, jobs = _jobs(spark, api.get_event, "s", other.max_order_id())
+    assert ev["local_id"] == "y" and jobs == 1
+    assert ev == other.event("s", other.max_order_id())
 
 
 def test_live_runner_and_pulls_on_one_engine_fold_once(spark, tmp_path):

@@ -187,6 +187,22 @@ def test_fold_dataframe_refuses_a_frame_without_order_id(spark):
             ProjectionEngine.fold_dataframe(reducer, df, initial_value=0)
 
 
+def test_fold_reads_a_null_struct_with_non_nullable_fields(spark):
+    """``toArrow`` refuses a NULL struct whose fields are declared
+    non-nullable; the fold collects such a frame on every Python tier
+    and folds what ``toPandas`` reads."""
+    df = spark.sql("SELECT * FROM VALUES (1L, named_struct('a', 's')), "
+                   "(2L, NULL) AS t(order_id, prov)")
+    want = [r["prov"] for r in df.toPandas().to_dict("records")]
+    assert want == [{"a": "s"}, None]
+    serial = PyReducer(fn=lambda st, ev: st + [ev["prov"]])
+    assoc = AssociativeReducer(fold=lambda st, ev: st + [ev["prov"]],
+                               merge=lambda a, b: a + b, zero=[])
+    for reducer in (serial, assoc):
+        proj = ProjectionEngine.fold_dataframe(reducer, df, initial_value=[])
+        assert proj.current_value == want and proj.processed == 2
+
+
 def test_event_frame_converts_as_the_pandas_collect_does(spark):
     """Every fold's collect is ``toArrow`` converted by
     ``_event_frame``: over every column type an event or an ad-hoc frame
